@@ -158,19 +158,6 @@ def geoip_dim(spark: SparkSession, n_blocks: int = 256) -> DataFrame:
     )
 
 
-def service_dim(spark: SparkSession) -> DataFrame:
-    """Service-ID dimension keyed by endpoint path prefix."""
-    rows = [
-        ("/api", "api", "backend"),
-        ("/static", "cdn-static", "edge"),
-        ("/images", "cdn-images", "edge"),
-        ("/checkout", "commerce", "backend"),
-        ("/login", "auth", "backend"),
-        ("/", "web", "frontend"),
-    ]
-    return spark.createDataFrame(rows, "path_prefix string, service string, tier string")
-
-
 # ------------------------------------------------------------ sf sweeps
 #
 # Schema- and distribution-matched twins of the driver's TESTDATA tables

@@ -11,7 +11,7 @@ Routing keys per the north star: status class, service, language.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import status_class
@@ -59,8 +59,3 @@ def routed_counts(df: DataFrame, kind: str = "status_class") -> DataFrame:
         .groupBy("route")
         .agg(F.count(F.lit(1)).alias("rows"))
     )
-
-
-def read_sink(spark: SparkSession, base_path: str, route: str, fmt: str = "parquet") -> DataFrame:
-    """Read one routed sink back (partition pruning on ``route``)."""
-    return spark.read.format(fmt).load(base_path).filter(F.col("route") == route)

@@ -118,22 +118,6 @@ def sessionize_chunked(
     )
 
 
-def salted_sum(df: DataFrame, key: str, value: str, buckets: int = 16,
-               out: str = "total") -> DataFrame:
-    """Two-phase salted sum — same shape as salted_counts for a measure."""
-    partial = (
-        df.select(F.col(key).alias("_k"), F.col(value).alias("_v"),
-                  salt_col(buckets).alias("_salt"))
-        .groupBy("_k", "_salt")
-        .agg(F.sum("_v").alias("_s"))
-    )
-    return (
-        partial.groupBy("_k")
-        .agg(F.sum("_s").alias(out))
-        .withColumnRenamed("_k", key)
-    )
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

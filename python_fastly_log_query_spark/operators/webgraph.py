@@ -129,17 +129,6 @@ def pagerank(
 # ------------------------------------------------------------- SQL twin
 
 
-def extract_outlinks_sql(html_expr: str, src_expr: str,
-                         from_clause: str) -> str:
-    """DuckDB CTE body mirroring :func:`extract_outlinks` (the oracle
-    builds pages as VARCHAR, so no decode)."""
-    return f"""
-  SELECT {src_expr} AS src, unnest(regexp_extract_all({html_expr},
-         '<a href="https://([^/"]+)/', 1)) AS dst
-  FROM {from_clause}
-"""
-
-
 def pagerank_sql(
     iterations: int,
     edges_cte: str = "edges",

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import oracle_corpus as oc
-from .datagen import geoip_dim as _unused_geoip  # noqa: F401 (engine dim builder)
 from .functions.columns import agent_type, ip_to_long, round_half_away, status_class
 from .operators import aggregates as agg
 from .operators.enrich import enrich_geoip

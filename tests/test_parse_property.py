@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import importlib.util
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from test_parse_parity import FIELDS, _norm, ref_record
@@ -21,7 +22,10 @@ def _load_ref():
     return mod
 
 
-REF = _load_ref()
+try:
+    REF = _load_ref()
+except FileNotFoundError:
+    pytest.skip("reference repo not available", allow_module_level=True)
 
 # Mix of near-valid structured lines and pure noise.
 line_fragments = st.sampled_from(

@@ -6,9 +6,11 @@ import gzip
 import json
 import os
 import shutil
+import threading
 import time
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from python_fastly_log_query_spark.operators import multimodal as MM
@@ -34,15 +36,19 @@ def _write_logs(d: str, n_files: int = 2, lines_per: int = 6) -> None:
             f.write("\n".join(lines) + "\n")
 
 
+def _parsed(spark, tmp_path):
+    from python_fastly_log_query_spark.sources.logfiles import read_log_lines
+
+    d = str(tmp_path / "logs")
+    _write_logs(d)
+    return parse_logs(read_log_lines(spark, d, line_numbers=False), "text")
+
+
 # ---------------------------------------------------------------- report
 
 
 def test_full_report_tree(spark, tmp_path):
-    d = str(tmp_path / "logs")
-    _write_logs(d)
-    from python_fastly_log_query_spark.sources.logfiles import read_log_lines
-
-    parsed = parse_logs(read_log_lines(spark, d, line_numbers=False), "text")
+    parsed = _parsed(spark, tmp_path)
     rep = R.full_report(parsed)
     assert set(rep) == {
         "traffic", "errors", "performance", "user_agents",
@@ -59,12 +65,70 @@ def test_full_report_tree(spark, tmp_path):
     json.dumps(rep, default=str)
 
 
-def test_endpoint_and_daily_reports(spark, tmp_path):
-    d = str(tmp_path / "logs")
-    _write_logs(d)
-    from python_fastly_log_query_spark.sources.logfiles import read_log_lines
+def test_full_report_equals_inline_branches(spark, tmp_path):
+    """The concurrent report is byte-identical, key order included, to
+    the branch functions run one leaf at a time."""
+    parsed = _parsed(spark, tmp_path)
+    inline = {
+        name: getattr(R, name)(parsed)
+        for name in ("traffic", "errors", "performance", "user_agents",
+                     "query_patterns", "slowness_investigation")
+    }
+    assert json.dumps(R.full_report(parsed), default=str) == json.dumps(inline, default=str)
 
-    parsed = parse_logs(read_log_lines(spark, d, line_numbers=False), "text")
+
+def test_full_report_jobs_stay_in_callers_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    parsed = _parsed(spark, tmp_path)
+    before = set(tracker.getJobIdsForGroup("g")), set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "report")
+    try:
+        R.full_report(parsed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus; let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    grouped = set(tracker.getJobIdsForGroup("g")) - before[0]
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - before[1]
+    n_leaves = sum(len(leaves(parsed)) for _, leaves in R._BRANCHES)
+    assert len(grouped) >= n_leaves
+    assert not ungrouped
+
+
+def test_full_report_joins_its_threads(spark, tmp_path):
+    parsed = _parsed(spark, tmp_path)
+    baseline = threading.active_count()
+    R.full_report(parsed)
+    R.full_report(parsed)
+    assert threading.active_count() == baseline
+
+
+def test_full_report_raises_when_a_leaf_fails(spark, tmp_path, monkeypatch):
+    def boom(df):
+        raise RuntimeError("leaf failed")
+
+    parsed = _parsed(spark, tmp_path)
+    monkeypatch.setattr(R.A, "peak_minute", boom)
+    with pytest.raises(RuntimeError, match="leaf failed"):
+        R.full_report(parsed)
+    assert parsed.storageLevel == StorageLevel.NONE
+
+
+def test_full_report_keeps_the_callers_cache(spark, tmp_path):
+    parsed = _parsed(spark, tmp_path)
+    R.full_report(parsed)
+    assert parsed.storageLevel == StorageLevel.NONE
+    parsed.cache()
+    try:
+        R.full_report(parsed)
+        assert parsed.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    finally:
+        parsed.unpersist()
+
+
+def test_endpoint_and_daily_reports(spark, tmp_path):
+    parsed = _parsed(spark, tmp_path)
     ep = R.endpoint_report(parsed, "/api/search")
     assert ep["endpoint"] == "/api/search"
     assert sum(ep["status_codes"].values()) == 12
