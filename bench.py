@@ -90,8 +90,6 @@ STANDALONE_QUERIES = [
     "pricing_summary",
     "segment_revenue_topn",
     "ip_sessions",
-    "ip_sessions_chunked",
-    "ip_sessions_native",
     "streaming_routed_counts",
     "asof_config_rollup",
     "streaming_neardup_ingest",
@@ -241,8 +239,6 @@ SF1_REUSE = [
     "pricing_summary",
     "segment_revenue_topn",
     "ip_sessions",
-    "ip_sessions_chunked",
-    "ip_sessions_native",
     "simhash_neardup_pairs_w64",
     "asof_config_rollup",
     "dup_ngram_stats",
@@ -486,30 +482,6 @@ def main() -> None:
 
     timings["pipeline"] = timed2(spark, flagship)
 
-    # same flagship through the JVM-only one-pass regex parser (no Python
-    # workers) — the clean-input scale path
-    def flagship_native():
-        from python_fastly_log_query_spark.operators.parse import parse_logs_native
-        from python_fastly_log_query_spark.plans.partitioning import spread
-
-        parsed = parse_logs_native(
-            spread(oc.log_lines(spark, SF_DIR)), "text",
-            columns=["timestamp", "ip_address", "status_code", "response_size"],
-        )
-        enriched = enrich_geoip(parsed, geoip_dim(spark, 256))
-        routed = enriched.withColumn("route", status_class(F.col("status_code")))
-        (
-            routed.groupBy(
-                F.date_trunc("hour", "timestamp").alias("hour"), "route", "country"
-            )
-            .agg(F.count(F.lit(1)).alias("requests"), F.sum("response_size").alias("bytes"))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-
-    timings["pipeline_native"] = timed2(spark, flagship_native)
-
     # ---- shared parsed frame (the §3.2 single-scan architecture) ----
     parsed = oc.parsed_events(spark, SF_DIR).cache()
 
@@ -623,13 +595,6 @@ def main() -> None:
     ann_recall = _ann_recall(spark)
     print(json.dumps({"metric": "ann_recall_at_10", **ann_recall}), file=sys.stderr)
 
-    # ---- sessionization under synthetic hot-key skew (VERDICT r3 item 4):
-    # 10% of all events rewritten onto ONE ip; the plain window serializes
-    # that key into a single task, the chunked sessionizer bounds the
-    # largest partition at (key, 4h-chunk) granularity
-    skew = _skew_profile(spark, parsed, timings)
-    print(json.dumps({"metric": "sessionize_skew_profile", **skew}), file=sys.stderr)
-
     release_persists()
     parsed.unpersist()
 
@@ -647,12 +612,10 @@ def main() -> None:
         "sf": SF_DIR,
         "rows": n_rows,
         "rows_per_sec_pipeline": round(n_rows / timings["pipeline"], 1),
-        "rows_per_sec_pipeline_native": round(n_rows / timings["pipeline_native"], 1),
         "ann_recall_at_10": ann_recall,
         "stream_dedup_max_state_rows": max(
             (b.get("state_rows") or 0 for b in state_batches), default=None
         ),
-        "sessionize_skew": skew,
     }
     if sf1 is not None:
         out["sf1"] = sf1
@@ -725,64 +688,6 @@ def _ann_recall(spark) -> dict:
         out[label] = round(sum(vals) / len(vals), 3)
     out["panel"] = panel
     return out
-
-
-def _skew_profile(spark, parsed, timings: dict) -> dict:
-    from pyspark.sql.window import Window
-
-    from python_fastly_log_query_spark.operators.skew import sessionize_chunked
-
-    skewed = parsed.select(
-        F.when(F.col("event_id") % 10 == 0, F.lit("10.0.0.1"))
-        .otherwise(F.col("ip_address"))
-        .alias("ip_address"),
-        "timestamp",
-        "event_id",
-    )
-
-    def plain():
-        w = Window.partitionBy("ip_address").orderBy("timestamp", "event_id")
-        prev = F.lag("timestamp").over(w)
-        new_s = F.when(
-            prev.isNull()
-            | (F.col("timestamp").cast("long") - prev.cast("long") > 1800),
-            1,
-        ).otherwise(0)
-        ws = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        (
-            skewed.withColumn("_n", new_s)
-            .withColumn("sid", F.sum("_n").over(ws))
-            .groupBy("ip_address", "sid")
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .write.mode("overwrite").format("noop").save()
-        )
-
-    def chunked():
-        sessionize_chunked(skewed, "ip_address", "timestamp", "event_id").write.mode(
-            "overwrite"
-        ).format("noop").save()
-
-    timings["sessionize_skew_plain"] = timed2(spark, plain)
-    timings["sessionize_skew_chunked"] = timed2(spark, chunked)
-    # max rows any single sessionize partition holds — the straggler bound
-    plain_max = (
-        skewed.groupBy("ip_address").count().agg(F.max("count")).collect()[0][0]
-    )
-    chunk_max = (
-        skewed.groupBy(
-            "ip_address", F.floor(F.col("timestamp").cast("long") / (4 * 3600))
-        )
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    return {
-        "hot_key_pct": 10,
-        "plain_sec": timings["sessionize_skew_plain"],
-        "chunked_sec": timings["sessionize_skew_chunked"],
-        "max_window_partition_rows_plain": plain_max,
-        "max_window_partition_rows_chunked": chunk_max,
-    }
 
 
 def _sf1_section(spark, qmap, base: dict, flagship) -> dict:
@@ -903,7 +808,7 @@ DECADES_QUERIES = (
     "editdist_neardup_auto",        # decade-sized block prefix: pairs bounded per block
     "span_dedup_stats",             # C4-style global span dedup
     "host_pagerank",                # iterative graph (fixed iterations)
-    "ip_sessions_chunked",          # skew-hardened sessionization
+    "ip_sessions",                  # gap sessionization (session_window)
     "shard_plan_stats",             # distributed prefix sum
     "embedding_ivf_pq_rerank_topk", # ANN: cell-pruned ADC + exact re-rank
     "training_corpus_stats",        # composed dedup->lang->quality pipeline

@@ -221,7 +221,7 @@ def cmd_package(args) -> int:
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="python_fastly_log_query_spark.cli")
-    p.add_argument("--master", default=None, help="spark master (default: local[$SPARK_GRAFT_CPUS])")
+    p.add_argument("--master", default=None, help="spark master (default: local[$SPARK_GRAFT_CPUS], else one slot per usable core)")
     sub = p.add_subparsers(dest="cmd", required=True)
 
     pp = sub.add_parser("parse", help="parse raw log files (incremental, resumable)")

@@ -19,10 +19,9 @@ needs at 100 TB (both sides co-partitioned by key; dimension size only
 adds rows to the sort, never multiplies facts).  Ties (fact ts ==
 valid_from) take the NEW version, matching DuckDB/kdb ASOF semantics —
 dimension rows sort before fact rows at equal timestamps.  Skew note:
-a hot key serializes its window partition exactly like sessionization;
-the same (key, time-chunk) chunk-and-stitch hardening applies (see
-operators/skew.py) — carry the last dimension row of each chunk into
-the next chunk's head instead of stitching session ids.
+a hot key serializes its window partition; :func:`asof_join_chunked`
+partitions by (key, time chunk) instead and carries the dimension
+version active at each chunk start into that chunk's head.
 
 Reference analog: the service/geo enrichment of
 /root/reference/src/analyze/analytics.py (static lookups), lifted to
@@ -109,8 +108,7 @@ def asof_join_chunked(
     """Skew-hardened :func:`asof_join`: windows partition by
     ``(key, time chunk)`` instead of raw key, so one hot key (a NAT IP, a
     mega-host) fans out across its chunks instead of serializing into a
-    single window task — the same chunk-and-stitch hardening as the
-    chunked sessionizer (operators/skew.py), with a simpler stitch:
+    single window task, with one stitch step:
 
     1. carry-in: for every (key, chunk) present in FACTS, the dimension
        version active at the chunk START — computed by running the plain

@@ -22,10 +22,10 @@ Scale shape:
   max_by plans as SortAggregate: partition-local sorts by group key,
   never a global sort).
 - :func:`scd2_history` is one shuffle + one sort (a ``lead`` window per
-  key ordered by seq).  A hot key serializes its window partition
-  exactly like sessionization; the ``(key, time-chunk)`` chunk-and-stitch
-  hardening of operators/skew.py applies unchanged (carry each chunk's
-  last change into the next chunk's head).
+  key ordered by seq).  A hot key serializes its window partition; the
+  ``(key, time-chunk)`` chunk-and-stitch hardening of
+  operators/asof.py:asof_join_chunked applies unchanged (carry each
+  chunk's last change into the next chunk's head).
 
 Determinism contract: ``seq`` must be UNIQUE per key (a changelog
 position — Kafka offset, LSN, event id).  With unique seq both the

@@ -342,12 +342,16 @@ def parse_log_line(line: str) -> dict | None:
     Returns a dict shaped like the reference's ``parse_log_line`` output:
     absent fields are missing keys, except explicit-None cases.
     """
-    pdf = parse_lines_pdf(pd.Series([line]))
-    if not bool(pdf["_keep"].iloc[0]):
+    return row_record(parse_lines_pdf(pd.Series([line])).iloc[0])
+
+
+def row_record(row: pd.Series) -> dict | None:
+    """One ``parse_lines_pdf`` row in :func:`parse_log_line`'s shape (None
+    for a dropped blank line)."""
+    if not bool(row["_keep"]):
         return None
-    row = pdf.iloc[0].drop(labels=["_keep"])
     out = {}
-    for k, v in row.items():
+    for k, v in row.drop(labels=["_keep"]).items():
         if v is None or (isinstance(v, float) and np.isnan(v)) or v is pd.NaT or v is pd.NA:
             continue
         if k in ("priority", "pid", "status_code", "response_size"):
@@ -356,113 +360,3 @@ def parse_log_line(line: str) -> dict | None:
             v = v.isoformat()
         out[k] = v
     return out
-
-
-# ---------------------------------------------------------------- native
-
-
-def parse_logs_native(
-    df: DataFrame,
-    line_col: str = "text",
-    passthrough: list[str] | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """JVM-only fast-path parse: the SAME 16-group anchored pattern as the
-    pandas parser, evaluated in ONE ``regexp_replace`` pass per row inside
-    whole-stage codegen — no Python workers, no Arrow transfer.
-
-    Honest current numbers (r6; the original r2 measurement claimed +36%
-    and rotted — VERDICT r5 #1): every committed r5/r6 bench record shows
-    this path ~20-25% SLOWER than the pandas pipeline on the pruned
-    flagship at sf0.1/local[32] (r6: 63.7k vs 83.4k rows/s).  The Java
-    regex engine pays the full 16-group match per row in one thread-local
-    pass, while the pandas stage amortizes per-row overhead across Arrow
-    batches; the JVM path's value proposition is OPERATIONAL — zero
-    Python workers to size/monitor at 10^12 rows and no
-    executor.pyspark.memory dimension — not throughput at this row width.
-    Both rates are recorded per bench run (rows_per_sec_pipeline vs
-    rows_per_sec_pipeline_native in BENCH/latest.json), so the
-    relationship can no longer drift silently.
-
-    Contract vs :func:`parse_logs` (tested in test_parse_parity):
-    WELL-FORMED lines parse identically, field for field, including the
-    path/query split and last-dup-wins bare-key-dropped param map
-    (``str_to_map`` + ``map_filter`` under ``mapKeyDedupPolicy=LAST_WIN``
-    reproduce the reference's dict semantics exactly).  MALFORMED lines
-    yield all-null fields instead of the reference's per-field fallback
-    probes — byte parity on the messy tail is what the pandas parser is
-    for.  On clean pipelines this keeps the 100 TB parse stage entirely
-    JVM-side (nothing crosses the Python boundary), and Catalyst prunes
-    unused extracts on its own — no manual ``columns=`` needed (still
-    accepted for symmetry).
-    """
-    passthrough = passthrough or []
-    out_cols = (
-        [c for c in PARSED_ORDER if c in set(columns)] if columns is not None
-        else PARSED_ORDER
-    )
-    pat = r"\A" + _FULL_LINE
-    line = F.trim(F.col(line_col))
-
-    # ONE regex pass per row: regexp_replace rewrites the (at most one,
-    # \A-anchored) match into all 16 groups joined by a \x01 sentinel,
-    # plus a trailing sentinel so any unconsumed suffix after the match
-    # lands in its own slot (the pandas parser is a prefix match too).
-    # Per-field regexp_extract calls would re-run the full pattern per
-    # field — measured 33k rows/s vs 63k for this shape at sf0.1.
-    # ADVICE r2 guard: a raw line containing \x01 itself could fake the
-    # slot count, so such lines are explicitly treated as non-matching
-    # (all-null fields — the documented malformed-line behavior; route
-    # untrusted/messy inputs through the pandas parser for fallbacks).
-    sep = "\x01"
-    repl = sep.join("$%d" % i for i in range(1, len(_LINE_SEGMENTS) + 1)) + sep
-    parts = F.split(F.regexp_replace(line, pat, repl), sep)
-    matched = (F.size(parts) == len(_LINE_SEGMENTS) + 1) & (
-        F.instr(line, sep) == 0
-    )
-
-    def grp(field: str) -> F.Column:
-        idx = [f for f, _ in _LINE_SEGMENTS].index(field)
-        return F.when(matched, F.nullif(F.element_at(parts, idx + 1), F.lit("")))
-
-    fp = grp("_full_path")
-    qpos = F.instr(fp, "?")
-    qs = F.when(qpos > 0, fp.substr(qpos + F.lit(1), F.length(fp)))
-    empty_map = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-    params = F.when(
-        fp.isNotNull(),
-        F.when(
-            qs.isNotNull() & (qs != ""),
-            F.map_filter(
-                F.str_to_map(qs, F.lit("&"), F.lit("=")),
-                lambda k, v: v.isNotNull(),
-            ),
-        ).otherwise(empty_map),
-    )
-
-    exprs: dict[str, F.Column] = {"raw_line": line}
-    for field, _ in _LINE_SEGMENTS:
-        if field == "_full_path":
-            continue
-        c = grp(field)
-        if field in ("priority", "pid", "status_code"):
-            c = c.try_cast("int")
-        elif field == "response_size":
-            c = c.try_cast("long")
-        elif field == "timestamp":
-            c = F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'"))
-        exprs[field] = c
-    exprs["path"] = F.when(qpos > 0, fp.substr(F.lit(1), qpos - 1)).otherwise(fp)
-    exprs["query_string"] = qs
-    exprs["query_params"] = params
-
-    out = [
-        (exprs[c] if c == "raw_line" else F.when(matched, exprs[c])).alias(c)
-        for c in out_cols
-    ]
-    return (
-        df.filter(F.trim(F.col(line_col)) != "")
-        .select(*passthrough, *out)
-    )

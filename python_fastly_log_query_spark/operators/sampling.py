@@ -166,9 +166,7 @@ def capped_per_group(
     domain = 10% of the corpus) serializes its window partition; at that
     profile pre-filter with an approximate per-group threshold first
     (keep rows whose priority < ~k/n_g quantile, computed from a
-    count aggregate) so the exact window only sees ~k rows per group —
-    the same chunk-then-refine shape as the skew-hardened sessionizer
-    (operators/skew.py)."""
+    count aggregate) so the exact window only sees ~k rows per group."""
     pri = F.md5(F.concat(F.lit(salt + "-"), F.col(id_col).cast("string")))
     w = Window.partitionBy(group).orderBy(pri.asc(), F.col(id_col).asc())
     return (

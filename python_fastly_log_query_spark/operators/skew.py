@@ -46,78 +46,6 @@ def salted_counts(df: DataFrame, key: str | Column, buckets: int = 16,
     )
 
 
-def sessionize_chunked(
-    df: DataFrame,
-    ip_col: str = "ip_address",
-    ts_col: str = "timestamp",
-    id_col: str = "event_id",
-    gap_sec: int = 30 * 60,
-    chunk_sec: int = 4 * 3600,
-) -> DataFrame:
-    """Skew-hardened gap sessionization (VERDICT r3 item 4): identical
-    result to the plain per-key window sessionizer, with the per-event
-    work partitioned by ``(key, time chunk)`` instead of raw key — a hot
-    NAT/proxy IP with 10^8 events no longer serializes into one window
-    task (plain windows partition by the raw key and AQE cannot split a
-    window partition).
-
-    Two passes:
-
-    1. **per-event, bounded partitions** — events sessionize with
-       lag+cumsum INSIDE ``(ip, floor(ts / chunk_sec))``; the largest
-       partition is one key's events in one chunk (rate x chunk_sec),
-       tunable via ``chunk_sec``, regardless of how hot the key is.
-    2. **stitch, session-sized data** — local sessions collapse to one
-       summary row each; consecutive summaries (per ip, ordered by
-       (chunk, local session)) merge iff the next session starts within
-       ``gap_sec`` of the previous end.  Within a chunk consecutive local
-       sessions are > gap apart BY CONSTRUCTION, so this uniform rule
-       exactly reconstructs the unchunked sessions; only chunk-boundary
-       sessions can actually merge.  The stitch window is per ip over
-       SESSION SUMMARIES, bounded by observed_time/gap + #chunks — for a
-       30-day horizon that is <= ~1600 rows per key even for a key with
-       10^9 events, so the residual per-key window is structurally tiny.
-
-    Returns one row per merged session:
-    ``(ip_col, session_id, hits, span_sec)`` — the same per-session frame
-    the plain sessionizer rolls up, proven equal on data AND on a skewed
-    profile by tests/test_aggregate_parity.py.
-    """
-    from pyspark.sql.window import Window
-
-    ep = F.col(ts_col).cast("long")
-    chunked = df.select(
-        ip_col, ts_col, id_col, F.floor(ep / chunk_sec).alias("_chunk")
-    )
-    w1 = Window.partitionBy(ip_col, "_chunk").orderBy(ts_col, id_col)
-    prev = F.lag(ts_col).over(w1)
-    new_local = F.when(
-        prev.isNull() | (ep - prev.cast("long") > gap_sec), 1
-    ).otherwise(0)
-    w1s = w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = chunked.withColumn("_new", new_local).withColumn(
-        "_lsid", F.sum("_new").over(w1s)
-    )
-    summaries = local.groupBy(ip_col, "_chunk", "_lsid").agg(
-        F.count(F.lit(1)).alias("_hits"),
-        F.min(ep).alias("_min_ep"),
-        F.max(ep).alias("_max_ep"),
-    )
-    w2 = Window.partitionBy(ip_col).orderBy("_chunk", "_lsid")
-    prev_end = F.lag("_max_ep").over(w2)
-    new_global = F.when(
-        prev_end.isNull() | (F.col("_min_ep") - prev_end > gap_sec), 1
-    ).otherwise(0)
-    w2s = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    stitched = summaries.withColumn("_newg", new_global).withColumn(
-        "session_id", F.sum("_newg").over(w2s)
-    )
-    return stitched.groupBy(ip_col, "session_id").agg(
-        F.sum("_hits").alias("hits"),
-        (F.max("_max_ep") - F.min("_min_ep")).alias("span_sec"),
-    )
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,
@@ -134,7 +62,7 @@ def salted_join(
     registered oracle's check.
 
     This is the join-side lever next to :func:`salted_counts` (the agg
-    side) and :func:`sessionize_chunked` (the window side).  AQE's
+    side).  AQE's
     skew-join split covers most cases at runtime; the explicit salt is
     for the cases AQE can't rescue: a single key too large for ANY
     un-split partition, pre-AQE static plans, or when the right side's

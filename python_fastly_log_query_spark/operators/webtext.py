@@ -823,12 +823,11 @@ def crawl_waves(
 
     Plan: ONE shuffle + sort (a row_number window per host; the wave is
     pure arithmetic on the rank).  A host with 10^8 queued URLs
-    serializes its window partition exactly like sessionization — for
-    that profile rank within ``(host, salt_bucket)`` with a
-    ``per_wave div n_salt`` budget per bucket: the politeness bound
-    still holds per wave and the partition is 1/n_salt the size (the
-    operators/skew.py chunk pattern; priority ordering then holds
-    within buckets rather than globally).
+    serializes its window partition — for that profile rank within
+    ``(host, salt_bucket)`` with a ``per_wave div n_salt`` budget per
+    bucket: the politeness bound still holds per wave and the partition
+    is 1/n_salt the size (priority ordering then holds within buckets
+    rather than globally).
     """
     order = order_by if order_by is not None else [F.asc(id_col)]
     w = Window.partitionBy(host_col).orderBy(*order)

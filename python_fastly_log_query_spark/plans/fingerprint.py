@@ -87,7 +87,7 @@ FINGERPRINT_QUERIES = (
     "banded_auto_t08",            # numpy-keyed LSH + planted aug (r5)
     "semdedup_scaled",            # grown-cells within-cell self-join (r5)
     "knn_graph_scaled",           # trained multi-probe equi-join (r5)
-    "ip_sessions",                # gap sessionization windows
+    "ip_sessions",                # gap sessionization: one session_window aggregate
     "asof_config_rollup",         # as-of join: must stay BNLJ-free
     "spatial_region_counts",      # grid equi-join: must stay BNLJ-free
     "shard_plan_stats",           # two-phase prefix sum, no global sort

@@ -96,36 +96,6 @@ def parse_roundtrip(spark, sf):
     )
 
 
-@register(
-    "parse_roundtrip_native",
-    L
-    + """
-SELECT event_id, strftime(ts_s, '%Y-%m-%d %H:%M:%S') AS ts, priority,
-       cache_server, process, pid, ip_address, http_method, path,
-       query_string, status_code, response_size, user_agent, cache_status
-FROM logs
-""",
-)
-def parse_roundtrip_native(spark, sf):
-    """Same oracle as parse_roundtrip, but through the JVM-only one-pass
-    regexp parser (operators/parse.py:parse_logs_native) — driver-level
-    proof the codegen fast path is value-identical to the pandas
-    byte-parity parser on well-formed input."""
-    from .operators.parse import parse_logs_native
-    from .plans.partitioning import spread
-
-    p = parse_logs_native(
-        spread(oc.log_lines(spark, sf)), "text", passthrough=["event_id"]
-    )
-    return p.select(
-        "event_id",
-        F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "priority", "cache_server", "process", "pid", "ip_address",
-        "http_method", "path", "query_string", "status_code",
-        "response_size", "user_agent", "cache_status",
-    )
-
-
 # ================================================================ traffic
 
 
@@ -2093,35 +2063,20 @@ ORDER BY sessions DESC, ip_address ASC LIMIT 20
 )
 def q_ip_sessions(spark, sf):
     """Gap-based sessionization (SURVEY §2.8 depth): a new session starts
-    when an IP is idle > 30 minutes — lag + running sum assigns session
-    ids, then two rollups produce per-IP session stats.  At fleet scale
-    both windows and the first rollup share ONE shuffle keyed by
-    ip_address (the window partition key), and the tie-break on event_id
-    makes session assignment deterministic under equal timestamps."""
-    from pyspark.sql.window import Window
+    when an IP is idle > 30 minutes.  Spark's ``session_window``
+    aggregate (streaming/jobs.py:session_rollup, the same operator the
+    streaming twin drains) assigns the sessions in one shuffle on
+    ip_address with map-side partial session merging; the oracle spells
+    the same rule as lag + running sum."""
+    from .streaming.jobs import session_rollup
 
-    p = _parsed(spark, sf)
-    w = Window.partitionBy("ip_address").orderBy("timestamp", "event_id")
-    prev = F.lag("timestamp").over(w)
-    new_session = F.when(
-        prev.isNull()
-        | (F.col("timestamp").cast("long") - prev.cast("long") > 30 * 60),
-        1,
-    ).otherwise(0)
-    ws = (
-        Window.partitionBy("ip_address")
-        .orderBy("timestamp", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sessioned = p.select(
-        "ip_address", "timestamp", "event_id", new_session.alias("new_session")
-    ).withColumn("session_id", F.sum("new_session").over(ws))
-    per_session = sessioned.groupBy("ip_address", "session_id").agg(
-        F.count(F.lit(1)).alias("hits"),
-        (
-            F.max("timestamp").cast("long") - F.min("timestamp").cast("long")
-        ).alias("span_sec"),
-    )
+    return _top_ip_sessions(session_rollup(_parsed(spark, sf)))
+
+
+def _top_ip_sessions(per_session):
+    """Per-IP rollup of a per-session frame ``(ip_address, hits,
+    span_sec)``: session count, longest session in hits and in seconds,
+    top 20 by session count with an ip tie-break."""
     return (
         per_session.groupBy("ip_address")
         .agg(
@@ -2310,31 +2265,6 @@ def q_streaming_dedup_bounded_state(spark, sf):
     return spark.table(name).agg(F.count(F.lit(1)).alias("unique_docs"))
 
 
-@register("ip_sessions_chunked", _REGISTRY["ip_sessions"][1])
-def q_ip_sessions_chunked(spark, sf):
-    """Skew-hardened twin of ``ip_sessions`` (VERDICT r3 item 4): the
-    same gap sessionization, but events sessionize within
-    ``(ip, 4h chunk)`` and chunk-boundary sessions are stitched in a
-    second pass over session summaries (operators/skew.py:
-    sessionize_chunked) — the hot-NAT-IP profile no longer serializes
-    into a single window task.  Shares ip_sessions' oracle: the chunked
-    path must reproduce the plain window result exactly."""
-    from .operators.skew import sessionize_chunked
-
-    p = _parsed(spark, sf)
-    per_session = sessionize_chunked(p, "ip_address", "timestamp", "event_id")
-    return (
-        per_session.groupBy("ip_address")
-        .agg(
-            F.count(F.lit(1)).alias("sessions"),
-            F.max("hits").alias("max_hits"),
-            F.max("span_sec").alias("max_span_sec"),
-        )
-        .orderBy(F.desc("sessions"), F.asc("ip_address"))
-        .limit(20)
-    )
-
-
 @register(
     "embedding_pq_rerank_topk",
     f"""
@@ -2455,48 +2385,6 @@ def q_embedding_ivf_pq_rerank_topk(spark, sf):
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     return ivf_pq_rerank_topk(emb, 0, 10, 200, 8, 4)
-
-
-@register("ip_sessions_native", _REGISTRY["ip_sessions"][1])
-def q_ip_sessions_native(spark, sf):
-    """Sessionization via Spark's NATIVE ``session_window`` operator —
-    the idiomatic engine primitive (one merging-window aggregate, no
-    manual lag+cumsum) — proven equal to the window-function oracle the
-    other two sessionizers share.
-
-    Gap translation: ``session_window`` merges an event into the current
-    session iff event_time < session_end (= last_event + gap, strict
-    <), while the lag rule starts a new session iff diff > 1800 (strict
-    >, i.e. merges diff <= 1800).  Parsed log timestamps are WHOLE
-    seconds, so gap = 1801s makes the two rules identical: merge iff
-    diff < 1801 ⇔ diff <= 1800.  At fleet scale this plan is ONE
-    shuffle on ip_address with map-side partial session merging —
-    fewer passes than the lag+cumsum shape, but the same hot-key
-    serialization as any raw-key partitioning (the chunked variant
-    remains the skew-hardened path)."""
-    p = _parsed(spark, sf)
-    per_session = (
-        p.filter(F.col("ip_address").isNotNull() & F.col("timestamp").isNotNull())
-        .groupBy(
-            F.session_window("timestamp", "1801 seconds").alias("w"), "ip_address"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("hits"),
-            (
-                F.max("timestamp").cast("long") - F.min("timestamp").cast("long")
-            ).alias("span_sec"),
-        )
-    )
-    return (
-        per_session.groupBy("ip_address")
-        .agg(
-            F.count(F.lit(1)).alias("sessions"),
-            F.max("hits").alias("max_hits"),
-            F.max("span_sec").alias("max_span_sec"),
-        )
-        .orderBy(F.desc("sessions"), F.asc("ip_address"))
-        .limit(20)
-    )
 
 
 @register(
@@ -6405,9 +6293,8 @@ def q_salted_join_rollup(spark, sf):
     hot key scattered over 8 salts on the fact side and replicated 8x
     on the other — one straggler task becomes 8 even ones, non-hot keys
     pay nothing.  Completes the skew toolbox: salted_counts (agg),
-    sessionize_chunked (window), salted_join (join); feed hot_keys from
-    key_skew_audit at deploy.  Oracle: the PLAIN join — salting must be
-    row-invisible."""
+    salted_join (join); feed hot_keys from key_skew_audit at deploy.
+    Oracle: the PLAIN join — salting must be row-invisible."""
     from .operators.skew import salted_join
 
     ev = spark.read.parquet(f"{sf}/events.parquet")
@@ -6869,7 +6756,7 @@ def q_cdc_scd2_history(spark, sf):
     validity interval [valid_from, valid_to): valid_to = the key's next
     change (deletes close intervals but emit no version), NULL while
     current (operators/cdc.py:scd2_history — one shuffle + lead window;
-    hot keys take the sessionization chunk-and-stitch hardening).  The
+    hot keys take the as-of join's chunk-and-stitch hardening).  The
     point-in-time lookup side of this table is operators/asof.py.
     Oracle: the same lead window in DuckDB."""
     from .operators.cdc import scd2_history
@@ -6966,9 +6853,8 @@ def q_session_path_transitions(spark, sf):
     render as a flow diagram: per visitor (ip), consecutive request
     pairs (lag over the per-IP timeline, event_id tiebreak for a total
     order), rolled up per (from, to) edge.  One shuffle + sort (the lag
-    window; hot-IP serialization takes the sessionization chunk
-    hardening), then a map-side-combined edge rollup bounded by
-    paths²."""
+    window; a hot IP serializes its window partition), then a
+    map-side-combined edge rollup bounded by paths²."""
     p = _parsed(spark, sf)
     from pyspark.sql import Window
 
@@ -7791,8 +7677,8 @@ def q_streaming_ip_sessions(spark, sf):
     per trigger, forcing genuine cross-batch, out-of-order session
     merges; AvailableNow + complete mode yields the exactly-once final
     state, then a batch summary per IP.  Batch-equality contract: must
-    equal the lag+cumsum DuckDB oracle the three BATCH sessionizers
-    (ip_sessions / _native / _chunked) already share — the same answer,
+    equal the lag+cumsum DuckDB oracle it shares with the batch
+    ``ip_sessions`` (same session_rollup operator) — the same answer,
     now produced incrementally at ingestion.  State at 10^12: one row
     per live session per key; complete mode here is the backfill shape,
     and the production configuration adds a watermark so closed
@@ -7816,17 +7702,7 @@ def q_streaming_ip_sessions(spark, sf):
             session_rollup(parsed), f"{work}/ckpt", queryName=name,
             outputMode="complete",
         )
-    per_session = spark.table(name)
-    return (
-        per_session.groupBy("ip_address")
-        .agg(
-            F.count(F.lit(1)).alias("sessions"),
-            F.max("hits").alias("max_hits"),
-            F.max("span_sec").alias("max_span_sec"),
-        )
-        .orderBy(F.desc("sessions"), F.asc("ip_address"))
-        .limit(20)
-    )
+    return _top_ip_sessions(spark.table(name))
 
 
 # ============================================================ round-5 widening

@@ -26,6 +26,9 @@ def builder_conf(
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession.Builder:
     """Apply this engine's required configs to any SparkSession builder."""
+    mem = _driver_mem()
+    if mem is not None:
+        builder = builder.config("spark.driver.memory", mem)
     return (
         builder.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
@@ -36,7 +39,6 @@ def builder_conf(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", _driver_mem())
         # JVM sizing (see BENCH/BASELINE.md for the measurements):
         # - G1HeapRegionSize=32m: Arrow batches of wide string/binary rows
         #   are multi-MB allocations; with default G1 region sizing those go
@@ -45,13 +47,14 @@ def builder_conf(
         #   mapInPandas over 4M wide rows at local[32]).
         # - -Xms == -Xmx: pre-size the heap so early jobs don't pay
         #   repeated grow-the-heap GC cycles (a 2-3x slow first minute).
+        #   Both default to 40% of the host's MemTotal.
         # - MetaspaceSize: codegen classloading otherwise trips repeated
         #   "Metadata GC Threshold" concurrent cycles.
         # - SPARK_GRAFT_JAVA_OPTS: extra per-process flags, e.g.
         #   -XX:ActiveProcessorCount=N for CPU-pinned executor JVMs (a JVM
         #   pinned to 8 cores otherwise sizes GC/JIT/netty pools for the
         #   whole machine and thrashes its allotment).
-        .config("spark.driver.extraJavaOptions", _java_opts())
+        .config("spark.driver.extraJavaOptions", _java_opts(mem))
         .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
         # bucketed tables (plans/bucketing.py) register in the session
         # catalog; keep their data out of the repo cwd
@@ -68,13 +71,39 @@ def builder_conf(
     )
 
 
-def _driver_mem() -> str:
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+def heap_from_meminfo(meminfo: str) -> str | None:
+    """Default driver heap: 40% of ``MemTotal`` in a /proc/meminfo text,
+    as a JVM size in MiB; None when the text has no MemTotal line."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{int(line.split()[1]) * 2 // 5 // 1024}m"
+    return None
 
 
-def _java_opts() -> str:
+def _driver_mem() -> str | None:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 40% of this host's memory; None
+    (leave the heap to Spark's default) when /proc/meminfo is unreadable."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            return heap_from_meminfo(f.read())
+    except OSError:
+        return None
+
+
+def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, else one task slot per core this
+    process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
+def _java_opts(mem: str | None) -> str:
+    xms = f"-Xms{mem} " if mem else ""
     base = (
-        f"-XX:G1HeapRegionSize=32m -Xms{_driver_mem()} "
+        f"-XX:G1HeapRegionSize=32m {xms}"
         "-XX:MetaspaceSize=1g -XX:InitiatingHeapOccupancyPercent=70"
     )
     extra = os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
@@ -88,12 +117,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    in the sandbox; on a real cluster pass None and let spark-submit decide.
+    ``master`` defaults to :func:`default_master` (``local[N]`` sized to
+    this host) in the sandbox; on a real cluster pass None and let
+    spark-submit decide.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = default_master()
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)

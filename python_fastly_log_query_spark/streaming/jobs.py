@@ -157,7 +157,7 @@ _IP_OUT_SCHEMA = StructType(
 )
 
 
-def session_rollup(parsed: DataFrame, gap: str = "1801 seconds") -> DataFrame:
+def session_rollup(parsed: DataFrame, gap: str = "1800 seconds") -> DataFrame:
     """Gap-based sessionization ON THE STREAM (SURVEY §2.8's rule under
     Structured Streaming): the native ``session_window`` aggregate's
     state store MERGES a key's sessions as adjacent events arrive —
@@ -170,9 +170,16 @@ def session_rollup(parsed: DataFrame, gap: str = "1801 seconds") -> DataFrame:
     the groupBy so sessions evict once the horizon passes their end —
     the same batch↔streaming dial as :func:`hourly_rollup`.
 
-    Gap 1801s on whole-second log timestamps is exactly "idle > 30 min
-    starts a new session" (merge iff diff < 1801 ⇔ diff <= 1800 — see
-    queries.q_ip_sessions_native for the strict-inequality translation).
+    The one sessionizer: the batch ``ip_sessions`` query runs this same
+    aggregate over a static frame.  Rows with a null ip or timestamp
+    belong to no session and are dropped.
+
+    Gap: ``session_window`` merges an event into the current session iff
+    event_time <= session_end (= last_event + gap; an event exactly one
+    gap after the last one still merges), which is the "idle > 30 min
+    starts a new session" rule at gap = 1800s.  A 1801s gap would also
+    merge a 1801s idle; tests/test_aggregate_parity.py pins the
+    1799/1800/1801 boundary against a lag + running-sum reference.
     """
     return (
         parsed.filter(

@@ -167,12 +167,12 @@ def test_endpoint_parameter_values_parity(ref_analytics, ref_entries, ours_order
     }
 
 
-# ------------------------------------------------- chunked sessionization
+# ------------------------------------------------------- sessionization
 
 
 def _plain_sessions(spark, events):
-    """Reference implementation: single-window gap sessionization
-    (the ip_sessions shape) rolled up to per-session rows."""
+    """Reference implementation: lag + running-sum gap sessionization
+    (the ip_sessions oracle's shape) rolled up to per-session rows."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -205,21 +205,37 @@ def _session_multiset(df):
     return {k: sorted(v) for k, v in out.items()}
 
 
-def test_sessionize_chunked_equals_plain_on_skewed_profile(spark):
-    """VERDICT r3 item 4: the chunked sessionizer must reproduce the
-    plain window result exactly on a HOT-KEY profile (one IP carrying
-    ~50% of events, sessions spanning chunk boundaries, boundary-exact
-    gaps) — including sessions longer than a chunk and events exactly at
-    chunk edges."""
+def _with_null_keys(spark, events):
+    """``events`` plus rows with a null ip or a null timestamp, which
+    belong to no session."""
     from pyspark.sql import functions as F
 
-    from python_fastly_log_query_spark.operators.skew import sessionize_chunked
+    nulls = spark.createDataFrame(
+        [(None, 1_700_000_000, -1), ("10.0.0.1", None, -2), (None, None, -3)],
+        "ip_address string, epoch long, event_id long",
+    )
+    return events.unionByName(
+        nulls.select(
+            "ip_address", F.timestamp_seconds("epoch").alias("timestamp"), "event_id"
+        )
+    )
+
+
+def test_session_rollup_equals_plain_on_skewed_profile(spark):
+    """The one sessionizer (session_window with a 1800 s gap) must
+    reproduce the lag + running-sum result exactly on a HOT-KEY profile
+    (one IP carrying ~50% of events in a multi-day session, gaps of
+    exactly 1800 and 1801 s, events at 4h edges) and drop rows with a
+    null ip or timestamp."""
+    from pyspark.sql import functions as F
+
+    from python_fastly_log_query_spark.streaming.jobs import session_rollup
 
     base = 1_700_000_000
     rows = []
     eid = 0
     # hot IP: continuous activity every 20 min for 3 days → ONE session
-    # spanning ~18 chunk boundaries (merge chains through whole chunks)
+    # crossing ~18 4h boundaries
     for i in range(3 * 24 * 3):
         rows.append(("10.0.0.1", base + i * 1200, eid)); eid += 1
     # hot IP again after a 31-min silence: a NEW session (gap just over)
@@ -231,7 +247,7 @@ def test_sessionize_chunked_equals_plain_on_skewed_profile(spark):
     rows.append(("10.0.0.2", base + 1000, eid)); eid += 1
     rows.append(("10.0.0.2", base + 1000 + 1800, eid)); eid += 1
     rows.append(("10.0.0.2", base + 1000 + 1800 + 1801, eid)); eid += 1
-    # events exactly AT a chunk edge (ts % chunk_sec == 0) and 1s either side
+    # events exactly AT a 4h edge and 1s either side
     edge = base - base % (4 * 3600) + 8 * 3600
     for dt in (-1, 0, 1):
         rows.append(("10.0.0.3", edge + dt, eid)); eid += 1
@@ -243,28 +259,27 @@ def test_sessionize_chunked_equals_plain_on_skewed_profile(spark):
         [(ip, ts, e) for ip, ts, e in rows], "ip_address string, epoch long, event_id long"
     ).select("ip_address", F.timestamp_seconds("epoch").alias("timestamp"), "event_id")
 
-    got = _session_multiset(
-        sessionize_chunked(events, "ip_address", "timestamp", "event_id")
-    )
+    got = _session_multiset(session_rollup(_with_null_keys(spark, events)))
     want = _session_multiset(_plain_sessions(spark, events))
     assert got == want
-    # shape sanity: the hot IP's marathon session survived stitching whole
+    assert None not in got
+    # shape sanity: the hot IP's marathon session stays one session
     assert max(h for h, _ in got["10.0.0.1"]) == 3 * 24 * 3
     assert len(got["10.0.0.2"]) == 2
     assert len(got["10.0.0.3"]) == 1
 
 
-def test_sessionize_chunked_property(spark):
+def test_session_rollup_property(spark):
     """Property check over adversarial pseudo-random event sets: duplicate
-    timestamps, gaps hugging the 30-min boundary (±1s), events at exact
-    chunk edges, and chunk sizes down to 1h — chunked must equal plain on
-    every draw.  Deterministic derivation from the case index (no RNG
-    state; a failure names its case)."""
+    timestamps and gaps hugging the 30-min boundary (±1s) — session_rollup
+    must equal the lag reference on every draw, with null-keyed rows
+    dropped.  Deterministic derivation from the case index (no RNG state;
+    a failure names its case)."""
     import hashlib
 
     from pyspark.sql import functions as F
 
-    from python_fastly_log_query_spark.operators.skew import sessionize_chunked
+    from python_fastly_log_query_spark.streaming.jobs import session_rollup
 
     def h(case, i, salt):
         return int.from_bytes(
@@ -286,14 +301,9 @@ def test_sessionize_chunked_property(spark):
         ).select(
             "ip_address", F.timestamp_seconds("epoch").alias("timestamp"), "event_id"
         )
-        chunk_sec = [3600, 4 * 3600][case % 2]
-        got = _session_multiset(
-            sessionize_chunked(
-                events, "ip_address", "timestamp", "event_id", 1800, chunk_sec
-            )
-        )
+        got = _session_multiset(session_rollup(_with_null_keys(spark, events)))
         want = _session_multiset(_plain_sessions(spark, events))
-        assert got == want, f"case {case} chunk_sec {chunk_sec}"
+        assert got == want, f"case {case}"
 
 
 def test_equidepth_histogram_exact_quartiles(spark):

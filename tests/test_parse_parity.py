@@ -101,89 +101,3 @@ def test_blank_lines_dropped(spark):
     df = spark.createDataFrame([("", ), ("   ",), ("x 404 999 y",)], "text string")
     out = parse_logs(df, line_col="text").collect()
     assert len(out) == 1 and out[0]["raw_line"] == "x 404 999 y"
-
-
-def test_native_parse_matches_pandas_parser_on_wellformed(spark):
-    """parse_logs_native (pure JVM regexp_extract, codegen) must produce
-    field-identical records to the pandas byte-parity parser on every
-    well-formed line — the oracle corpus is 100% well-formed by
-    construction, so full-frame equality is the assertion."""
-    from conftest import SF_SMALL as _sf
-
-    from python_fastly_log_query_spark import oracle_corpus as oc
-    from python_fastly_log_query_spark.operators.parse import (
-        parse_logs, parse_logs_native,
-    )
-
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    lines = oc.log_lines(spark, _sf)
-
-    def rows(df):
-        out = {}
-        for r in df.collect():
-            d = r.asDict()
-            key = d.pop("event_id")
-            d["query_params"] = dict(d["query_params"]) if d["query_params"] is not None else None
-            out[key] = d
-        return out
-
-    a = rows(parse_logs(lines, "text", passthrough=["event_id"]))
-    b = rows(parse_logs_native(lines, "text", passthrough=["event_id"]))
-    assert a.keys() == b.keys()
-    mism = {
-        k: (a[k], b[k]) for k in a
-        if a[k] != b[k]
-    }
-    assert not mism, list(mism.items())[:2]
-
-
-def test_native_parse_nulls_malformed(spark):
-    from python_fastly_log_query_spark.operators.parse import parse_logs_native
-
-    df = spark.createDataFrame(
-        [("corrupt 10.9.9.9 ###",), ("   ",), ("<190>not a real line",)],
-        "text string",
-    )
-    got = parse_logs_native(df, "text").collect()
-    # blank line dropped; malformed kept with raw_line + null fields
-    assert len(got) == 2
-    for r in got:
-        d = r.asDict()
-        raw = d.pop("raw_line")
-        assert raw and all(v is None for v in d.values())
-
-
-def test_native_parse_prefix_match_ignores_trailing_garbage(spark):
-    """Both parsers are \\A-anchored PREFIX matches: a well-formed line
-    with trailing junk must parse identically in both (the one-pass
-    regexp_replace shape needs its end sentinel for this)."""
-    from python_fastly_log_query_spark.operators.parse import (
-        parse_logs, parse_logs_native,
-    )
-
-    line = ('<134>2025-11-01T10:00:00Z cache-sjc s3logsprod[4242]: 10.1.2.3 '
-            '"-" "-" - "GET /api/x?page=1" 200 512 "-" "curl/8.4.0" hit extra trailing junk')
-    df = spark.createDataFrame([(line,)], "text string")
-    a = parse_logs(df, "text").collect()[0].asDict()
-    b = parse_logs_native(df, "text").collect()[0].asDict()
-    a["query_params"] = dict(a["query_params"]); b["query_params"] = dict(b["query_params"])
-    assert a == b
-    assert a["cache_status"] == "hit"
-
-def test_native_parse_sentinel_injection_is_nulled(spark):
-    """ADVICE r2: a raw line containing the \\x01 slot separator must not
-    fake the slot count into garbage fields — it is treated as malformed
-    (all-null fields, raw_line preserved), even when the rest of the line
-    would otherwise match the full pattern."""
-    from python_fastly_log_query_spark.operators.parse import parse_logs_native
-
-    good = ('<134>2025-11-01T10:00:00Z cache-sjc s3logsprod[4242]: 10.1.2.3 '
-            '"-" "-" - "GET /api/x?page=1" 200 512 "-" "curl/8.4.0" hit')
-    evil = good.replace("curl/8.4.0", "curl\x018.4.0\x01x\x01y")
-    df = spark.createDataFrame([(good,), (evil,)], "text string")
-    rows = {r["raw_line"]: r.asDict() for r in parse_logs_native(df, "text").collect()}
-    assert rows[good]["status_code"] == 200
-    bad = rows[evil]
-    bad.pop("raw_line")
-    assert all(v is None for v in bad.values())

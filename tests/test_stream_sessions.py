@@ -1,7 +1,7 @@
 """Streaming sessionization: cross-batch session MERGING.
 
 The registered query (`streaming_ip_sessions`) is oracled against the
-batch sessionizers' shared lag+cumsum DuckDB SQL by the full parity
+batch ``ip_sessions``' lag+cumsum DuckDB SQL by the full parity
 sweep; these tests pin the property the sweep cannot see — that the
 session_window state store merges ONE logical session whose events are
 split across micro-batches (and arrive out of event-time order), which
@@ -49,7 +49,7 @@ def _drain_sessions(spark, src: str, ckpt: str, name: str):
 
 
 def test_one_session_straddles_every_batch(spark, tmp_path):
-    """12 events on one IP, 600s apart (all within the 1801s gap), TWO
+    """12 events on one IP, 600s apart (all within the 1800s gap), TWO
     per file in REVERSED file order: every adjacent pair of events lands
     in a different micro-batch, and later batches carry EARLIER event
     times.  Only a state store that merges sessions across batches (and
