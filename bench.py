@@ -103,7 +103,6 @@ STANDALONE_QUERIES = [
     "mixture_resample_report",
     "pii_redaction_stats",
     "vocab_oov_stats",
-    "semdedup_verdicts",
     "linear_quality_scores",
     "split_leakage_stats",
     "winnow_fingerprints",
@@ -190,7 +189,6 @@ STANDALONE_QUERIES = [
     "wav_decode_meta",
     "streaming_ip_sessions",
     "host_triangle_stats",
-    "editdist_neardup_pairs",
     "editdist_neardup_auto",
     "hybrid_rrf_topk",
     "streaming_enriched_counts",
@@ -337,15 +335,6 @@ SF1_REUSE = [
     "table_stats_report",
 ]
 SF1_EXPLAIN = {
-    "editdist_neardup_pairs": (
-        "excluded as-registered: fixed block_tokens=2 over a ~30-word "
-        "vocabulary leaves ~900 block keys, so per-block candidate sets — "
-        "and the Sigma|block|^2 join output — grow ~N^2 with the corpus "
-        "(quadratic BY CONFIGURATION, same class as the fixed-(16,4) "
-        "minhash twin).  The scale-honest config is the decade-dispatched "
-        "editdist_neardup_auto (block key space widens ~|vocab|x per "
-        "decade), registered + full-oracled and swept in its place"
-    ),
     "semantic_dup_clusters": (
         "excluded as-registered: it composes banded LSH pairs at threshold "
         "0.45, where the TRUE above-threshold pair count grows ~N^2 by "
@@ -367,16 +356,10 @@ SF1_EXPLAIN = {
         "excluded: fixed (r=3, b=8) is the small-scale oracle twin by "
         "declaration; auto-sizing is the scale path"
     ),
-    "semdedup_verdicts": (
-        "excluded as-registered: fixed n_cells=8 is the small-scale oracle "
-        "twin, and within-cell pair count grows (N/cells)^2 BY CONFIGURATION. "
-        "The scale path holds cell SIZE constant by growing n_cells with N "
-        "(SemDeDup's own production configuration) and is swept as "
-        "semdedup_scaled — since r5 a REGISTERED, full-oracle registry query with the growth law replayed in its oracle"
-    ),
     "semdedup_learned_verdicts": (
-        "excluded as-registered for the same reason as semdedup_verdicts: "
-        "the trained quantizer changes WHERE the cells sit, not how many — "
+        "excluded as-registered: fixed k=8 cells, so within-cell pair count "
+        "grows (N/cells)^2 BY CONFIGURATION; the trained quantizer changes "
+        "WHERE the cells sit, not how many — "
         "the scale contract is n_cells grown with N (the registered, oracled semdedup_scaled "
         "witnesses the growth law; training cost itself is linear and swept "
         "via embedding_kmeans)"

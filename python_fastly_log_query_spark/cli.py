@@ -72,13 +72,19 @@ def cmd_parse(args) -> int:
         "text",
         passthrough=["source_file", "line_number"] if args.line_numbers else ["source_file"],
     )
+    # the row count rides on the sink job: a count() afterwards would
+    # re-run the whole parse
+    from pyspark.sql import Observation
+
+    obs = Observation("parse_rows")
+    parsed = parsed.observe(obs, F.count(F.lit(1)).alias("rows"))
     if args.format == "json":
         sinks.write_json(parsed, args.output)
     elif args.format == "csv":
         sinks.write_csv(parsed, args.output)
     else:
         parsed.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"output": args.output, "rows": parsed.count()}))
+    print(json.dumps({"output": args.output, "rows": int(obs.get["rows"])}))
     return 0
 
 

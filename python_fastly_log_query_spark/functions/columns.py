@@ -81,10 +81,6 @@ def host_of_url(url: Column) -> Column:
     return F.parse_url(url, F.lit("HOST"))
 
 
-# skew salting lives in operators/skew.py (salted_counts) — the oracle-equal
-# two-phase implementation; no column-level helper is exported here.
-
-
 def round_half_away(col: Column | str, nd: int) -> Column:
     """Half-away-from-zero rounding of the double's BINARY value:
     ``sign(x) * floor(|x| * 10^nd + 0.5) / 10^nd``.

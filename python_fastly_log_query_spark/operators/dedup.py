@@ -1038,27 +1038,6 @@ def editdist_neardup_pairs(
     )
 
 
-def editdist_sql(
-    block_tokens: int = 2,
-    snip_tokens: int = 12,
-    max_dist: int = 20,
-    table: str = "documents",
-) -> str:
-    """DuckDB oracle for :func:`editdist_neardup_pairs` (ASCII corpus:
-    byte distance ≡ code-point distance)."""
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1, {block_tokens}), ' ') AS blk,
-         array_to_string(list_slice(string_split(text, ' '), 1, {snip_tokens}), ' ') AS snip
-  FROM {table})
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(levenshtein(a.snip, b.snip) AS BIGINT) AS dist
-FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-WHERE levenshtein(a.snip, b.snip) <= {max_dist}
-"""
-
-
 def editdist_block_table() -> dict[int, int]:
     """Corpus-size-decade → ``block_tokens`` for
     :func:`editdist_neardup_auto`.  Like :func:`minhash_decade_table`,

@@ -1,49 +1,17 @@
-"""Skew-defusing salted aggregation (SURVEY.md §4; north star: "explicit
+"""Skew-defused big-big join (SURVEY.md §4; north star: "explicit
 repartitioning on a salted host-hash key to defuse hot-domain skew").
 
-A Zipf-hot key (one host with 30% of 10^12 rows) turns a plain
-``groupBy(host).agg`` into one straggler reducer.  The fix is two-phase:
-
-  phase 1: group by (key, salt) — the hot key fans out over
-           ``salt_buckets`` reducers; partial aggregates are tiny;
-  phase 2: group by key — combines ``salt_buckets`` partials per key.
-
-Catalyst already does map-side partial aggregation, which absorbs *row*
-volume — but when a single key's partials still overwhelm one reducer
-(huge distinct-value states, memory-bound aggs), the explicit salt is the
-lever.  AQE's ``skewJoin`` handles the join case; this handles the agg
-case.  The result is bit-identical to the unsalted aggregate (that
-equality is the registered oracle check).
+A Zipf-hot key (one host with 30% of 10^12 rows) turns a plain equi-join
+into one straggler reducer.  Aggregates need no salt: Catalyst's map-side
+partial aggregate already cuts a hot key down to one row per map task
+before the Exchange, so a salted two-phase count only adds a second
+Exchange.  The join side has no such partial step, so the explicit salt
+is the lever there.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-
-def salt_col(buckets: int) -> Column:
-    """Stable per-row salt in [0, buckets): hash of the row's whole
-    partition-id+offset via ``monotonically_increasing_id`` — no state, no
-    RNG, uniform enough to split a hot key across reducers."""
-    return F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(buckets)).cast("int")
-
-
-def salted_counts(df: DataFrame, key: str | Column, buckets: int = 16,
-                  out: str = "requests") -> DataFrame:
-    """Two-phase salted count: identical result to
-    ``df.groupBy(key).count()`` with the hot key spread over ``buckets``
-    reducers in phase 1."""
-    k = F.col(key) if isinstance(key, str) else key
-    partial = (
-        df.select(k.alias("_k"), salt_col(buckets).alias("_salt"))
-        .groupBy("_k", "_salt")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    return (
-        partial.groupBy("_k")
-        .agg(F.sum("_c").alias(out))
-        .withColumnRenamed("_k", key if isinstance(key, str) else "key")
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_join(
@@ -61,9 +29,7 @@ def salted_join(
     both sides).  Row-identical to ``left.join(right, on)`` — the
     registered oracle's check.
 
-    This is the join-side lever next to :func:`salted_counts` (the agg
-    side).  AQE's
-    skew-join split covers most cases at runtime; the explicit salt is
+    AQE's skew-join split covers most cases at runtime; the explicit salt is
     for the cases AQE can't rescue: a single key too large for ANY
     un-split partition, pre-AQE static plans, or when the right side's
     hot rows must replicate (AQE splits partitions, it cannot replicate

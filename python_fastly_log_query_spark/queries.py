@@ -13,6 +13,7 @@ parse→aggregate pipeline end-to-end.
 
 from __future__ import annotations
 
+import contextlib
 import os
 from collections.abc import Callable
 
@@ -1487,18 +1488,6 @@ def q_approx_distinct_ips_per_path(spark, sf):
     )
 
 
-@register(
-    "salted_path_counts",
-    L + "SELECT path, count(*) AS requests FROM logs GROUP BY 1",
-)
-def q_salted_path_counts(spark, sf):
-    """Two-phase salted aggregation (skew defuse, SURVEY.md §4) — must be
-    bit-identical to the plain groupBy count, which is the oracle."""
-    from .operators.skew import salted_counts
-
-    return salted_counts(_parsed(spark, sf), "path", buckets=16)
-
-
 def _media_feature_sql() -> str:
     """DuckDB mirror of multimodal.extract_features: sha256-derived
     unit-normed float32 vector, bit-identical association (see the
@@ -1611,30 +1600,24 @@ def _scratch_root() -> str:
 # A stateful operator's partition count freezes at checkpoint creation
 # and EVERY state partition pays fixed open/commit cost per micro-batch,
 # so it must be sized to the horizon's event volume — not inherited from
-# the session's scan/shuffle default (the contract the bounded-dedup and
-# error-attribution runs already applied individually; hoisted here for
-# every stateful drain).  Env-overridable: a 10^12-row/day ingest raises
-# it so per-partition state stays within a store instance's sweet spot.
-_STREAM_STATE_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+# the session's scan/shuffle default; 8 covers every test scale.
+_STREAM_STATE_PARTITIONS = 8
 
 
-class _stream_drain_parts:
-    """Context manager pinning ``spark.sql.shuffle.partitions`` to the
-    stream-state sizing for the duration of a drain, restoring after."""
+@contextlib.contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` inside the block,
+    restoring the session value after."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
 
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions", _STREAM_STATE_PARTITIONS
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
+def _stream_drain_parts(spark: SparkSession):
+    return _shuffle_partitions(spark, _STREAM_STATE_PARTITIONS)
 
 
 # Shuffle sizing for HOST-DIMENSION fixpoint iterations (opt r6).  The
@@ -1651,23 +1634,11 @@ class _stream_drain_parts:
 # triangles/BFS at sf0.1) showed partitions=4 + AQE beating both the
 # session default and partitions=4 + AQE-off (which regressed the
 # broadcast-join-heavy triangle plan 0.9s -> 1.7s).
-# SPARK_GRAFT_DIM_SHUFFLE_PARTITIONS raises it for real crawl graphs.
-_DIM_ITER_PARTS = os.environ.get("SPARK_GRAFT_DIM_SHUFFLE_PARTITIONS", "4")
+_DIM_ITER_PARTS = 4
 
 
-class _dim_iteration_conf:
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-
-    def __enter__(self):
-        c = self._spark.conf
-        self._prev = c.get("spark.sql.shuffle.partitions")
-        c.set("spark.sql.shuffle.partitions", _DIM_ITER_PARTS)
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
+def _dim_iteration_conf(spark: SparkSession):
+    return _shuffle_partitions(spark, _DIM_ITER_PARTS)
 
 
 def _stream_scratch(spark: SparkSession, family: str) -> tuple[str, str]:
@@ -1723,7 +1694,7 @@ def q_streaming_hourly_rollup(spark, sf):
     # (measured: 8-file drain 0.57s vs 32-file 0.75-1.5s; AvailableNow
     # with no trigger cap still drains all files as ONE batch)
     oc.log_lines(spark, sf).repartition(
-        int(_STREAM_STATE_PARTITIONS)
+        _STREAM_STATE_PARTITIONS
     ).write.mode("overwrite").parquet(f"{work}/src")
     parsed = stream_parse_docs(
         spark,
@@ -2108,7 +2079,7 @@ def q_streaming_exact_dedup(spark, sf):
 
     work, name = _stream_scratch(spark, "stream_dedup")
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    docs.repartition(int(_STREAM_STATE_PARTITIONS)).write.mode(
+    docs.repartition(_STREAM_STATE_PARTITIONS).write.mode(
         "overwrite"
     ).parquet(f"{work}/src")
     deduped = (
@@ -2242,22 +2213,17 @@ def q_streaming_dedup_bounded_state(spark, sf):
     )
     deduped = dedup_within_watermark(stream, "fp", "event_ts", "2 hours")
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
-    # The stateful operator's partition count is frozen at checkpoint
-    # creation, and EVERY state partition owns a RocksDB instance with
-    # fixed open/commit cost per micro-batch — so it must be sized to
-    # the horizon's fingerprint volume, not the corpus scan parallelism
-    # (8 covers the test scales; a 10^12-doc ingest raises it so
-    # per-partition state stays within a RocksDB instance's sweet spot).
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # every state partition owns a RocksDB instance with fixed
+    # open/commit cost per micro-batch: size it like every other drain
     try:
-        q = run_available_now(
-            deduped.select("fp"), f"{work}/ckpt", queryName=name, outputMode="append"
-        )
+        with _stream_drain_parts(spark):
+            q = run_available_now(
+                deduped.select("fp"), f"{work}/ckpt", queryName=name,
+                outputMode="append",
+            )
         LAST_STREAM_STATE_METRICS["streaming_dedup_bounded_state"] = state_metrics(q)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -2413,7 +2379,7 @@ def q_streaming_ip_totals(spark, sf):
 
     work, name = _stream_scratch(spark, "stream_ip_totals")
     oc.log_lines(spark, sf).repartition(
-        int(_STREAM_STATE_PARTITIONS)
+        _STREAM_STATE_PARTITIONS
     ).write.mode("overwrite").parquet(f"{work}/src")
     parsed = stream_parse_docs(
         spark,
@@ -2449,7 +2415,7 @@ def q_streaming_routed_counts(spark, sf):
 
     work, name = _stream_scratch(spark, "stream_routed")
     oc.log_lines(spark, sf).repartition(
-        int(_STREAM_STATE_PARTITIONS)
+        _STREAM_STATE_PARTITIONS
     ).write.mode("overwrite").parquet(f"{work}/src")
     parsed = stream_parse_docs(
         spark,
@@ -2655,7 +2621,7 @@ def q_streaming_neardup_ingest(spark, sf):
     # single-file src would run every micro-batch's banded-key
     # projection as one task (opt r6)
     docs.filter(F.col("doc_id") >= mid).select("doc_id", "text").repartition(
-        int(_STREAM_STATE_PARTITIONS)
+        _STREAM_STATE_PARTITIONS
     ).write.mode("overwrite").parquet(f"{work}/src")
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(
@@ -2771,54 +2737,6 @@ def q_stratified_sample_counts(spark, sf):
     )
     return total.join(kept, "lang", "left").select(
         "lang", "n_total", F.coalesce("n_kept", F.lit(0)).alias("n_kept")
-    )
-
-
-@register("dedup_clusters_distributed", _REGISTRY["dedup_clusters"][1])
-def q_dedup_clusters_distributed(spark, sf):
-    """The DISTRIBUTED-path twin of `dedup_clusters` (same oracle):
-    driver_max_edges=0 forces the large-star/small-star iteration even on
-    a small pair graph, so the hard gate witnesses the 10^12-scale code
-    path, not just the union-find short-circuit."""
-    from .operators.dedup import connected_components, neardup_pipeline
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pipe = neardup_pipeline(docs, 0.5, _NH, _NB)
-    comp = connected_components(
-        pipe["pairs"], "doc_a", "doc_b", driver_max_edges=0
-    )
-    rep = (
-        docs.select("doc_id", F.md5("text").alias("fp"))
-        .join(pipe["groups"].select("fp", "keep_id"), "fp")
-        .select("doc_id", F.col("keep_id").alias("rep_id"))
-    )
-    return rep.join(
-        comp.withColumnRenamed("node", "rep_id"), "rep_id", "left"
-    ).select(
-        "doc_id", F.coalesce("component", F.col("rep_id")).alias("keeper")
-    )
-
-
-@register("asof_config_rollup_chunked", _ASOF_ORACLE)
-def q_asof_config_rollup_chunked(spark, sf):
-    """Skew-hardened twin of `asof_config_rollup` (same DuckDB native
-    ASOF-join oracle): operators/asof.py's chunked variant partitions
-    the carry window by (key, 4h time chunk) so one hot key fans out
-    across chunks instead of serializing into a single window task —
-    the plan you'd run when one event_type dominates at 100 TB.  The
-    carry-in stitch (dim state at each chunk start) is a dimension-
-    sized pass; exact-equal to the plain operator by construction."""
-    from .operators.asof import asof_join_chunked
-
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    dim = _versioned_config_dim(ev)
-    j = asof_join_chunked(
-        ev, dim, on="event_type", ts="ts", payload=["config_id"],
-        chunk_seconds=4 * 3600,
-    )
-    return j.groupBy("event_type", "config_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.max("value").alias("max_value"),
     )
 
 
@@ -3274,55 +3192,6 @@ def q_vocab_oov_stats(spark, sf):
     return vocab_coverage(docs, vocab_size=12)
 
 
-@register(
-    "semdedup_verdicts",
-    f"""
-WITH ed AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
-            FROM embeddings),
-base AS (SELECT vec_id, embedding,
-                sqrt(list_dot_product(embedding, embedding)) AS nrm
-         FROM ed),
-cents AS (SELECT vec_id AS cell, embedding AS ce, nrm AS cn FROM base WHERE vec_id < 8),
-scored AS (SELECT b.vec_id, b.embedding, b.nrm, c.cell,
-                  list_dot_product(b.embedding, c.ce) / (b.nrm * c.cn) AS cs
-           FROM base b CROSS JOIN cents c),
-assign AS (SELECT vec_id, embedding, nrm, cell FROM (
-             SELECT vec_id, embedding, nrm, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell ASC) AS rk
-             FROM scored) WHERE rk = 1),
-ord AS (SELECT a.vec_id, a.cell,
-               list_dot_product(a.embedding, c.ce) / (a.nrm * c.cn) AS csim
-        FROM assign a JOIN cents c ON a.cell = c.cell),
-p AS (SELECT y.vec_id AS kb,
-             list_dot_product(ax.embedding, ay.embedding) / (ax.nrm * ay.nrm) AS c
-      FROM ord x JOIN ord y
-        ON x.cell = y.cell
-       AND (x.csim < y.csim OR (x.csim = y.csim AND x.vec_id < y.vec_id))
-      JOIN assign ax ON ax.vec_id = x.vec_id
-      JOIN assign ay ON ay.vec_id = y.vec_id),
-d AS (SELECT DISTINCT kb AS vec_id FROM p WHERE c > 0.4)
-SELECT o.vec_id, o.cell,
-       CAST(CASE WHEN d.vec_id IS NULL THEN 0 ELSE 1 END AS INT) AS is_dup
-FROM ord o LEFT JOIN d USING (vec_id)
-""",
-)
-def q_semdedup_verdicts(spark, sf):
-    """SMALL-SCALE ORACLE TWIN (fixed n_cells=8 — within-cell pair
-    volume grows (N/8)^2 by configuration; the scale-honest registered
-    config is semdedup_scaled, n_cells grown with N).
-
-    SemDeDup (Abbas et al. 2023): per-vector keep/drop verdict —
-    within-cluster above-threshold pairs drop the centroid-NEARER
-    member, keeping the outlier.  The paper's sequential scan expressed
-    relationally (order by centroid-cosine, drop the later element of
-    any qualifying pair); oracle replays cell assignment, ordering, and
-    the pair cut bit-exactly (left-fold dots both sides)."""
-    from .operators.similarity import semdedup
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    return semdedup(emb, threshold=0.4, n_cells=8)
-
-
 def _kmeans_oracle() -> str:
     from .operators.similarity import kmeans_sql
 
@@ -3357,9 +3226,9 @@ FROM asg a LEFT JOIN d USING (vec_id)
 
 @register("semdedup_learned_verdicts", _semdedup_learned_oracle())
 def q_semdedup_learned_verdicts(spark, sf):
-    """SMALL-SCALE ORACLE TWIN (fixed k=8 cells — same quadratic-by-
-    configuration shape as semdedup_verdicts; the scale-honest config
-    is semdedup_scaled: cell count grown with N, training cost linear).
+    """SMALL-SCALE ORACLE TWIN (fixed k=8 cells — within-cell pair
+    volume grows (N/8)^2 by configuration; the scale-honest config is
+    semdedup_scaled: cell count grown with N, training cost linear).
 
     SemDeDup over LEARNED clusters (similarity.semdedup_learned) —
     the paper's actual composition: k-means (8 cells, 3 Lloyd's rounds,
@@ -4410,10 +4279,11 @@ def q_dedup_minhash_lsh_auto(spark, sf):
     corpus-size decade via dedup.minhash_decade_table, so r grows with
     log N and spurious band collisions stay BOUNDED PER DOC instead of
     growing as N^2 * bg_jaccard^r — the failure the x100 linearity probe
-    measured on the fixed-(16,4) twin (621 -> 51,572 pairs for 10x docs;
-    BENCH/DECADES.md).  The fixed twin dedup_minhash_lsh stays registered
-    as the small-scale oracle shape; this is the configuration you would
-    actually run at 10^12 docs.  The oracle replays the decade choice
+    measured on the fixed (16,4) configuration (621 -> 51,572 pairs for
+    10x docs; BENCH/DECADES.md).  dedup_minhash_lsh keeps that fixed
+    configuration, the one the other near-dup queries share; this is the
+    configuration you would actually run at 10^12 docs (it already picks
+    (28,7) at 500 docs).  The oracle replays the decade choice
     (digit-count of N) and the full minhash pipeline per distinct config
     branch, so pairs hash-match bit-exactly at every test scale."""
     from .operators.dedup import lsh_candidate_pairs_auto
@@ -6292,8 +6162,9 @@ def q_salted_join_rollup(spark, sf):
     synthetic Zipf key ('hot' carries 50% of all rows) joined with the
     hot key scattered over 8 salts on the fact side and replicated 8x
     on the other — one straggler task becomes 8 even ones, non-hot keys
-    pay nothing.  Completes the skew toolbox: salted_counts (agg),
-    salted_join (join); feed hot_keys from key_skew_audit at deploy.
+    pay nothing.  Aggregates need no salt (the partial aggregate
+    already cuts a hot key to one row per map task); feed hot_keys from
+    key_skew_audit at deploy.
     Oracle: the PLAIN join — salting must be row-invisible."""
     from .operators.skew import salted_join
 
@@ -6346,7 +6217,7 @@ def q_streaming_hopping_rollup(spark, sf):
 
     work, name = _stream_scratch(spark, "stream_hop")
     oc.log_lines(spark, sf).repartition(
-        int(_STREAM_STATE_PARTITIONS)
+        _STREAM_STATE_PARTITIONS
     ).write.mode("overwrite").parquet(f"{work}/src")
     parsed = stream_parse_docs(
         spark,
@@ -7288,19 +7159,11 @@ def q_streaming_error_attribution(spark, sf):
         sreq, serr, "req_ip", "err_ip", "req_ts", "err_ts", 21600,
         watermark=f"{horizon_s} seconds",
     )
-    # the join's state-store partition count freezes at checkpoint
-    # creation and every partition pays fixed open/commit cost per
-    # micro-batch — size it to the horizon's event volume, not the
-    # session's shuffle default (same contract as the bounded-dedup run)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _stream_drain_parts(spark):
         q = run_available_now(
             joined.select("req_ip"), f"{work}/ckpt", queryName=name,
             outputMode="append",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     LAST_STREAM_STATE_METRICS["streaming_error_attribution"] = state_metrics(q)
     return (
         spark.table(name)
@@ -7376,8 +7239,8 @@ def q_compaction_plan(spark, sf):
 # VERDICT r4 item 1: the four configurations that actually carry the
 # 100-TB claim for the embedding family — previously swept in bench only
 # — registered as full-oracle queries.  The fixed-parameter variants
-# (semdedup_verdicts, semdedup_learned_verdicts, embedding_knn_graph,
-# semantic_dup_clusters, embedding_neardup_banded) remain registered as
+# (semdedup_learned_verdicts, embedding_knn_graph, semantic_dup_clusters,
+# embedding_neardup_banded) remain registered as
 # SMALL-SCALE ORACLE TWINS; these are the configs you would run at 10^12
 # rows, with the growth law itself replayed inside the oracle so the same
 # statement verifies whichever parameters the dispatch resolves to at any
@@ -7553,14 +7416,18 @@ FROM ord o LEFT JOIN d USING (vec_id)
 """,
 )
 def q_semdedup_scaled(spark, sf):
-    """SemDeDup at the scale-honest cell count (VERDICT r4 item 1):
+    """SemDeDup (Abbas et al. 2023) at the scale-honest cell count
+    (VERDICT r4 item 1): per-vector keep/drop verdict — within-cluster
+    above-threshold pairs drop the centroid-NEARER member, keeping the
+    outlier (the paper's sequential scan expressed relationally: order
+    by centroid-cosine, drop the later element of any qualifying pair).
     n_cells = max(8, N//250) holds cell SIZE ~constant as the corpus
     grows — the paper's own production configuration (~10^5 clusters)
-    — so the within-cell pair count stays linear in N, unlike the fixed
-    n_cells=8 small-scale oracle twin (semdedup_verdicts) whose pair
-    volume grows (N/8)^2.  The growth law is replayed in the oracle as
-    a scalar subquery over the same table, so this one statement
-    verifies whichever cell count the dispatch resolves to."""
+    — so the within-cell pair count stays linear in N instead of
+    growing (N/8)^2 at a fixed 8 cells; every fixture scale resolves to
+    8.  The growth law is replayed in the oracle as a scalar subquery
+    over the same table, so this one statement verifies whichever cell
+    count the dispatch resolves to."""
     from .operators.similarity import semdedup
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
@@ -7733,37 +7600,6 @@ def q_host_triangle_stats(spark, sf):
         return triangle_stats(extract_outlinks(_wg_pages_spark(docs)))
 
 
-def _editdist_oracle() -> str:
-    from .operators.dedup import editdist_sql
-
-    return editdist_sql(block_tokens=2, snip_tokens=12, max_dist=20)
-
-
-@register("editdist_neardup_pairs", _editdist_oracle())
-def q_editdist_neardup_pairs(spark, sf):
-    """Blocked Levenshtein near-dup pairs (operators/dedup.py:
-    editdist_neardup_pairs) — the CHARACTER-level dedup family the
-    token-set measures miss (every-token-lightly-misspelled mirrors
-    share ~no shingles but sit at small edit distance).  Blocking on
-    the first-2-token prefix turns the corpus cross-product into one
-    equi-join; the thresholded codegen levenshtein(…, d) early-abandons
-    its DP at d and compares a fixed 12-token snippet, so per-pair cost
-    is a constant.  Σ|block|² is the scale knob — audit the block key
-    with key_skew_audit; a hot prefix IS a giant duplicate cluster and
-    is removed by exact-dedup-first upstream (neardup_pipeline).
-
-    Small-scale oracle twin: the FIXED block_tokens=2 here is the
-    dense-output correctness config; the decade-dispatched
-    ``editdist_neardup_auto`` (registered separately) is the scale
-    configuration that keeps candidate volume linear as N grows."""
-    from .operators.dedup import editdist_neardup_pairs
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    return editdist_neardup_pairs(
-        docs, block_tokens=2, snip_tokens=12, max_dist=20
-    )
-
-
 def _editdist_auto_oracle() -> str:
     from .operators.dedup import editdist_auto_sql
 
@@ -7772,14 +7608,18 @@ def _editdist_auto_oracle() -> str:
 
 @register("editdist_neardup_auto", _editdist_auto_oracle())
 def q_editdist_neardup_auto(spark, sf):
-    """Scale-honest edit-distance near-dup (operators/dedup.py:
-    editdist_neardup_auto): the block-prefix length grows with the
-    corpus-size decade (digit count of N), widening the block key space
-    ~|vocab|× per decade so per-block candidate sets — and Σ|block|² —
-    stay bounded at 10× and 100× the data; same growth law and same
-    gated-branch oracle scheme as dedup_minhash_lsh_auto.  The fixed
-    block_tokens=2 twin (editdist_neardup_pairs) is the small-scale
-    oracle config."""
+    """Blocked Levenshtein near-dup pairs (operators/dedup.py:
+    editdist_neardup_auto) — the CHARACTER-level dedup family the
+    token-set measures miss (every-token-lightly-misspelled mirrors
+    share ~no shingles but sit at small edit distance).  Blocking on a
+    token prefix turns the corpus cross-product into one equi-join; the
+    thresholded codegen levenshtein(…, 20) early-abandons its DP and
+    compares a fixed 12-token snippet, so per-pair cost is a constant.
+    The block-prefix length grows with the corpus-size decade (digit
+    count of N; 2 tokens up to 9,999 docs), widening the block key
+    space ~|vocab|× per decade so per-block candidate sets — and
+    Σ|block|² — stay bounded at 10× and 100× the data; same growth law
+    and same gated-branch oracle scheme as dedup_minhash_lsh_auto."""
     from .operators.dedup import editdist_neardup_auto
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -7873,7 +7713,7 @@ def q_streaming_enriched_counts(spark, sf):
 
     work, name = _stream_scratch(spark, "stream_enrich")
     oc.log_lines(spark, sf).repartition(
-        int(_STREAM_STATE_PARTITIONS)
+        _STREAM_STATE_PARTITIONS
     ).write.mode("overwrite").parquet(f"{work}/src")
     parsed = stream_parse_docs(
         spark,

@@ -10,10 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from python_fastly_log_query_spark.operators.asof import (
-    asof_join,
-    asof_join_chunked,
-)
+from python_fastly_log_query_spark.operators.asof import asof_join
 
 
 def _ts(s):
@@ -86,116 +83,6 @@ def test_asof_payload_defaults_to_all_dim_columns(spark):
     facts, dim = _frames(spark)
     explicit = asof_join(facts, dim, on="k", ts="ts", payload=["version"])
     assert "label" not in explicit.columns and "version" in explicit.columns
-
-
-def test_asof_chunked_semantics(spark):
-    """The skew-hardened (key, time-chunk) variant is exact-equal to the
-    plain operator on the semantics fixture — including NULL-before-
-    first-version, tie-takes-new-version, and whole-version carry — at a
-    chunk size small enough (1 day) that every case crosses chunks."""
-    facts, dim = _frames(spark)
-    got = {
-        r["id"]: (r["version"], r["label"])
-        for r in asof_join_chunked(
-            facts, dim, on="k", ts="ts", chunk_seconds=86_400
-        ).collect()
-    }
-    assert got[1] == (None, None)
-    assert got[2] == (0, "cfg-a0")
-    assert got[3] == (0, "cfg-a0")
-    assert got[4] == (1, None)
-    assert got[5] == (1, None)
-    assert got[6] == (7, "cfg-b0")
-
-
-def test_asof_chunked_schema_and_row_count(spark):
-    facts, dim = _frames(spark)
-    out = asof_join_chunked(facts, dim, on="k", ts="ts", chunk_seconds=3600)
-    assert set(["id", "k", "ts", "version", "label"]) == set(out.columns)
-    assert out.count() == facts.count()
-
-
-def test_asof_chunked_boundary_tie(spark):
-    """A real dim row landing EXACTLY on a chunk boundary must agree
-    with the synthetic carry-in row pinned at the same instant (both
-    resolve to that version), so tie order between them is harmless —
-    and a fact at the same instant still sees the new version."""
-    facts = spark.createDataFrame(
-        [
-            (1, "a", _ts("2024-01-01 02:00:00")),  # exactly on boundary+dim
-            (2, "a", _ts("2024-01-01 02:30:00")),  # inside the same chunk
-            (3, "a", _ts("2024-01-01 01:59:59")),  # previous chunk -> v0
-        ],
-        "id long, k string, ts timestamp",
-    )
-    dim = spark.createDataFrame(
-        [
-            ("a", _ts("2024-01-01 00:00:00"), 0),
-            ("a", _ts("2024-01-01 02:00:00"), 1),  # == 2h chunk boundary
-        ],
-        "k string, valid_from timestamp, version int",
-    )
-    got = {
-        r["id"]: r["version"]
-        for r in asof_join_chunked(
-            facts, dim, on="k", ts="ts", chunk_seconds=7200
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 0}
-
-
-def test_asof_chunked_plan_partitions_by_key_and_chunk(spark):
-    """The point of the variant: the fact-path window partitions by
-    (key, _chunk) — never by the raw key alone — and the fact path
-    still contains no inequality join / BNLJ / cartesian."""
-    facts, dim = _frames(spark)
-    plan = (
-        asof_join_chunked(facts, dim, on="k", ts="ts", chunk_seconds=3600)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    for bad in ("BroadcastNestedLoopJoin", "CartesianProduct"):
-        assert bad not in plan, f"{bad} in chunked as-of plan:\n{plan}"
-    # the fact-row carry window must include the chunk column
-    assert any(
-        "windowspecdefinition(k" in ln.lower() and "_chunk" in ln
-        for ln in plan.splitlines()
-    ), plan
-
-
-@pytest.mark.parametrize("seed", [5, 17])
-@pytest.mark.parametrize("chunk_seconds", [3600, 50_000])
-def test_asof_chunked_random_equals_plain(spark, seed, chunk_seconds):
-    """Randomized cross-check: chunked result == plain result row-for-row
-    on data whose keys are heavily skewed (70% one key), at chunk sizes
-    that both split and mostly-don't-split the timeline."""
-    rng = random.Random(seed)
-    keys = ["hot"] * 7 + ["b", "c", "d"]
-    facts = [
-        (i, rng.choice(keys), _ts("2024-01-01 00:00:00")
-         + timedelta(minutes=rng.randrange(0, 20_000)))
-        for i in range(200)
-    ]
-    dim = [
-        (k, _ts("2024-01-01 00:00:00") + timedelta(minutes=m), v)
-        for k in set(keys)
-        for v, m in enumerate(sorted(rng.sample(range(0, 20_000), 6)))
-    ]
-    fdf = spark.createDataFrame(facts, "id long, k string, ts timestamp")
-    ddf = spark.createDataFrame(dim, "k string, valid_from timestamp, version int")
-
-    plain = {
-        r["id"]: r["version"]
-        for r in asof_join(fdf, ddf, on="k", ts="ts").collect()
-    }
-    chunked = {
-        r["id"]: r["version"]
-        for r in asof_join_chunked(
-            fdf, ddf, on="k", ts="ts", chunk_seconds=chunk_seconds
-        ).collect()
-    }
-    assert chunked == plain
 
 
 @pytest.mark.parametrize("seed", [11, 22, 33])

@@ -1,7 +1,9 @@
 """Parser regression golden: the batch parser ``parse_lines_pdf`` must
 reproduce the committed ``parse_log_line`` records in
 ``golden/parse_fixture_lines.json`` for the 16 ``FIXTURE_LINES`` and for
-~500 seeded lines, malformed ones included.
+~500 seeded lines, malformed ones included.  The Spark stage
+(``parse_logs``) must in turn return what ``parse_lines_pdf`` returns on
+the same lines.
 
 The golden was frozen from this package's own parser, not from the
 reference parser, so it guards against regressions only; byte-parity
@@ -123,6 +125,34 @@ def test_seeded_lines_match_golden():
     )
     assert any(c["record"] is None for c in golden["seeded_lines"])
     _check("seeded_lines")
+
+
+def test_spark_stage_matches_local_function(spark):
+    """The mapInPandas stage returns, field by field, what
+    ``parse_lines_pdf`` gives on the same lines: the Arrow round trip
+    loses nothing (``query_params`` included), the passthrough column
+    survives and blank lines are dropped."""
+    from pyspark.sql import functions as F
+
+    from python_fastly_log_query_spark.operators.parse import parse_logs
+
+    lines = FIXTURE_LINES + seeded_lines()
+    df = spark.createDataFrame(
+        [(f"file-{i}", ln) for i, ln in enumerate(lines)],
+        "source_file string, text string",
+    )
+    out = parse_logs(df, "text", passthrough=["source_file"]).withColumn(
+        "timestamp", F.regexp_replace(F.col("timestamp").cast("string"), " ", "T")
+    )
+    got = {}
+    for row in out.collect():
+        rec = row.asDict()
+        key = rec.pop("source_file")
+        got[key] = {k: v for k, v in rec.items() if v is not None}
+    pdf = parse_lines_pdf(pd.Series(lines))
+    want = {f"file-{i}": row_record(pdf.iloc[i]) for i in range(len(lines))}
+    assert any(v is None for v in want.values())
+    assert got == {k: v for k, v in want.items() if v is not None}
 
 
 def _write_golden() -> None:

@@ -14,7 +14,6 @@ from conftest import SF_ORACLE, SF_SMALL
 from python_fastly_log_query_spark.datagen import geoip_dim
 from python_fastly_log_query_spark.operators import aggregates as A
 from python_fastly_log_query_spark.operators.enrich import enrich_geoip
-from python_fastly_log_query_spark.operators.skew import salted_counts
 
 
 def _plan(df) -> str:
@@ -70,18 +69,6 @@ def test_agg_has_map_side_partial(spark):
     q = df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     plan = _plan(q)
     assert "partial_count" in plan and "Exchange" in plan
-
-
-def test_salted_counts_equal_plain_counts(spark):
-    df = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    plain = {r["event_type"]: r["n"] for r in
-             df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()}
-    salted = {r["event_type"]: r["requests"] for r in
-              salted_counts(df, "event_type", buckets=8).collect()}
-    assert salted == plain
-    # and the salted plan has the two-phase shape: two exchanges
-    plan = _plan(salted_counts(df, "event_type", buckets=8))
-    assert plan.count("Exchange") >= 2
 
 
 def test_simhash_neardup_is_equi_join(spark):

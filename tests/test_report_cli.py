@@ -168,6 +168,32 @@ def test_cli_parse_analyze_query_clear(spark, tmp_path):
     assert not os.path.exists(os.path.join(work, "routed"))
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "json", "csv"])
+def test_cli_parse_counts_rows_on_the_sink_job(spark, tmp_path, capsys, fmt):
+    """`cli parse` prints the rows it wrote, blank lines dropped, and
+    takes that count from the sink job: the whole command is one Spark
+    job, not a second parse for a count()."""
+    logs = str(tmp_path / "logs")
+    _write_logs(logs)
+    with open(os.path.join(logs, "blanks.log"), "w") as f:
+        f.write("\n   \n" + LINE.format(h=5, s=1, code=200) + "\n\t\n")
+    out = str(tmp_path / "parsed")
+    sc = spark.sparkContext
+    group = f"cli-parse-{fmt}"
+    sc.setJobGroup(group, "cli parse")
+    try:
+        assert cli.main(
+            ["parse", "--log-dir", logs, "--output", out, "--format", fmt]
+        ) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert printed == {"output": out, "rows": 13}
+    assert cli._load_parsed(spark, out, fmt).count() == 13
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_cli_package(tmp_path):
     assert cli.main(["package"]) == 0
     zip_path = "/root/repo/dist/python_fastly_log_query_spark.zip"
