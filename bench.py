@@ -29,7 +29,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -619,7 +620,7 @@ def _persist_record(out: dict) -> None:
     the COMPLETE output JSON to BENCH/latest.json and append one
     protocol-tagged line per run to BENCH/history.jsonl so per-query
     history survives any capture limit."""
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+    bench_dir = os.path.join(ROOT, "BENCH")
     os.makedirs(bench_dir, exist_ok=True)
     rec = dict(out)
     rec["recorded_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
@@ -627,7 +628,7 @@ def _persist_record(out: dict) -> None:
         rec["git_head"] = (
             subprocess.check_output(
                 ["git", "rev-parse", "--short", "HEAD"],
-                cwd=os.path.dirname(bench_dir),
+                cwd=ROOT,
                 stderr=subprocess.DEVNULL,
             )
             .decode()
@@ -671,6 +672,10 @@ def _ann_recall(spark) -> dict:
         out[label] = round(sum(vals) / len(vals), 3)
     out["panel"] = panel
     return out
+
+
+# generated x10 / x100 tables for the sf1 sweep and the decades probe
+WORK_DIR = os.path.join(ROOT, "_work")
 
 
 def _sf1_section(spark, qmap, base: dict, flagship) -> dict:
@@ -1031,8 +1036,8 @@ Entries over 12x wall-time growth in either decade: {over or "none"}.
 {chr(10).join(f"- **{n}**: {DECADES_EXPLAIN[n]}" for n in over if n in DECADES_EXPLAIN)}
 Skipped on wall budget (named, never silent): {skipped or "none"}.
 """
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/DECADES.md", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "DECADES.md"), "w") as f:
         f.write(md)
     print(json.dumps(out))
     spark.stop()
@@ -1046,7 +1051,7 @@ def _deltas_vs_prior_round(timings: dict[str, float]) -> dict | None:
     engine change); otherwise the mismatch is annotated instead."""
     import glob
 
-    prior = sorted(glob.glob("/root/repo/BENCH_r*.json"))
+    prior = sorted(glob.glob(os.path.join(ROOT, "BENCH_r*.json")))
     if not prior:
         return None
     with open(prior[-1]) as f:
@@ -1072,285 +1077,11 @@ def _deltas_vs_prior_round(timings: dict[str, float]) -> dict | None:
     return {"baseline_file": prior[-1], "changes": changes} if changes else None
 
 
-# ---------------------------------------------------------------- scaling
-#
-# North-rule evidence (BASELINE.md "Sandbox measurement protocol"): the
-# IDENTICAL flagship job at two cluster sizes over the same on-disk input.
-#
-# Cluster model: a real cluster runs one JVM per executor.  The sandbox
-# emulates "N executors -> 4N executors" as
-#   level A: 1 executor  = one local[8] JVM pinned to cores 0-7,
-#            processing ALL input files;
-#   level B: 4 executors = four concurrent local[8] JVMs, each pinned to
-#            its own disjoint 8-core set, each processing a disjoint
-#            quarter of the SAME files (exactly how a cluster splits a
-#            scan), all racing for the same memory bus.
-# Efficiency = (aggregate rows/sec at B / rows/sec at A) / 4.
-# Each executor warms to JIT steady state before its timed reps; a single
-# shared-JVM local[32] run is also recorded as a secondary data point.
-
-SCALING_ROWS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", 4_000_000))
-WORK_DIR = "/root/repo/_work"
-DOCS_PATH = f"{WORK_DIR}/scaling_docs.parquet"
-
-
-def _flagship_over(spark, docs):
-    from python_fastly_log_query_spark.operators.parse import parse_logs
-
-    # manual column pruning through the UDF boundary: the rollup+route only
-    # consumes these four parsed fields
-    parsed = parse_logs(
-        docs, "text",
-        columns=["timestamp", "ip_address", "status_code", "response_size"],
-    )
-    enriched = enrich_geoip(parsed, geoip_dim(spark, 256))
-    routed = enriched.withColumn("route", status_class(F.col("status_code")))
-    (
-        routed.groupBy(F.date_trunc("hour", "timestamp").alias("hour"), "route", "country")
-        .agg(F.count(F.lit(1)).alias("requests"), F.sum("response_size").alias("bytes"))
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-
-
-def _docs_files(part: str) -> list[str]:
-    """Deterministic file subset: 'all' or 'i/k' (files i, i+k, i+2k, ...)."""
-    import glob
-
-    files = sorted(glob.glob(f"{DOCS_PATH}/part-*.parquet"))
-    if part == "all":
-        return files
-    i, k = (int(x) for x in part.split("/"))
-    return files[i::k]
-
-
-def scaling_worker(cpus: int, n_rows: int, part: str = "all") -> None:
-    os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(2 * cpus)
-    # size the executor JVM for its core allotment, not the whole machine:
-    # a pinned-to-8-cores JVM otherwise spawns 23 GC threads + a dozen JIT
-    # threads sized for 32 CPUs and thrashes its cpuset
-    os.environ["SPARK_GRAFT_JAVA_OPTS"] = f"-XX:ActiveProcessorCount={cpus}"
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{max(8, cpus // 2)}g"
-    spark = get_spark(f"scaling-{cpus}-{part.replace('/', '_')}")
-    spark.sparkContext.setLogLevel("ERROR")
-    # ~16 MB splits give every executor multiple task waves from the same
-    # files (default 128 MB packing would collapse the input to ~10 splits)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(1 * 1024 * 1024))
-    docs = spark.read.parquet(*_docs_files(part))
-    # warm to JIT/worker steady state: C2 keeps compiling codegen classes
-    # for the first few runs (measured 27s -> 9s -> 6s on identical input)
-    for _ in range(3 if cpus >= 8 else 2):
-        _flagship_over(spark, docs)
-    # best-of-3: the metric is steady-state throughput; single runs see
-    # multi-second scheduler/GC jitter
-    secs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _flagship_over(spark, docs)
-        secs.append(time.perf_counter() - t0)
-    sec = min(secs)
-    print(json.dumps({"cpus": cpus, "part": part, "rows": n_rows,
-                      "sec": round(sec, 3),
-                      "all_secs": [round(s, 2) for s in secs],
-                      "rows_per_sec": round(n_rows / sec, 1)}))
-    spark.stop()
-
-
-def _run_worker(pin: str, cpus: int, rows: int, part: str) -> subprocess.Popen:
-    return subprocess.Popen(
-        ["taskset", "-c", pin, sys.executable, os.path.abspath(__file__),
-         "--scaling-worker", str(cpus), str(rows), part],
-        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-    )
-
-
-def _last_json(proc: subprocess.Popen) -> dict:
-    out, _ = proc.communicate()
-    return json.loads([l for l in out.splitlines() if l.startswith("{")][-1])
-
-
-def scaling_main(n_rows: int) -> None:
-    from python_fastly_log_query_spark.datagen import generate_docs
-
-    os.makedirs(WORK_DIR, exist_ok=True)
-    spark = get_spark("scaling-datagen")
-    spark.sparkContext.setLogLevel("ERROR")
-    # one shared input: 128 files; level-B executors take disjoint quarters
-    generate_docs(spark, n_rows, partitions=128).write.mode("overwrite").parquet(DOCS_PATH)
-    spark.stop()
-
-    def _level_b(cores: int) -> list[dict]:
-        quarter = n_rows // 4
-        procs = [
-            _run_worker(f"{cores * i}-{cores * i + cores - 1}", cores, quarter, f"{i}/4")
-            for i in range(4)
-        ]
-        return [_last_json(p) for p in procs]
-
-    reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "3"))
-    pairs = {}
-    for cores in (2, 8):
-        # an executor JVM occasionally enters a degraded phase for its whole
-        # lifetime (all reps slow), and the HOST itself drifts between fast
-        # and slow phases on a multi-minute scale; the sustained-capability
-        # measurement is the best of `reps` independent launches — applied
-        # SYMMETRICALLY to both cluster sizes (a degraded 1x baseline would
-        # otherwise inflate the efficiency ratio, even past 1.0).  ALL raw
-        # launch values are published in the JSON and BASELINE.md so the
-        # spread (host noise) is visible next to the chosen best.
-        a_runs = [
-            _last_json(_run_worker(f"0-{cores - 1}", cores, n_rows, "all"))
-            for _ in range(reps)
-        ]
-        a = max(a_runs, key=lambda w: w["rows_per_sec"])
-        b_runs = [_level_b(cores) for _ in range(reps)]
-        b = max(b_runs, key=lambda ws: sum(w["rows_per_sec"] for w in ws))
-        tp_b = round(sum(w["rows_per_sec"] for w in b), 1)
-        pairs[cores] = {
-            "a": a, "b": b, "tp_a": a["rows_per_sec"], "tp_b": tp_b,
-            "tp_a_runs": [w["rows_per_sec"] for w in a_runs],
-            "tp_b_runs": [round(sum(w["rows_per_sec"] for w in ws), 1) for ws in b_runs],
-            "eff": round(tp_b / a["rows_per_sec"] / 4, 3),
-        }
-
-    # secondary: one shared 32-thread JVM (not the cluster model — a real
-    # cluster never runs one 32000-thread JVM — recorded for completeness)
-    c = _last_json(_run_worker("0-31", 32, n_rows, "all"))
-
-    p2, p8 = pairs[2], pairs[8]
-    summary = {
-        "metric": "scaling_efficiency_NtoN4_executors",
-        "value": p2["eff"],
-        "unit": "ratio",
-        "queries": {
-            "pair_1x2_vs_4x2_eff": p2["eff"],
-            "pair_1x8_vs_4x8_eff": p8["eff"],
-            "local32_single_jvm_rows_per_sec": c["rows_per_sec"],
-        },
-        "sf": DOCS_PATH,
-        "rows": n_rows,
-        "rows_per_sec": {
-            "1x_local[2]": p2["tp_a"], "4x_local[2]": p2["tp_b"],
-            "1x_local[8]": p8["tp_a"], "4x_local[8]": p8["tp_b"],
-            "local[32]_single_jvm": c["rows_per_sec"],
-        },
-        "raw_launches": {
-            "1x_local[2]": p2["tp_a_runs"], "4x_local[2]": p2["tp_b_runs"],
-            "1x_local[8]": p8["tp_a_runs"], "4x_local[8]": p8["tp_b_runs"],
-        },
-        "target": 0.8,
-    }
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    # hand-written appendices (drift controls, adjudication notes) live
-    # below the marker and must survive a scaling re-run's rewrite
-    marker = "<!-- scaling:appendix -->"
-    appendix = ""
-    try:
-        with open("/root/repo/BENCH/BASELINE.md") as f:
-            prior = f.read()
-        if marker in prior:
-            appendix = prior[prior.index(marker):]
-    except FileNotFoundError:
-        pass
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
-        f.write(_baseline_md(n_rows, pairs, c))
-        if appendix:
-            f.write("\n" + appendix)
-    print(json.dumps(summary))
-
-
-def _baseline_md(n_rows, pairs, c) -> str:
-    p2, p8 = pairs[2], pairs[8]
-    rows = []
-    for cores, p in pairs.items():
-        rows.append(f"| 1 executor x {cores} cores | {n_rows} | {p['a']['sec']} | {p['tp_a']} | — |")
-        rows.append(
-            f"| 4 executors x {cores} cores | {n_rows} | "
-            f"{max(w['sec'] for w in p['b'])} (max) | {p['tp_b']} | **{p['eff']}** |"
-        )
-    rows.append(f"| (secondary) single local[32] JVM | {n_rows} | {c['sec']} | {c['rows_per_sec']} | — |")
-    table = "\n".join(rows)
-    return f"""# BENCH baseline — scaling efficiency (north-rule evidence)
-
-Identical flagship job (read parquet docs -> pandas-UDF grok parse ->
-broadcast GeoIP enrich -> status-class route -> hourly rollup -> noop sink)
-at two cluster sizes over the same on-disk input (4M docs, 128 parquet
-files).
-
-A real cluster runs one JVM per executor, so the sandbox models
-N -> 4N executors as 1 vs 4 concurrent local[k] executor JVMs, each pinned
-(taskset) to a disjoint k-core set and sized for it
-(-XX:ActiveProcessorCount=k), level-B executors reading disjoint quarters
-of the same file set (how a cluster splits a scan) while sharing one
-memory bus.  Every executor is warmed to JIT steady state; timed value is
-the best of {len(p2['tp_a_runs'])} independent launches per level (all raw
-launch values below — the host drifts between fast and slow phases on a
-multi-minute scale, so the spread is published next to the chosen best).
-
-| cluster size | rows | wall sec | aggregate rows/sec | efficiency (vs 1 exec, /4) |
-|---|---|---|---|---|
-{table}
-
-Raw aggregate rows/sec per independent launch (best-of policy applied
-symmetrically to both levels):
-
-- 1x local[2]: {p2['tp_a_runs']}
-- 4x local[2]: {p2['tp_b_runs']}
-- 1x local[8]: {p8['tp_a_runs']}
-- 4x local[8]: {p8['tp_b_runs']}
-
-**Primary result: scaling efficiency {p2['eff']} at 1x2 -> 4x2 executors
-(target >= 0.8).**
-
-The 8-core pair ({p8['eff']}) is reported as a stress case: this single
-box walls at ~700-800k rows/s for this pipeline regardless of
-configuration.  Machine controls measured on this sandbox:
-
-- pure-CPU scaling: 8 -> 32 processes **0.96** efficiency (round 3);
-  1x2 -> 4x2 pinned processes ~**1.0** within run noise (round 4 —
-  single-process baseline itself swings ~20% between launches minutes
-  apart, which is the motivation for publishing the raw spreads above);
-- pure-memcpy scaling: 8 -> 32 processes **0.32** — memory bandwidth
-  saturates near 24 GB/s (one box, one memory bus); 1x2 -> 4x2 pinned
-  processes **0.91** (round 4, ~20 GB/s aggregate) — the 2-core pair
-  geometry stays under the bus wall, so the flagship's 1x2 -> 4x2
-  efficiency is NOT hardware-capped on this box.
-
-One 8-core executor already reaches ~400k rows/s (~half the bus-limited
-wall), so a 4x scale-up cannot show >2x on this machine for fundamental
-hardware reasons; with 2-core executors the 4x cluster stays under the
-wall and the >=0.8 criterion is met.  On a real cluster each added node
-adds its own memory bus, so the 8-core pair's constraint does not apply.
-
-Plan-level scaling argument (why nothing in the job itself serializes):
-the parse stage is per-partition (no shuffle), the GeoIP enrich is a
-broadcast hash join (no fact-side shuffle), and the rollup shuffles only
-map-side-combined partials; there is no driver-side or single-point
-stage, so task throughput scales with executor count until storage or
-memory bandwidth saturates.
-
-JVM lessons encoded in `session.py` (each measured on this box):
-- `G1HeapRegionSize=32m`: multi-MB Arrow batches otherwise take G1's
-  humongous-allocation lock -> 26s vs 2s for an identity mapInPandas at
-  local[32];
-- `-Xms = -Xmx` and `MetaspaceSize=1g`: remove grow-the-heap and
-  metadata-threshold GC cycles during the first minute;
-- `ActiveProcessorCount`: a CPU-pinned JVM otherwise sizes GC/JIT/netty
-  pools for the whole machine and thrashes its cpuset (4x8 executors:
-  171k -> 773k rows/s aggregate).
-"""
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-worker":
-        scaling_worker(int(sys.argv[2]), int(sys.argv[3]),
-                       sys.argv[4] if len(sys.argv) > 4 else "all")
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        scaling_main(int(sys.argv[2]) if len(sys.argv) > 2 else SCALING_ROWS)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scale-decades":
+    if not sys.argv[1:]:
+        main()
+    elif sys.argv[1:] == ["--scale-decades"]:
         decades_main()
     else:
-        main()
+        print("usage: python bench.py [--scale-decades]", file=sys.stderr)
+        sys.exit(2)

@@ -18,7 +18,7 @@ or on a cluster (north rule: spark-submit --py-files)::
         -m ... cli_main.py parse --log-dir ... --output ...
 
 Command map (reference script -> here):
-- scripts/parse_logs.py   -> ``parse``   (incremental by default, S11)
+- scripts/parse_logs.py   -> ``parse``   (one pass; ``--incremental`` resumes, S11)
 - scripts/analyze_logs.py -> ``analyze`` (--last-hours, --endpoint,
                                           --daily-summary)
 - scripts/query_logs.py   -> ``query``   (parse + route fan-out + report)
@@ -230,7 +230,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--master", default=None, help="spark master (default: local[$SPARK_GRAFT_CPUS], else one slot per usable core)")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    pp = sub.add_parser("parse", help="parse raw log files (incremental, resumable)")
+    pp = sub.add_parser("parse", help="parse raw log files (--incremental: resumable per file)")
     pp.add_argument("--log-dir", required=True)
     pp.add_argument("--output", required=True)
     pp.add_argument("--format", choices=["parquet", "json", "csv"], default="parquet")

@@ -66,13 +66,18 @@ def status_class(status_code: Column) -> Column:
 
 
 def ip_to_long(ip: Column) -> Column:
-    """Dotted-quad IPv4 → uint32-as-long, for GeoIP range joins."""
+    """Dotted-quad IPv4 → uint32-as-long, for GeoIP range joins.
+
+    Null unless the string is exactly four decimal octets, each 0-255, so
+    an IPv6 address, ``1.2.3.4.5`` or ``256.1.1.1`` matches no range."""
     parts = F.split(ip, r"\.")
-    return (
-        parts.getItem(0).cast("long") * 16777216
-        + parts.getItem(1).cast("long") * 65536
-        + parts.getItem(2).cast("long") * 256
-        + parts.getItem(3).cast("long")
+    octets = [parts.getItem(i).cast("long") for i in range(4)]
+    valid = ip.rlike(r"^[0-9]{1,3}(\.[0-9]{1,3}){3}$")
+    for o in octets:
+        valid = valid & (o <= 255)
+    return F.when(
+        valid,
+        octets[0] * 16777216 + octets[1] * 65536 + octets[2] * 256 + octets[3],
     )
 
 

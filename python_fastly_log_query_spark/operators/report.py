@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 from concurrent.futures import ThreadPoolExecutor
+from operator import itemgetter
 from pathlib import Path
 
 from pyspark import StorageLevel, inheritable_thread_target
@@ -22,8 +23,24 @@ from pyspark.sql import DataFrame, SparkSession
 from . import aggregates as A
 
 
-def _kv(df: DataFrame, k: str, v: str) -> dict:
-    return {str(r[k]): _py(r[v]) for r in df.collect()}
+# Leaf order is explicit, never a hash aggregate's collect order (which
+# moves with spark.sql.shuffle.partitions).  Sort keys, after SURVEY
+# §2.4/§2.6: groupby().size() leaves are key-ascending, value_counts()
+# leaves count-descending then key-ascending.  A leaf passed no sort key
+# is an ordered top-N (TakeOrderedAndProject), collected in its order.
+_by_key = itemgetter(0)
+_by_hour = itemgetter("hour_of_day")
+
+
+def _by_count(kv: tuple) -> tuple:
+    return -kv[1], kv[0]
+
+
+def _kv(df: DataFrame, k: str, v: str, sort=None) -> dict:
+    rows = [(r[k], _py(r[v])) for r in df.collect()]
+    if sort is not None:
+        rows.sort(key=sort)
+    return {str(key): val for key, val in rows}
 
 
 def _py(v):
@@ -37,8 +54,11 @@ def _row(df: DataFrame) -> dict:
     return {k: _py(v) for k, v in rows[0].asDict().items()} if rows else {}
 
 
-def _records(df: DataFrame) -> list[dict]:
-    return [{k: _py(v) for k, v in r.asDict().items()} for r in df.collect()]
+def _records(df: DataFrame, sort=None) -> list[dict]:
+    recs = [{k: _py(v) for k, v in r.asDict().items()} for r in df.collect()]
+    if sort is not None:
+        recs.sort(key=sort)
+    return recs
 
 
 # A branch is a list of leaves (key, thunk): each thunk runs one Spark
@@ -74,8 +94,10 @@ def _concurrent(spark: SparkSession, thunks: list) -> list:
 
 
 def _param_values(df: DataFrame) -> dict[str, dict[str, int]]:
+    """A ``ranked`` grouped top-k as {param: {value: occurrences}}: params
+    in their top-parameter order, values in their rank order."""
     pv: dict[str, dict[str, int]] = {}
-    for r in df.collect():
+    for r in sorted(df.collect(), key=itemgetter("param_order", "param", "rk")):
         pv.setdefault(r["param"], {})[str(r["value"])] = _py(r["occurrences"])
     return pv
 
@@ -83,17 +105,20 @@ def _param_values(df: DataFrame) -> dict[str, dict[str, int]]:
 def _traffic(df: DataFrame) -> list:
     return [
         ("total_requests", df.count),
-        ("requests_per_hour", lambda: _kv(A.requests_per_hour(df), "hour", "requests")),
-        ("requests_per_day", lambda: _kv(A.requests_per_day(df), "day", "requests")),
+        ("requests_per_hour",
+         lambda: _kv(A.requests_per_hour(df), "hour", "requests", _by_key)),
+        ("requests_per_day",
+         lambda: _kv(A.requests_per_day(df), "day", "requests", _by_key)),
         ("popular_endpoints", lambda: _kv(A.popular_endpoints(df), "path", "requests")),
-        ("http_methods", lambda: _kv(A.http_methods(df), "http_method", "requests")),
+        ("http_methods",
+         lambda: _kv(A.http_methods(df), "http_method", "requests", _by_count)),
     ]
 
 
 def _errors(df: DataFrame) -> list:
     return [
         ("status_code_distribution",
-         lambda: _kv(A.status_code_distribution(df), "status_code", "requests")),
+         lambda: _kv(A.status_code_distribution(df), "status_code", "requests", _by_count)),
         (None, lambda: _row(A.error_rates(df))),
         ("error_endpoints", lambda: _kv(A.error_endpoints(df), "path", "errors")),
     ]
@@ -102,7 +127,7 @@ def _errors(df: DataFrame) -> list:
 def _performance(df: DataFrame) -> list:
     return [
         ("cache_statistics",
-         lambda: _kv(A.cache_statistics(df), "cache_status", "requests")),
+         lambda: _kv(A.cache_statistics(df), "cache_status", "requests", _by_count)),
         (None, lambda: _row(A.cache_hit_miss_rates(df))),
         ("response_size_statistics", lambda: _row(A.response_size_stats(df))),
         ("top_endpoints_by_size", lambda: _records(A.top_endpoints_by_size(df))),
@@ -114,7 +139,7 @@ def _user_agents(df: DataFrame) -> list:
         ("top_user_agents",
          lambda: _kv(A.top_user_agents(df), "user_agent", "requests")),
         ("agent_type_distribution",
-         lambda: _kv(A.agent_type_distribution(df), "agent_type", "requests")),
+         lambda: _kv(A.agent_type_distribution(df), "agent_type", "requests", _by_count)),
     ]
 
 
@@ -123,7 +148,7 @@ def _query_patterns(df: DataFrame) -> list:
         ("most_common_parameters",
          lambda: _kv(A.most_common_parameters(df), "param", "occurrences")),
         ("parameter_value_distributions",
-         lambda: _param_values(A.parameter_value_distributions(df))),
+         lambda: _param_values(A.parameter_value_distributions(df, ranked=True))),
         ("top_query_signatures",
          lambda: _kv(A.top_query_signatures(df), "signature", "requests")),
     ]
@@ -132,28 +157,32 @@ def _query_patterns(df: DataFrame) -> list:
 def _slowness_investigation(df: DataFrame) -> list:
     return [
         ("requests_by_hour",
-         lambda: _kv(A.requests_by_hour_of_day(df), "hour_of_day", "requests")),
+         lambda: _kv(A.requests_by_hour_of_day(df), "hour_of_day", "requests", _by_key)),
         ("peak_hour", lambda: _row(A.peak_hour(df))),
         ("peak_minute", lambda: _row(A.peak_minute(df))),
         ("largest_traffic_spikes", lambda: _records(A.largest_traffic_spikes(df))),
         ("requests_by_day_of_week",
-         lambda: _kv(A.requests_by_day_of_week(df), "day_of_week", "requests")),
+         lambda: _kv(A.requests_by_day_of_week(df), "day_of_week", "requests", _by_key)),
         ("high_cache_miss_endpoints",
          lambda: _kv(A.high_cache_miss_endpoints(df), "path", "miss_rate")),
         ("cache_miss_rate_by_hour",
-         lambda: _kv(A.cache_miss_rate_by_hour(df), "hour_of_day", "miss_rate")),
-        ("hourly_cache_performance", lambda: _records(A.hourly_cache_performance(df))),
+         lambda: _kv(A.cache_miss_rate_by_hour(df), "hour_of_day", "miss_rate", _by_key)),
+        ("hourly_cache_performance",
+         lambda: _records(A.hourly_cache_performance(df), _by_hour)),
         ("large_response_endpoints", lambda: _records(A.large_response_endpoints(df))),
         ("outlier_large_responses", lambda: _records(A.outlier_large_responses(df))),
-        ("hourly_response_sizes", lambda: _records(A.hourly_response_sizes(df))),
+        ("hourly_response_sizes", lambda: _records(A.hourly_response_sizes(df), _by_hour)),
         ("high_error_rate_endpoints",
          lambda: _kv(A.high_error_rate_endpoints(df), "path", "error_rate")),
         ("server_errors_by_hour",
-         lambda: _kv(A.server_errors_by_hour(df), "hour_of_day", "server_errors")),
-        ("hourly_error_rates", lambda: _records(A.hourly_error_rates(df))),
+         lambda: _kv(A.server_errors_by_hour(df), "hour_of_day", "server_errors", _by_key)),
+        ("hourly_error_rates", lambda: _records(A.hourly_error_rates(df), _by_hour)),
         ("complex_query_endpoints", lambda: _records(A.complex_query_endpoints(df))),
         ("top_request_ips", lambda: _kv(A.top_request_ips(df), "ip_address", "requests")),
-        ("top_request_ips_with_ua", lambda: _records(A.top_request_ips_with_ua(df))),
+        # the modal-UA join follows the top-N limit, so its order is lost
+        ("top_request_ips_with_ua",
+         lambda: _records(A.top_request_ips_with_ua(df),
+                          lambda r: (-r["request_count"], r["ip_address"]))),
         ("top_ips_by_request_rate", lambda: _records(A.top_ips_by_request_rate(df))),
         ("user_agent_response_sizes", lambda: _records(A.user_agent_response_sizes(df))),
     ]
@@ -227,9 +256,10 @@ def endpoint_report(df: DataFrame, endpoint: str) -> dict:
     parts = A.analyze_endpoint(df, endpoint)
     leaves = [
         ("requests_by_hour",
-         lambda: _kv(parts["requests_by_hour"], "hour_of_day", "requests")),
+         lambda: _kv(parts["requests_by_hour"], "hour_of_day", "requests", _by_key)),
         ("peak_hours", lambda: _records(parts["peak_hours"])),
-        ("status_codes", lambda: _kv(parts["status_codes"], "status_code", "requests")),
+        ("status_codes",
+         lambda: _kv(parts["status_codes"], "status_code", "requests", _by_count)),
         ("error_analysis", lambda: _row(parts["error_analysis"])),
         ("response_size_stats", lambda: _row(parts["response_size_stats"])),
         ("cache_analysis", lambda: _row(parts["cache_analysis"])),
@@ -248,7 +278,7 @@ def endpoint_report(df: DataFrame, endpoint: str) -> dict:
 
 def daily_summary_report(df: DataFrame) -> dict:
     """analyze_daily_summary (reference src/analyze/analytics.py:762-842)."""
-    return {"days": _records(A.daily_summary(df))}
+    return {"days": _records(A.daily_summary(df), itemgetter("day"))}
 
 
 def write_report(report: dict, path: str | Path) -> None:

@@ -50,10 +50,6 @@ def builder_conf(
         #   Both default to 40% of the host's MemTotal.
         # - MetaspaceSize: codegen classloading otherwise trips repeated
         #   "Metadata GC Threshold" concurrent cycles.
-        # - SPARK_GRAFT_JAVA_OPTS: extra per-process flags, e.g.
-        #   -XX:ActiveProcessorCount=N for CPU-pinned executor JVMs (a JVM
-        #   pinned to 8 cores otherwise sizes GC/JIT/netty pools for the
-        #   whole machine and thrashes its allotment).
         .config("spark.driver.extraJavaOptions", _java_opts(mem))
         .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
         # bucketed tables (plans/bucketing.py) register in the session
@@ -102,18 +98,16 @@ def default_master() -> str:
 
 def _java_opts(mem: str | None) -> str:
     xms = f"-Xms{mem} " if mem else ""
-    base = (
+    return (
         f"-XX:G1HeapRegionSize=32m {xms}"
         "-XX:MetaspaceSize=1g -XX:InitiatingHeapOccupancyPercent=70"
     )
-    extra = os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
-    return f"{base} {extra}".strip()
 
 
 def get_spark(
     app_name: str = "python-fastly-log-query-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     """Build (or get) a SparkSession configured for this engine.
 
@@ -123,9 +117,5 @@ def get_spark(
     """
     if master is None:
         master = default_master()
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
     b = SparkSession.builder.appName(app_name).master(master)
     return builder_conf(b, shuffle_partitions).getOrCreate()
