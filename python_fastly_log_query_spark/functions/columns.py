@@ -72,7 +72,7 @@ def ip_to_long(ip: Column) -> Column:
     an IPv6 address, ``1.2.3.4.5`` or ``256.1.1.1`` matches no range."""
     parts = F.split(ip, r"\.")
     octets = [parts.getItem(i).cast("long") for i in range(4)]
-    valid = ip.rlike(r"^[0-9]{1,3}(\.[0-9]{1,3}){3}$")
+    valid = ip.rlike(r"^[0-9]{1,3}(\.[0-9]{1,3}){3}\z")
     for o in octets:
         valid = valid & (o <= 255)
     return F.when(

@@ -210,13 +210,15 @@ def most_common_parameters(df: DataFrame, n: int = 20) -> DataFrame:
 
 
 def parameter_value_distributions(
-    df: DataFrame, n_params: int = 10, n_values: int = 10, ranked: bool = False
+    df: DataFrame, n_params: int = 10, n_values: int = 10
 ) -> DataFrame:
     """G15 (ref A:269,282,292-294): grouped top-k — top values per top param.
 
     Expressed as a ranking window over (param) partitions; the param
     restriction (top ``n_params``) is a broadcast semi-join of G14.
-    ``ranked`` keeps the order as columns (see :func:`_with_param_order`).
+    Rows sort into report order by (param_order, param, rk) with no Spark
+    sort: ``param_order`` (G14's order, param occurrences DESC) is a window
+    over the ranking window's partitioning, so it adds no shuffle or job.
     """
     from pyspark.sql.window import Window
 
@@ -229,22 +231,14 @@ def parameter_value_distributions(
         .agg(F.count(F.lit(1)).alias("occurrences"))
     )
     w = Window.partitionBy("param").orderBy(F.desc("occurrences"), F.asc("value"))
-    ranks = pairs.withColumn("rk", F.row_number().over(w))
-    if ranked:
-        # G14's order: param occurrences DESC (then param ASC)
-        ranks = _with_param_order(ranks, F.sum(-F.col("occurrences")))
-    top = ranks.filter(F.col("rk") <= n_values)
-    return top if ranked else top.drop("rk")
-
-
-def _with_param_order(ranks: DataFrame, key: Column) -> DataFrame:
-    """Add ``param_order``: ``key`` evaluated over each param's (pre-cut)
-    value rows.  A grouped top-k's rows sort into their report order by
-    (param_order, param, rk) with no Spark sort: the window shares the
-    ranking window's partitioning, so it adds no shuffle or job."""
-    from pyspark.sql.window import Window
-
-    return ranks.withColumn("param_order", key.over(Window.partitionBy("param")))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .withColumn(
+            "param_order",
+            F.sum(-F.col("occurrences")).over(Window.partitionBy("param")),
+        )
+        .filter(F.col("rk") <= n_values)
+    )
 
 
 def top_query_signatures(df: DataFrame, n: int = 20) -> DataFrame:
@@ -617,7 +611,6 @@ def endpoint_parameter_values(
     n_params: int = 5,
     n_values: int = 5,
     order_col: str | None = None,
-    ranked: bool = False,
 ) -> DataFrame:
     """G37 completion (ref A:735-757): per-endpoint top-``n_values`` values
     for the first-``n_params`` params.
@@ -631,8 +624,9 @@ def endpoint_parameter_values(
     insertion order survives the Arrow boundary, verified by the golden
     parity test).  With no order column, params/value-ties fall back to
     count-desc / name-asc ranking — deterministic, but a documented
-    deviation from the reference's order-dependent slice.  ``ranked``
-    keeps that order as columns (see :func:`_with_param_order`).
+    deviation from the reference's order-dependent slice.  That order is
+    kept as columns: rows sort by (param_order, param, rk), as in
+    :func:`parameter_value_distributions`.
     """
     from pyspark.sql.window import Window
 
@@ -676,13 +670,12 @@ def endpoint_parameter_values(
         )
         w = Window.partitionBy("param").orderBy(F.desc("occurrences"), F.asc("value"))
         param_order = F.sum(-F.col("occurrences"))
-    ranks = pv.join(F.broadcast(top_params), "param").withColumn(
-        "rk", F.row_number().over(w)
-    )
-    if ranked:
-        ranks = _with_param_order(ranks, param_order)
-    return ranks.filter(F.col("rk") <= n_values).select(
-        "param", "value", "occurrences", *(["rk", "param_order"] if ranked else [])
+    return (
+        pv.join(F.broadcast(top_params), "param")
+        .withColumn("rk", F.row_number().over(w))
+        .withColumn("param_order", param_order.over(Window.partitionBy("param")))
+        .filter(F.col("rk") <= n_values)
+        .select("param", "value", "occurrences", "rk", "param_order")
     )
 
 
@@ -704,9 +697,7 @@ def analyze_endpoint(df: DataFrame, endpoint: str, exact: bool = True) -> dict[s
         "response_size_stats": response_size_stats(d, exact),
         "cache_analysis": cache_hit_miss_rates(d),
         "most_common_params": most_common_parameters(d, 10),
-        "parameter_values": endpoint_parameter_values(
-            df, endpoint, order_col=order_col, ranked=True
-        ),
+        "parameter_values": endpoint_parameter_values(df, endpoint, order_col=order_col),
     }
 
 

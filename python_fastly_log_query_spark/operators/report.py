@@ -94,7 +94,7 @@ def _concurrent(spark: SparkSession, thunks: list) -> list:
 
 
 def _param_values(df: DataFrame) -> dict[str, dict[str, int]]:
-    """A ``ranked`` grouped top-k as {param: {value: occurrences}}: params
+    """A grouped top-k as {param: {value: occurrences}}: params
     in their top-parameter order, values in their rank order."""
     pv: dict[str, dict[str, int]] = {}
     for r in sorted(df.collect(), key=itemgetter("param_order", "param", "rk")):
@@ -148,7 +148,7 @@ def _query_patterns(df: DataFrame) -> list:
         ("most_common_parameters",
          lambda: _kv(A.most_common_parameters(df), "param", "occurrences")),
         ("parameter_value_distributions",
-         lambda: _param_values(A.parameter_value_distributions(df, ranked=True))),
+         lambda: _param_values(A.parameter_value_distributions(df))),
         ("top_query_signatures",
          lambda: _kv(A.top_query_signatures(df), "signature", "requests")),
     ]

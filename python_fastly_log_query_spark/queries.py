@@ -294,7 +294,9 @@ SELECT param, value, occurrences FROM rk WHERE r <= 10
 """,
 )
 def q_parameter_value_distributions(spark, sf):
-    return agg.parameter_value_distributions(_parsed(spark, sf))
+    return agg.parameter_value_distributions(_parsed(spark, sf)).select(
+        "param", "value", "occurrences"
+    )
 
 
 @register(
@@ -696,7 +698,7 @@ def q_endpoint_parameter_values(spark, sf):
     """G37 parameter_values (ref A:746-757) — VERDICT r1 missing item 2."""
     return agg.endpoint_parameter_values(
         _parsed(spark, sf), _EP, order_col="event_id"
-    )
+    ).select("param", "value", "occurrences")
 
 
 @register(

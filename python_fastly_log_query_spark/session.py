@@ -21,10 +21,7 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def builder_conf(
-    builder: SparkSession.Builder,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
-) -> SparkSession.Builder:
+def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply this engine's required configs to any SparkSession builder."""
     mem = _driver_mem()
     if mem is not None:
@@ -37,7 +34,6 @@ def builder_conf(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # JVM sizing (see BENCH/BASELINE.md for the measurements):
         # - G1HeapRegionSize=32m: Arrow batches of wide string/binary rows
@@ -114,8 +110,16 @@ def get_spark(
     ``master`` defaults to :func:`default_master` (``local[N]`` sized to
     this host) in the sandbox; on a real cluster pass None and let
     spark-submit decide.
+
+    ``shuffle_partitions`` applies unless the launch conf already sets
+    ``spark.sql.shuffle.partitions`` (``spark-submit --conf``,
+    spark-defaults.conf): builder options would override it, and AQE's
+    coalescing can lower the count but never raise it.
     """
     if master is None:
         master = default_master()
     b = SparkSession.builder.appName(app_name).master(master)
-    return builder_conf(b, shuffle_partitions).getOrCreate()
+    spark = builder_conf(b).getOrCreate()
+    if not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

@@ -37,7 +37,7 @@ IN_RANGE = {
 }
 # one address just outside each documentation range, and both ends of uint32
 OUTSIDE = ["192.0.2.128", "198.51.101.0", "203.0.113.63", "0.0.0.0", "255.255.255.255"]
-MALFORMED = ["1.2.3.4.5", "256.1.1.1", "1.2.3", "2001:db8::1", "", "1.2.3.-4", "1.2.3.4 "]
+MALFORMED = ["1.2.3.4.5", "256.1.1.1", "1.2.3", "2001:db8::1", "", "1.2.3.-4", "1.2.3.4 ", "1.2.3.4\n"]
 
 
 def _dim(spark, with_prefix: bool):
