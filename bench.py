@@ -43,6 +43,8 @@ from python_fastly_log_query_spark.operators.enrich import enrich_geoip  # noqa:
 from python_fastly_log_query_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# the warm-up slice sits next to the measured scale
+WARM_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 # Aggregate queries run against the shared cached parsed frame.
 AGG_QUERIES = [
@@ -428,14 +430,14 @@ def main() -> None:
     # exercise interpreted higher-order expressions whose first evaluation
     # pays multi-second codegen/classload (measured: 14s cold vs 2.5s for
     # a strict superset query run right after)
-    oc.parsed_events(spark, "/root/testdata/sf0.001").limit(100).count()
+    oc.parsed_events(spark, WARM_DIR).limit(100).count()
     for warm_q in (
         "dedup_minhash_lsh",
         "embedding_lsh_topk",
         "embedding_neardup_banded",
         "simhash_neardup_pairs",
     ):
-        qmap[warm_q](spark, "/root/testdata/sf0.001").write.mode(
+        qmap[warm_q](spark, WARM_DIR).write.mode(
             "overwrite"
         ).format("noop").save()
     # the warm-up queries persist their exploded self-join frames; release
@@ -910,7 +912,7 @@ def decades_main() -> None:
     # JIT/Arrow warm-up on the tiny fixture so scale-1 entries aren't
     # charged classloading that scale-10/100 entries then skip
     for w in ("dedup_minhash_lsh", "embedding_ivf_pq_rerank_topk"):
-        noop(qmap[w](spark, "/root/testdata/sf0.001"))
+        noop(qmap[w](spark, WARM_DIR))
     release_persists()
 
     def best2(fn) -> float:

@@ -27,6 +27,8 @@ from python_fastly_log_query_spark import queries as Q  # noqa: E402
 from python_fastly_log_query_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# the warm-up slice sits next to the measured scale
+WARM_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 def main() -> None:
@@ -55,9 +57,9 @@ def main() -> None:
     # not charged to the first timed query
     from python_fastly_log_query_spark import oracle_corpus as oc
 
-    oc.parsed_events(spark, "/root/testdata/sf0.001").limit(100).count()
+    oc.parsed_events(spark, WARM_DIR).limit(100).count()
     for warm_q in ("dedup_minhash_lsh", "embedding_lsh_topk"):
-        qmap[warm_q](spark, "/root/testdata/sf0.001").write.mode(
+        qmap[warm_q](spark, WARM_DIR).write.mode(
             "overwrite").format("noop").save()
     release_persists()
 

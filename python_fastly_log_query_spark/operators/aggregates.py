@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.columns import agent_type, query_signature
+from ..functions.columns import query_signature
 
 # ---------------------------------------------------------------- helpers
 

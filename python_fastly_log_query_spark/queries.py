@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import oracle_corpus as oc
-from .functions.columns import agent_type, ip_to_long, round_half_away, status_class
+from .functions.columns import round_half_away, status_class
 from .operators import aggregates as agg
 from .operators.enrich import enrich_geoip
 from .plans.lasthours import filter_last_hours

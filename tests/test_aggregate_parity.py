@@ -70,6 +70,11 @@ def ours(spark):
     return parse_logs(lines, "text").cache()
 
 
+@pytest.fixture(scope="module")
+def report(ours):
+    return R.full_report(ours)
+
+
 def _close(a: float, b: float, tol: float = 1e-6):
     assert math.isclose(float(a), float(b), rel_tol=tol, abs_tol=tol), (a, b)
 
@@ -83,9 +88,9 @@ def _topn_equal(got: dict, want: dict):
         assert got[k] == want[k], k
 
 
-def test_traffic_parity(ref_analytics, ref_entries, ours):
+def test_traffic_parity(ref_analytics, ref_entries, report):
     want = ref_analytics.analyze_traffic_patterns(ref_entries)
-    got = R.traffic(ours)
+    got = report["traffic"]
     assert got["total_requests"] == want["total_requests"]
     assert got["requests_per_hour"] == {str(k): int(v) for k, v in want["requests_per_hour"].items()}
     assert got["requests_per_day"] == want["requests_per_day"]
@@ -93,9 +98,9 @@ def test_traffic_parity(ref_analytics, ref_entries, ours):
     assert got["http_methods"] == want["http_methods"]
 
 
-def test_errors_parity(ref_analytics, ref_entries, ours):
+def test_errors_parity(ref_analytics, ref_entries, report):
     want = ref_analytics.analyze_errors(ref_entries)
-    got = R.errors(ours)
+    got = report["errors"]
     # reference: NaN statuses from malformed rows upcast the column to
     # float, so its keys render as '200.0'; normalize both to int
     assert {int(k): v for k, v in got["status_code_distribution"].items()} == {
@@ -108,9 +113,9 @@ def test_errors_parity(ref_analytics, ref_entries, ours):
     assert got["error_endpoints"] == want["error_endpoints"]
 
 
-def test_performance_parity(ref_analytics, ref_entries, ours):
+def test_performance_parity(ref_analytics, ref_entries, report):
     want = ref_analytics.analyze_performance(ref_entries)
-    got = R.performance(ours)
+    got = report["performance"]
     assert got["cache_statistics"] == want["cache_statistics"]
     _close(got["cache_hit_rate"], want["cache_hit_rate"])
     _close(got["cache_miss_rate"], want["cache_miss_rate"])
@@ -126,16 +131,16 @@ def test_performance_parity(ref_analytics, ref_entries, ours):
         assert ours_by_path[path]["request_count"] == spec["request_count"]
 
 
-def test_user_agents_parity(ref_analytics, ref_entries, ours):
+def test_user_agents_parity(ref_analytics, ref_entries, report):
     want = ref_analytics.analyze_user_agents(ref_entries)
-    got = R.user_agents(ours)
+    got = report["user_agents"]
     assert got["top_user_agents"] == want["top_user_agents"]
     assert got["agent_type_distribution"] == want["agent_type_distribution"]
 
 
-def test_query_patterns_parity(ref_analytics, ref_entries, ours):
+def test_query_patterns_parity(ref_analytics, ref_entries, report):
     want = ref_analytics.analyze_query_patterns(ref_entries)
-    got = R.query_patterns(ours)
+    got = report["query_patterns"]
     assert got["most_common_parameters"] == want["most_common_parameters"]
     assert got["parameter_value_distributions"] == want["parameter_value_distributions"]
     _topn_equal(got["top_query_signatures"], want["top_query_signatures"])

@@ -19,6 +19,7 @@ from python_fastly_log_query_spark.operators.parse import parse_logs
 from python_fastly_log_query_spark import cli
 
 from conftest import SF_SMALL
+from report_reference import reference_report
 
 LINE = (
     '<134>2025-11-01T{h:02d}:00:{s:02d}Z cache-sjc s3logsprod[4242]: 10.1.2.{s} "-" "-" - '
@@ -66,15 +67,11 @@ def test_full_report_tree(spark, tmp_path):
 
 
 def test_full_report_equals_inline_branches(spark, tmp_path):
-    """The concurrent report is byte-identical, key order included, to
-    the branch functions run one leaf at a time."""
+    """The fused report is byte-identical, key order included, to the
+    report composed one aggregates.py leaf at a time."""
     parsed = _parsed(spark, tmp_path)
-    inline = {
-        name: getattr(R, name)(parsed)
-        for name in ("traffic", "errors", "performance", "user_agents",
-                     "query_patterns", "slowness_investigation")
-    }
-    assert json.dumps(R.full_report(parsed), default=str) == json.dumps(inline, default=str)
+    assert json.dumps(R.full_report(parsed), default=str) == json.dumps(
+        reference_report(parsed), default=str)
 
 
 def test_full_report_jobs_stay_in_callers_job_group(spark, tmp_path):
@@ -91,8 +88,9 @@ def test_full_report_jobs_stay_in_callers_job_group(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     grouped = set(tracker.getJobIdsForGroup("g")) - before[0]
     ungrouped = set(tracker.getJobIdsForGroup(None)) - before[1]
-    n_leaves = sum(len(leaves(parsed)) for _, leaves in R._BRANCHES)
-    assert len(grouped) >= n_leaves
+    # at least the materialising count and one job per fused query, and
+    # at most 30 (one plan per leaf took 82)
+    assert 1 + 7 <= len(grouped) <= 30
     assert not ungrouped
 
 
@@ -109,7 +107,7 @@ def test_full_report_raises_when_a_leaf_fails(spark, tmp_path, monkeypatch):
         raise RuntimeError("leaf failed")
 
     parsed = _parsed(spark, tmp_path)
-    monkeypatch.setattr(R.A, "peak_minute", boom)
+    monkeypatch.setattr(R, "_paths", boom)
     with pytest.raises(RuntimeError, match="leaf failed"):
         R.full_report(parsed)
     assert parsed.storageLevel == StorageLevel.NONE
