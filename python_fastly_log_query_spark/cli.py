@@ -46,6 +46,24 @@ def _spark(args):
     return get_spark(app_name=f"pflqs-{args.cmd}", master=args.master)
 
 
+def _parse_unit(df):
+    """The incremental parse transform of `parse --incremental` and `query`."""
+    from .operators.parse import parse_logs
+
+    return parse_logs(df, "text", passthrough=["source_file"])
+
+
+def _parsed_checkpoint():
+    """Schema of the checkpoint `_parse_unit` writes, known without a Spark
+    job: reading it back infers nothing, and ``unit`` stays a string."""
+    from pyspark.sql import types as T
+
+    from .plans import checkpoint as ck
+    from .schema import parsed_schema_with
+
+    return ck.output_schema(parsed_schema_with([T.StructField("source_file", T.StringType())]))
+
+
 # ---------------------------------------------------------------- parse
 
 
@@ -61,10 +79,7 @@ def cmd_parse(args) -> int:
         print(f"no *.log / *.log.gz files under {args.log_dir}", file=sys.stderr)
         return 1
     if args.incremental:
-        summary = ck.run_incremental(
-            spark, files, args.output,
-            lambda df: parse_logs(df, "text", passthrough=["source_file"]),
-        )
+        summary = ck.run_incremental(spark, files, args.output, _parse_unit)
         print(json.dumps(summary, default=str))
         return 0
     parsed = parse_logs(
@@ -100,7 +115,7 @@ def _load_parsed(spark, path: str, fmt: str):
     if fmt == "csv":
         return sinks.read_csv(spark, path)
     if os.path.isdir(os.path.join(path, "_lineage")):
-        return ck.read_output(spark, path)
+        return ck.read_output(spark, path, _parsed_checkpoint())
     return spark.read.parquet(path)
 
 
@@ -140,7 +155,6 @@ def cmd_query(args) -> int:
     from .datagen import geoip_dim
     from .operators import report as R
     from .operators.enrich import enrich_geoip
-    from .operators.parse import parse_logs
     from .operators.route import routed_counts, write_routed
     from .plans import checkpoint as ck
     from .sources.logfiles import list_log_files
@@ -152,11 +166,8 @@ def cmd_query(args) -> int:
         print(f"no log files under {args.log_dir}", file=sys.stderr)
         return 1
     parse_out = os.path.join(work, "parsed")
-    summary = ck.run_incremental(
-        spark, files, parse_out,
-        lambda df: parse_logs(df, "text", passthrough=["source_file"]),
-    )
-    parsed = ck.read_output(spark, parse_out).cache()
+    summary = ck.run_incremental(spark, files, parse_out, _parse_unit)
+    parsed = ck.read_output(spark, parse_out, _parsed_checkpoint())
     enriched = enrich_geoip(parsed, geoip_dim(spark, 256))
     if args.route_by == "service":
         # ADVICE r1: the enriched log frame has no service column — add it
@@ -167,13 +178,18 @@ def cmd_query(args) -> int:
         from .operators.enrich import default_service_dim, enrich_service
 
         enriched = enrich_service(enriched, default_service_dim(spark))
+    # the routed write fills this cache; the routed counts and the report
+    # read it instead of joining GeoIP again.  The report ignores the
+    # enrich columns, and the dim's ranges are disjoint, so the left join
+    # keeps exactly one row per parsed row.
+    enriched = enriched.cache()
     routed_dir = os.path.join(work, "routed")
     write_routed(enriched, routed_dir, args.route_by)
     counts = {r["route"]: r["rows"] for r in routed_counts(enriched, args.route_by).collect()}
-    report = R.full_report(parsed)
+    report = R.full_report(enriched)
     report_path = os.path.join(work, "report.json")
     R.write_report(report, report_path)
-    parsed.unpersist()
+    enriched.unpersist()
     print(json.dumps({
         "parse": {k: summary[k] for k in ("total_units", "skipped_units", "processed_units")},
         "routed_counts": counts,

@@ -33,6 +33,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 UNIT_COL = "unit"
 
@@ -139,7 +140,7 @@ def run_incremental(
     # atomic lineage commits — strictly after the sink write
     counts = {
         r[UNIT_COL]: r["rows"]
-        for r in spark.read.parquet(data_dir(out_dir))
+        for r in read_output(spark, out_dir, out.schema)
         .filter(F.col(UNIT_COL).isin(list({uid_of[f] for f in todo})))
         .groupBy(UNIT_COL)
         .agg(F.count(F.lit(1)).alias("rows"))
@@ -159,5 +160,17 @@ def run_incremental(
     return summary
 
 
-def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(data_dir(out_dir))
+def output_schema(data: StructType) -> StructType:
+    """Schema of a checkpoint whose transform emits ``data``: its columns,
+    then the ``unit`` partition column as a string."""
+    return StructType([*data.fields, StructField(UNIT_COL, StringType())])
+
+
+def read_output(
+    spark: SparkSession, out_dir: str, schema: StructType | None = None
+) -> DataFrame:
+    """The checkpoint's rows.  With ``schema`` (see :func:`output_schema`)
+    the read runs no schema-inference job and ``unit`` stays a string;
+    inferred, a unit id of only digits reads back as a number."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(data_dir(out_dir))

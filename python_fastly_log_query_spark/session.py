@@ -35,6 +35,10 @@ def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a `cli query` op compiles about 207 generated classes; the
+        # default cache of 100 would evict them all on every op, and each
+        # repeated op in one session would recompile every class
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # JVM sizing (see BENCH/BASELINE.md for the measurements):
         # - G1HeapRegionSize=32m: Arrow batches of wide string/binary rows
         #   are multi-MB allocations; with default G1 region sizing those go

@@ -73,3 +73,23 @@ def test_enrich_geoip_range_edges_and_malformed(spark, with_prefix):
     out = enrich_geoip(_facts(spark), _dim(spark, with_prefix))
     got = {r["ip_address"]: r["country"] for r in out.collect()}
     assert got == {**IN_RANGE, **dict.fromkeys(OUTSIDE), **dict.fromkeys(MALFORMED)}
+
+
+def test_geoip_dim_ranges_are_disjoint_within_each_prefix():
+    """`cli query` reports over the GeoIP-enriched frame: a left join keeps
+    one row per parsed row only while no address falls in two ranges of
+    its /8 prefix.  The rows are read off the builder without a Spark job."""
+    from python_fastly_log_query_spark.datagen import geoip_dim
+
+    class Rows:
+        def createDataFrame(self, rows, schema):
+            return rows
+
+    by_prefix: dict[int, list[tuple[int, int]]] = {}
+    for prefix, lo, hi, _country, _asn in geoip_dim(Rows(), 256):
+        assert lo <= hi and lo >> 24 <= prefix <= hi >> 24
+        by_prefix.setdefault(prefix, []).append((lo, hi))
+    assert sorted(by_prefix) == list(range(256))
+    for ranges in by_prefix.values():
+        ranges.sort()
+        assert all(a_hi < b_lo for (_, a_hi), (b_lo, _) in zip(ranges, ranges[1:]))

@@ -166,6 +166,85 @@ def test_cli_parse_analyze_query_clear(spark, tmp_path):
     assert not os.path.exists(os.path.join(work, "routed"))
 
 
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (cache misses of the codegen
+    class cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_query_op_compiles_nothing(spark, tmp_path):
+    """A `cli query` op needs more generated classes than Spark's default
+    codegen cache of 100 holds; the session's cache keeps them all, so a
+    second op in the same session compiles none."""
+    logs = str(tmp_path / "logs")
+    _write_logs(logs)
+    assert cli.main(["query", "--log-dir", logs, "--workdir", str(tmp_path / "w1")]) == 0
+    before = _compiles(spark)
+    assert cli.main(["query", "--log-dir", logs, "--workdir", str(tmp_path / "w2")]) == 0
+    assert _compiles(spark) - before == 0
+
+
+def _logical_nodes(plan) -> list[str]:
+    """Node names of a logical plan; an InMemoryRelation is a leaf here,
+    its cached plan is not walked."""
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _logical_nodes(kids.apply(i))
+    ]
+
+
+def test_query_routed_counts_read_the_enriched_cache(spark, tmp_path, monkeypatch):
+    """The routed counts scan the cache the routed write filled: no second
+    GeoIP join."""
+    from python_fastly_log_query_spark.operators import route
+
+    seen, plain_counts = [], route.routed_counts
+
+    def counts(df, kind):
+        seen.append(plain_counts(df, kind))
+        return seen[-1]
+
+    monkeypatch.setattr(route, "routed_counts", counts)
+    logs = str(tmp_path / "logs")
+    _write_logs(logs)
+    assert cli.main(["query", "--log-dir", logs, "--workdir", str(tmp_path / "w")]) == 0
+    nodes = _logical_nodes(seen[0]._jdf.queryExecution().optimizedPlan())
+    assert "InMemoryRelation" in nodes
+    assert "Join" not in nodes
+
+
+@pytest.mark.parametrize("route_by, routes", [
+    ("status_class", {"2xx": 8, "5xx": 4}),
+    ("service", {"auth": 12}),  # /api/search: longest prefix /api/s
+])
+def test_query_resume_rewrites_the_same_outputs(spark, tmp_path, capsys, route_by, routes):
+    """A second `cli query` on the same workdir parses nothing, reads the
+    checkpoint back with its declared schema and writes the same routed
+    counts and report bytes; those bytes equal a report over the parsed
+    frame alone, so the enrich columns added no row."""
+    from python_fastly_log_query_spark.plans import checkpoint as ck
+
+    logs, work = str(tmp_path / "logs"), str(tmp_path / "work")
+    _write_logs(logs)
+    printed, reports = [], []
+    for _ in range(2):
+        assert cli.main(
+            ["query", "--log-dir", logs, "--workdir", work, "--route-by", route_by]
+        ) == 0
+        printed.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
+        with open(os.path.join(work, "report.json"), "rb") as f:
+            reports.append(f.read())
+    assert printed[0]["parse"]["processed_units"] == 2
+    assert printed[1]["parse"] == {"total_units": 2, "skipped_units": 2, "processed_units": 0}
+    assert printed[1]["routed_counts"] == printed[0]["routed_counts"] == routes
+    assert reports[1] == reports[0]
+    plain = str(tmp_path / "plain.json")
+    R.write_report(R.full_report(ck.read_output(spark, os.path.join(work, "parsed"))), plain)
+    with open(plain, "rb") as f:
+        assert f.read() == reports[0]
+
+
 @pytest.mark.parametrize("fmt", ["parquet", "json", "csv"])
 def test_cli_parse_counts_rows_on_the_sink_job(spark, tmp_path, capsys, fmt):
     """`cli parse` prints the rows it wrote, blank lines dropped, and

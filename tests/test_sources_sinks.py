@@ -9,6 +9,7 @@ skip-completed / crash-idempotency behavior (S11 / north rule).
 from __future__ import annotations
 
 import gzip
+import itertools
 import json
 import os
 
@@ -190,6 +191,32 @@ def test_crash_between_sink_and_commit_is_idempotent(spark, tmp_path):
     assert s["processed_units"] == 1  # only the uncommitted unit re-ran
     assert ck.read_output(spark, out).count() == 10  # no duplicates
     assert len(ck.completed_units(out)) == 2
+
+
+def test_all_digit_unit_id_counts_its_rows(spark, tmp_path):
+    """A unit id of the digits 0-9 only must stay a string on read-back:
+    inferred as a number, it missed the lineage record's string-keyed
+    count lookup and recorded ``rows_out: 0``."""
+    from pyspark.sql.types import StringType
+
+    from python_fastly_log_query_spark import cli
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    path = next(
+        p for p in (str(logs / f"f{i}.log") for i in itertools.count())
+        if ck.unit_id(p).isdigit()
+    )
+    with open(path, "w") as f:
+        f.write("\n".join(LINE.format(s=s, code=200) for s in range(2)) + "\n")
+    out = str(tmp_path / "out")
+
+    s = ck.run_incremental(spark, [path], out, cli._parse_unit)
+    assert s["rows_written"] == 2
+    assert [r["rows_out"] for r in s["records"]] == [2]
+    back = ck.read_output(spark, out, cli._parsed_checkpoint())
+    assert back.schema[ck.UNIT_COL].dataType == StringType()
+    assert [r[ck.UNIT_COL] for r in back.collect()] == [ck.unit_id(path)] * 2
 
 
 def test_list_log_files_remote_scheme_dispatch():
