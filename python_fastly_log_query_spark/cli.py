@@ -73,6 +73,10 @@ def cmd_parse(args) -> int:
     from .sources import sinks
     from .sources.logfiles import list_log_files, read_log_lines
 
+    if args.incremental and (args.format != "parquet" or args.line_numbers):
+        print("parse --incremental writes a parquet checkpoint without line numbers: "
+              "it takes neither --format json/csv nor --line-numbers", file=sys.stderr)
+        return 2
     spark = _spark(args)
     files = list_log_files(args.log_dir)
     if not files:

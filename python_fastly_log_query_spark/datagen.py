@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.enrich import build_geoip_dim
+
 UAS = [
     "Mozilla/5.0 (X11; Linux x86_64; rv:109.0) Gecko/20100101 Firefox/118.0",
     "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/118.0 Safari/537.36",
@@ -136,26 +138,15 @@ def generate_docs(
 
 
 def geoip_dim(spark: SparkSession, n_blocks: int = 256) -> DataFrame:
-    """Small GeoIP-style dimension: contiguous uint32 ranges → country.
-
-    Broadcast-sized by construction (SURVEY.md §2.5).  Rows carry a
-    ``prefix`` key (high-order 8 bits, replicated per /8 the block overlaps)
-    so ``enrich_geoip`` plans a BroadcastHashJoin (equi-join on prefix +
-    residual range predicate) instead of a nested-loop range join — the
-    strategy that still holds with a million-block MaxMind dim at 100 TB.
-    """
+    """Small GeoIP-style dimension: ``n_blocks`` contiguous uint32 ranges
+    covering the address space → country, built by
+    ``operators.enrich.build_geoip_dim`` (broadcast-sized, SURVEY.md §2.5)."""
     countries = ["US", "DE", "GB", "JP", "FR", "BR", "IN", "AU", "NL", "SE"]
     block = (2**32) // n_blocks
-    rows = []
-    for i in range(n_blocks):
-        lo, hi = i * block, (i + 1) * block - 1
-        for prefix in range(lo >> 24, (hi >> 24) + 1):
-            rows.append(
-                (prefix, lo, hi, countries[i % len(countries)], f"AS{64496 + i}")
-            )
-    return spark.createDataFrame(
-        rows, "prefix int, ip_lo long, ip_hi long, country string, asn string"
-    )
+    return build_geoip_dim(spark, [
+        (i * block, (i + 1) * block - 1, countries[i % len(countries)], f"AS{64496 + i}")
+        for i in range(n_blocks)
+    ])
 
 
 # ------------------------------------------------------------ sf sweeps

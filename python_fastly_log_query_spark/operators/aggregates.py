@@ -14,9 +14,8 @@ Design notes
   (count DESC, key ASC) — the documented correctness contract (SURVEY.md §2.6).
 - ``orderBy(...).limit(n)`` plans as TakeOrderedAndProject: a true
   distributed top-k, no global sort at 100 TB.
-- Percentiles use exact ``percentile`` (pandas-parity linear interpolation,
-  reference src/analyze/analytics.py:150-157); at 10^12-row scale swap
-  ``percentile_approx`` via the ``exact_percentiles`` flag.
+- Percentiles are always the exact ``percentile`` (pandas-parity linear
+  interpolation, reference src/analyze/analytics.py:150-157).
 """
 
 from __future__ import annotations
@@ -34,9 +33,8 @@ def _pct(cond: Column) -> Column:
     return F.avg(F.when(cond, 1.0).otherwise(0.0)) * 100
 
 
-def _perc(col: str, p: float, exact: bool = True) -> Column:
-    c = F.col(col)
-    return F.percentile(c, F.lit(p)) if exact else F.percentile_approx(c, F.lit(p))
+def _perc(col: str, p: float) -> Column:
+    return F.percentile(F.col(col), F.lit(p))
 
 
 def top_n(df: DataFrame, key, n: int, cnt: str = "cnt") -> DataFrame:
@@ -147,16 +145,16 @@ def cache_hit_miss_rates(df: DataFrame) -> DataFrame:
     )
 
 
-def response_size_stats(df: DataFrame, exact: bool = True) -> DataFrame:
+def response_size_stats(df: DataFrame) -> DataFrame:
     """G10 (ref A:150-157): global mean/median/min/max/p95/p99."""
     d = df.filter(F.col("response_size").isNotNull())
     return d.agg(
         F.avg("response_size").alias("mean_size"),
-        _perc("response_size", 0.5, exact).alias("median_size"),
+        _perc("response_size", 0.5).alias("median_size"),
         F.min("response_size").alias("min_size"),
         F.max("response_size").alias("max_size"),
-        _perc("response_size", 0.95, exact).alias("p95_size"),
-        _perc("response_size", 0.99, exact).alias("p99_size"),
+        _perc("response_size", 0.95).alias("p95_size"),
+        _perc("response_size", 0.99).alias("p99_size"),
     )
 
 
@@ -389,12 +387,12 @@ def large_response_endpoints(df: DataFrame, n: int = 20) -> DataFrame:
     )
 
 
-def outlier_large_responses(df: DataFrame, n: int = 10, exact: bool = True) -> DataFrame:
+def outlier_large_responses(df: DataFrame, n: int = 10) -> DataFrame:
     """G27 (ref A:435-443): rows with size strictly above global p99 —
     two-pass (percentile, then filter); the threshold is a broadcast scalar
     (cross-join of a 1-row DF), so no driver collect."""
     d = df.filter(F.col("response_size").isNotNull() & F.col("path").isNotNull())
-    thresh = d.agg(_perc("response_size", 0.99, exact).alias("p99_threshold"))
+    thresh = d.agg(_perc("response_size", 0.99).alias("p99_threshold"))
     above = d.join(F.broadcast(thresh)).filter(F.col("response_size") > F.col("p99_threshold"))
     return (
         above.groupBy("path", "p99_threshold")
@@ -404,7 +402,7 @@ def outlier_large_responses(df: DataFrame, n: int = 10, exact: bool = True) -> D
     )
 
 
-def hourly_response_sizes(df: DataFrame, exact: bool = True) -> DataFrame:
+def hourly_response_sizes(df: DataFrame) -> DataFrame:
     """G28 (ref A:446-461): per hour-of-day mean/median/p95 in MB."""
     d = df.filter(
         F.col("response_size").isNotNull()
@@ -414,8 +412,8 @@ def hourly_response_sizes(df: DataFrame, exact: bool = True) -> DataFrame:
     mb = 1024.0 * 1024.0
     return d.groupBy(F.hour("timestamp").alias("hour_of_day")).agg(
         (F.avg("response_size") / mb).alias("mean_mb"),
-        (_perc("response_size", 0.5, exact) / mb).alias("median_mb"),
-        (_perc("response_size", 0.95, exact) / mb).alias("p95_mb"),
+        (_perc("response_size", 0.5) / mb).alias("median_mb"),
+        (_perc("response_size", 0.95) / mb).alias("p95_mb"),
     )
 
 
@@ -677,28 +675,6 @@ def endpoint_parameter_values(
         .filter(F.col("rk") <= n_values)
         .select("param", "value", "occurrences", "rk", "param_order")
     )
-
-
-def analyze_endpoint(df: DataFrame, endpoint: str, exact: bool = True) -> dict[str, DataFrame]:
-    """G37 (ref A:642-759): parameterized re-run of the shared aggregates
-    over a filtered DF — with Catalyst, the equality predicate pushes down
-    to the scan."""
-    d = df.filter(F.col("path") == F.lit(endpoint))
-    order_col = next(
-        (c for c in ("event_id", "line_number") if c in df.columns), None
-    )
-    return {
-        "requests_by_hour": requests_by_hour_of_day(d),
-        "peak_hours": requests_by_hour_of_day(d)
-        .orderBy(F.desc("requests"), F.asc("hour_of_day"))
-        .limit(5),
-        "status_codes": status_code_distribution(d),
-        "error_analysis": error_rates(d),
-        "response_size_stats": response_size_stats(d, exact),
-        "cache_analysis": cache_hit_miss_rates(d),
-        "most_common_params": most_common_parameters(d, 10),
-        "parameter_values": endpoint_parameter_values(df, endpoint, order_col=order_col),
-    }
 
 
 def daily_summary(df: DataFrame) -> DataFrame:

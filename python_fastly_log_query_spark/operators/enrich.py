@@ -14,38 +14,46 @@ from pyspark.sql import functions as F
 from ..functions.columns import ip_to_long
 
 
+# a dim row is keyed by the high-order 8 bits (the /8) of each address it
+# covers; the join derives the same key from the fact's address
+_PREFIX_SHIFT = 24
+
+
+def build_geoip_dim(spark, ranges) -> DataFrame:
+    """GeoIP dim from ``(ip_lo, ip_hi, country, asn)`` uint32 ranges: each
+    range is replicated once per /8 prefix it overlaps, so
+    :func:`enrich_geoip` equi-joins on the prefix."""
+    rows = [
+        (prefix, lo, hi, country, asn)
+        for lo, hi, country, asn in ranges
+        for prefix in range(lo >> _PREFIX_SHIFT, (hi >> _PREFIX_SHIFT) + 1)
+    ]
+    return spark.createDataFrame(
+        rows, "prefix int, ip_lo long, ip_hi long, country string, asn string"
+    )
+
+
 def enrich_geoip(df: DataFrame, geoip: DataFrame, ip_col: str = "ip_address") -> DataFrame:
     """Left range-join ``ip_to_long(ip) BETWEEN ip_lo AND ip_hi`` against a
-    broadcast GeoIP dim → adds ``country``/``asn``.
+    broadcast GeoIP dim (see :func:`build_geoip_dim`) → adds
+    ``country``/``asn``.
 
-    Plans as BroadcastNestedLoopJoin: each executor scans the (tiny)
-    broadcast ranges per row — O(|dim|) per row worst case, fine for a
-    256-16k block dim.  For the million-block MaxMind case, precompute a
-    fixed-width prefix key on both sides and equi-join instead (prefix →
-    candidate blocks), which this function falls back to automatically when
-    ``geoip`` carries a ``prefix`` column.
+    Plans as a BroadcastHashJoin: the equi-key is the address's /8
+    prefix and the range is a residual predicate, so each row probes only
+    the ranges of its own prefix — the plan that still holds with a
+    million-block MaxMind dim.
     """
-    ipl = ip_to_long(F.col(ip_col))
-    if "prefix" in geoip.columns:
-        # equi-join fast path: prefix = high-order 8 bits; dim rows are
-        # replicated per prefix they overlap by the dim builder.
-        withp = df.withColumn("_ipl", ipl).withColumn(
-            "_prefix", (F.col("_ipl") / F.lit(1 << 24)).cast("int")
-        )
-        joined = withp.join(
-            F.broadcast(geoip),
-            (withp["_prefix"] == geoip["prefix"])
-            & (withp["_ipl"] >= geoip["ip_lo"])
-            & (withp["_ipl"] <= geoip["ip_hi"]),
-            "left",
-        )
-        return joined.drop("_ipl", "_prefix", "prefix", "ip_lo", "ip_hi")
-    joined = df.withColumn("_ipl", ipl).join(
+    withp = df.withColumn("_ipl", ip_to_long(F.col(ip_col))).withColumn(
+        "_prefix", (F.col("_ipl") / F.lit(1 << _PREFIX_SHIFT)).cast("int")
+    )
+    joined = withp.join(
         F.broadcast(geoip),
-        (F.col("_ipl") >= geoip["ip_lo"]) & (F.col("_ipl") <= geoip["ip_hi"]),
+        (withp["_prefix"] == geoip["prefix"])
+        & (withp["_ipl"] >= geoip["ip_lo"])
+        & (withp["_ipl"] <= geoip["ip_hi"]),
         "left",
     )
-    return joined.drop("_ipl", "ip_lo", "ip_hi")
+    return joined.drop("_ipl", "_prefix", "prefix", "ip_lo", "ip_hi")
 
 
 def default_service_dim(spark) -> DataFrame:

@@ -5,9 +5,11 @@ computed off ONE cached parsed DataFrame.
 The reference re-materializes a pandas frame per analyze function
 (SURVEY.md §3.2 — the plan is re-scanned six-plus times); here every
 branch shares the same cached lineage, and its 36 leaves come from seven
-fused queries (``full_report``).  Output is a plain JSON-serializable dict
-whose keys mirror the reference's report so downstream consumers
-(dashboards, the CLI renderer) can switch without changes.
+fused queries (``full_report``); the endpoint drill-down runs three of
+them over the endpoint's rows (``endpoint_report``).  Output is a plain
+JSON-serializable dict whose keys mirror the reference's report so
+downstream consumers (dashboards, the CLI renderer) can switch without
+changes.
 """
 
 from __future__ import annotations
@@ -33,7 +35,6 @@ from . import aggregates as A
 # §2.4/§2.6: groupby().size() leaves are key-ascending, value_counts()
 # leaves count-descending then key-ascending.  A leaf passed no sort key
 # is an ordered top-N (TakeOrderedAndProject), collected in its order.
-_by_key = itemgetter(0)
 _by_hour = itemgetter("hour_of_day")
 
 
@@ -54,31 +55,11 @@ def _py(v):
     return v
 
 
-def _row(df: DataFrame) -> dict:
-    rows = df.collect()
-    return {k: _py(v) for k, v in rows[0].asDict().items()} if rows else {}
-
-
 def _records(df: DataFrame, sort=None) -> list[dict]:
     recs = [{k: _py(v) for k, v in r.asDict().items()} for r in df.collect()]
     if sort is not None:
         recs.sort(key=sort)
     return recs
-
-
-# endpoint_report's leaves are (key, thunk) pairs: each thunk runs one
-# Spark action and returns its part of the dict; a None key merges the
-# part's keys into the dict at that position.
-
-
-def _assemble(leaves: list, values) -> dict:
-    out: dict = {}
-    for (key, _), v in zip(leaves, values):
-        if key is None:
-            out.update(v)
-        else:
-            out[key] = v
-    return out
 
 
 def _concurrent(spark: SparkSession, thunks: list) -> list:
@@ -238,6 +219,9 @@ def _cube(df: DataFrame) -> dict:
         },
         "requests_by_hour": key_asc(per["hod"]),
         "peak_hour": peak(per["hod"], "hour_of_day"),
+        # the endpoint drill-down's top five hours
+        "peak_hours": [{"hour_of_day": h, "requests": n}
+                       for h, n in sorted(per["hod"].items(), key=_by_count)[:5]],
         "peak_minute": peak(per["minute"], "minute"),
         "largest_traffic_spikes": spikes[:5],
         "requests_by_day_of_week": key_asc(dow),
@@ -576,27 +560,29 @@ def full_report(df: DataFrame) -> dict:
 def endpoint_report(df: DataFrame, endpoint: str) -> dict:
     """analyze_endpoint drill-down (reference src/analyze/analytics.py:642-759),
     incl. query_parameters.parameter_values (ref :746-757): top-5 values for
-    the first-5 params, first-seen ordered when lineage columns exist."""
-    parts = A.analyze_endpoint(df, endpoint)
-    leaves = [
-        ("requests_by_hour",
-         lambda: _kv(parts["requests_by_hour"], "hour_of_day", "requests", _by_key)),
-        ("peak_hours", lambda: _records(parts["peak_hours"])),
-        ("status_codes",
-         lambda: _kv(parts["status_codes"], "status_code", "requests", _by_count)),
-        ("error_analysis", lambda: _row(parts["error_analysis"])),
-        ("response_size_stats", lambda: _row(parts["response_size_stats"])),
-        ("cache_analysis", lambda: _row(parts["cache_analysis"])),
-        ("most_common_params",
-         lambda: _kv(parts["most_common_params"], "param", "occurrences")),
-        ("parameter_values", lambda: _param_values(parts["parameter_values"])),
-    ]
-    out = _assemble(leaves, _concurrent(df.sparkSession, [fn for _, fn in leaves]))
-    pv = out.pop("parameter_values")
+    the first-5 params, first-seen ordered when lineage columns exist.
+
+    Four queries run at once: the report's cube, size and parameter
+    queries over the endpoint's rows, and the first-seen parameter values."""
+    d = df.filter(F.col("path") == F.lit(endpoint))
+    order_col = next((c for c in ("event_id", "line_number") if c in df.columns), None)
+    cube, sizes, params, values = _concurrent(df.sparkSession, [
+        lambda: _cube(d),
+        lambda: _sizes(d),
+        lambda: _params(d),
+        lambda: _param_values(A.endpoint_parameter_values(df, endpoint, order_col=order_col)),
+    ])
+    common = dict(list(params["most_common_parameters"].items())[:10])
     return {
         "endpoint": endpoint,
-        **out,
-        "query_parameters": {"most_common": out["most_common_params"], "parameter_values": pv},
+        "requests_by_hour": cube["requests_by_hour"],
+        "peak_hours": cube["peak_hours"],
+        "status_codes": cube["status_code_distribution"],
+        "error_analysis": cube["error_rates"],
+        "response_size_stats": sizes["response_size_statistics"],
+        "cache_analysis": cube["cache_hit_miss_rates"],
+        "most_common_params": common,
+        "query_parameters": {"most_common": common, "parameter_values": values},
     }
 
 

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..sources.logfiles import read_log_lines
+
 UNIT_COL = "unit"
 
 
@@ -83,23 +85,14 @@ def run_incremental(
     """Process only not-yet-committed input files through ``transform``.
 
     ``reader`` loads a list of files into a DataFrame with a
-    ``source_file`` column (defaults to ``spark.read.text`` + metadata
-    path — handles ``.gz`` transparently).  Returns a summary dict with
-    per-unit metrics for this invocation.
+    ``source_file`` column (defaults to the log-line source
+    ``sources.logfiles.read_log_lines``, whose ``source_file`` is the input
+    path as passed in).  Returns a summary dict with per-unit metrics for
+    this invocation; ``rows_written`` is the sum of the per-unit counts.
     """
     if reader is None:
         def reader(files: list[str]) -> DataFrame:
-            # normalize the scan's file:// URI back to the plain path so
-            # unit ids match lineage records (contract: source_file ==
-            # the input path as passed in)
-            return (
-                spark.read.text(files)
-                .withColumn(
-                    "source_file",
-                    F.regexp_replace(F.input_file_name(), r"^file:/+", "/"),
-                )
-                .withColumnRenamed("value", "text")
-            )
+            return read_log_lines(spark, files, line_numbers=False)
 
     done = completed_units(out_dir)
     uid_of = {f: unit_id(f) for f in input_files}
@@ -118,13 +111,6 @@ def run_incremental(
     out = transform(df).withColumn(
         UNIT_COL, F.substring(F.md5(F.col("source_file")), 1, 16)
     )
-    # free metrics from the write job itself (df.observe piggybacks on the
-    # sink action — no extra scan); per-UNIT counts still come from the
-    # partition-pruned readback below because observe() cannot group
-    from pyspark.sql import Observation
-
-    obs = Observation("sink_metrics")
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows_written"))
     # dynamic partition overwrite: only the units in this batch are
     # replaced.  Set per-write (ADVICE r1) so the shared session's
     # overwrite semantics for unrelated writes are untouched.
@@ -134,7 +120,6 @@ def run_incremental(
         .partitionBy(UNIT_COL)
         .parquet(data_dir(out_dir))
     )
-    summary["rows_written"] = int(obs.get["rows_written"])
 
     # per-unit metrics from the written data (one small agg job), then the
     # atomic lineage commits — strictly after the sink write
@@ -146,6 +131,7 @@ def run_incremental(
         .agg(F.count(F.lit(1)).alias("rows"))
         .collect()
     }
+    summary["rows_written"] = sum(counts.values())
     wall = round(time.time() - t0, 3)
     for f in todo:
         rec = {

@@ -648,7 +648,7 @@ _EP = "/api/purchase"
     + f"SELECT status_code, count(*) AS requests FROM logs WHERE path = '{_EP}' AND status_code IS NOT NULL GROUP BY 1",
 )
 def q_endpoint_status_codes(spark, sf):
-    return agg.analyze_endpoint(_parsed(spark, sf), _EP)["status_codes"]
+    return agg.status_code_distribution(_parsed(spark, sf).filter(F.col("path") == F.lit(_EP)))
 
 
 @register(
@@ -657,7 +657,7 @@ def q_endpoint_status_codes(spark, sf):
     + f"SELECT CAST(hour(ts_s) AS INT) AS hour_of_day, count(*) AS requests FROM logs WHERE path = '{_EP}' GROUP BY 1",
 )
 def q_endpoint_requests_by_hour(spark, sf):
-    return agg.analyze_endpoint(_parsed(spark, sf), _EP)["requests_by_hour"]
+    return agg.requests_by_hour_of_day(_parsed(spark, sf).filter(F.col("path") == F.lit(_EP)))
 
 
 # params-with-position CTE for the endpoint drill-down: positions mirror the

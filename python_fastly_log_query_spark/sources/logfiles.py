@@ -7,7 +7,9 @@ attach per-row lineage (``source_file``, ``line_number``).
 Spark mapping: ``spark.read.text`` decompresses ``.gz`` transparently and
 plans one split per gzip file (gzip is unsplittable — at 100 TB prefer
 zstd/parquet landing zones; this source exists for reference parity).
-``source_file`` comes from the scan metadata; ``line_number`` (1-based,
+``source_file`` is the scan's file path with a local ``file:`` scheme
+stripped, so it equals what :func:`list_log_files` returned (the same
+path the checkpoint keys its units by); ``line_number`` (1-based,
 per file) is a per-partition counter, exact because unsplittable /
 small-file inputs map one file to one partition.
 
@@ -63,7 +65,7 @@ def read_log_lines(
     )
     df = (
         spark.read.text(files)
-        .withColumn("source_file", F.input_file_name())
+        .withColumn("source_file", F.regexp_replace(F.input_file_name(), r"^file:/+", "/"))
         .withColumnRenamed("value", "text")
     )
     if not line_numbers:

@@ -1,18 +1,29 @@
-"""The report composed one leaf per Spark action: each leaf is the
+"""The reports composed one leaf per Spark action: each leaf is the
 aggregates.py function it is named after, collected and put in its
-explicit order.  This is the reference ``report.full_report`` is compared
-against byte for byte (tests/test_report_fused.py); the aggregates
-themselves are checked against their DuckDB oracles in the registry
-sweep."""
+explicit order.  These are the references ``report.full_report`` and
+``report.endpoint_report`` are compared against byte for byte
+(tests/test_report_fused.py); the aggregates themselves are checked
+against their DuckDB oracles in the registry sweep."""
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from python_fastly_log_query_spark.operators import aggregates as A
 from python_fastly_log_query_spark.operators.report import (
-    _by_count, _by_hour, _by_key, _kv, _param_values, _records, _row,
+    _by_count, _by_hour, _kv, _param_values, _py, _records,
 )
+
+_by_key = itemgetter(0)
+
+
+def _row(df: DataFrame) -> dict:
+    rows = df.collect()
+    return {k: _py(v) for k, v in rows[0].asDict().items()} if rows else {}
+
 
 # A branch is a list of leaves (key, thunk); a None key merges the part's
 # keys into the branch at that position.
@@ -125,3 +136,27 @@ def reference_report(df: DataFrame) -> dict:
             else:
                 branch[key] = fn()
     return tree
+
+
+def reference_endpoint_report(df: DataFrame, endpoint: str) -> dict:
+    """The endpoint drill-down, one leaf after another."""
+    d = df.filter(F.col("path") == F.lit(endpoint))
+    order_col = next((c for c in ("event_id", "line_number") if c in df.columns), None)
+    by_hour = A.requests_by_hour_of_day(d)
+    common = _kv(A.most_common_parameters(d, 10), "param", "occurrences")
+    return {
+        "endpoint": endpoint,
+        "requests_by_hour": _kv(by_hour, "hour_of_day", "requests", _by_key),
+        "peak_hours": _records(
+            by_hour.orderBy(F.desc("requests"), F.asc("hour_of_day")).limit(5)),
+        "status_codes": _kv(A.status_code_distribution(d), "status_code", "requests", _by_count),
+        "error_analysis": _row(A.error_rates(d)),
+        "response_size_stats": _row(A.response_size_stats(d)),
+        "cache_analysis": _row(A.cache_hit_miss_rates(d)),
+        "most_common_params": common,
+        "query_parameters": {
+            "most_common": common,
+            "parameter_values": _param_values(
+                A.endpoint_parameter_values(df, endpoint, order_col=order_col)),
+        },
+    }

@@ -6,11 +6,10 @@ of ``1.2.3.4.5`` would geolocate it."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from python_fastly_log_query_spark.functions.columns import ip_to_long
-from python_fastly_log_query_spark.operators.enrich import enrich_geoip
+from python_fastly_log_query_spark.operators.enrich import build_geoip_dim, enrich_geoip
 
 
 def _ip(s: str) -> int:
@@ -40,16 +39,10 @@ OUTSIDE = ["192.0.2.128", "198.51.101.0", "203.0.113.63", "0.0.0.0", "255.255.25
 MALFORMED = ["1.2.3.4.5", "256.1.1.1", "1.2.3", "2001:db8::1", "", "1.2.3.-4", "1.2.3.4 ", "1.2.3.4\n"]
 
 
-def _dim(spark, with_prefix: bool):
-    rows = []
-    for lo, hi, country in RANGES:
-        lo, hi = _ip(lo), _ip(hi)
-        for prefix in range(lo >> 24, (hi >> 24) + 1):
-            rows.append((prefix, lo, hi, country, "AS64496"))
-    dim = spark.createDataFrame(
-        rows, "prefix int, ip_lo long, ip_hi long, country string, asn string"
+def _dim(spark):
+    return build_geoip_dim(
+        spark, [(_ip(lo), _ip(hi), country, "AS64496") for lo, hi, country in RANGES]
     )
-    return dim if with_prefix else dim.drop("prefix").distinct()
 
 
 def _facts(spark):
@@ -68,9 +61,8 @@ def test_ip_to_long_accepts_only_four_octets(spark):
     }
 
 
-@pytest.mark.parametrize("with_prefix", [True, False], ids=["prefix-join", "range-join"])
-def test_enrich_geoip_range_edges_and_malformed(spark, with_prefix):
-    out = enrich_geoip(_facts(spark), _dim(spark, with_prefix))
+def test_enrich_geoip_range_edges_and_malformed(spark):
+    out = enrich_geoip(_facts(spark), _dim(spark))
     got = {r["ip_address"]: r["country"] for r in out.collect()}
     assert got == {**IN_RANGE, **dict.fromkeys(OUTSIDE), **dict.fromkeys(MALFORMED)}
 

@@ -74,24 +74,37 @@ def test_full_report_equals_inline_branches(spark, tmp_path):
         reference_report(parsed), default=str)
 
 
-def test_full_report_jobs_stay_in_callers_job_group(spark, tmp_path):
+def _jobs(spark, group: str, fn) -> tuple[set, set]:
+    """The jobs ``fn`` submits in job group ``group`` and outside any."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    parsed = _parsed(spark, tmp_path)
-    before = set(tracker.getJobIdsForGroup("g")), set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup("g", "report")
+    before = set(tracker.getJobIdsForGroup(group)), set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
     try:
-        R.full_report(parsed)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the status store is fed by the listener bus; let it catch up
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    grouped = set(tracker.getJobIdsForGroup("g")) - before[0]
-    ungrouped = set(tracker.getJobIdsForGroup(None)) - before[1]
+    return (set(tracker.getJobIdsForGroup(group)) - before[0],
+            set(tracker.getJobIdsForGroup(None)) - before[1])
+
+
+def test_full_report_jobs_stay_in_callers_job_group(spark, tmp_path):
+    parsed = _parsed(spark, tmp_path)
+    grouped, ungrouped = _jobs(spark, "g", lambda: R.full_report(parsed))
     # at least the materialising count and one job per fused query, and
     # at most 30 (one plan per leaf took 82)
     assert 1 + 7 <= len(grouped) <= 30
     assert not ungrouped
+    # the drill-down's four queries: on a path every row has, at most 14
+    # jobs (one plan per leaf took 19); on an absent path, whose empty
+    # shuffles end each query early, at most 6 (one plan per leaf took 12)
+    for endpoint, most in (("/api/search", 14), ("/absent", 6)):
+        grouped, ungrouped = _jobs(spark, f"g{endpoint}",
+                                   lambda: R.endpoint_report(parsed, endpoint))
+        assert 4 <= len(grouped) <= most, endpoint
+        assert not ungrouped
 
 
 def test_full_report_joins_its_threads(spark, tmp_path):
@@ -269,6 +282,42 @@ def test_cli_parse_counts_rows_on_the_sink_job(spark, tmp_path, capsys, fmt):
     assert printed == {"output": out, "rows": 13}
     assert cli._load_parsed(spark, out, fmt).count() == 13
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.parametrize("flags", [["--format", "json"], ["--format", "csv"], ["--line-numbers"]],
+                         ids=["json", "csv", "line-numbers"])
+def test_cli_parse_incremental_rejects_what_it_cannot_write(tmp_path, capsys, flags):
+    """The incremental checkpoint is parquet without line numbers: asking
+    for another format or for line numbers fails before any work."""
+    logs, out = str(tmp_path / "logs"), str(tmp_path / "parsed")
+    _write_logs(logs)
+    argv = ["parse", "--log-dir", logs, "--output", out, "--incremental", *flags]
+    assert cli.main(argv) == 2
+    err = capsys.readouterr().err
+    assert "--incremental" in err and flags[0] in err
+    assert not os.path.exists(out)
+
+
+def test_cli_source_file_is_the_listed_path(spark, tmp_path):
+    """`parse`, `parse --incremental` and `query`'s checkpoint all record
+    each row's file as `list_log_files` lists it."""
+    from python_fastly_log_query_spark.plans import checkpoint as ck
+    from python_fastly_log_query_spark.sources.logfiles import list_log_files
+
+    logs, work = str(tmp_path / "logs"), str(tmp_path / "work")
+    _write_logs(logs)
+    plain, incremental = str(tmp_path / "plain"), str(tmp_path / "incremental")
+    assert cli.main(["parse", "--log-dir", logs, "--output", plain]) == 0
+    assert cli.main(["parse", "--log-dir", logs, "--output", incremental, "--incremental"]) == 0
+    assert cli.main(["query", "--log-dir", logs, "--workdir", work]) == 0
+    outputs = {
+        "parse": spark.read.parquet(plain),
+        "parse --incremental": ck.read_output(spark, incremental),
+        "query": ck.read_output(spark, os.path.join(work, "parsed")),
+    }
+    for name, df in outputs.items():
+        got = sorted(r[0] for r in df.select("source_file").distinct().collect())
+        assert got == list_log_files(logs), name
 
 
 def test_cli_package(tmp_path):

@@ -1,7 +1,8 @@
-"""The fused report (seven queries) equals, byte for byte in JSON, the
-report composed one aggregates.py leaf per Spark action
-(tests/report_reference.py), on the sf fixture, on an edge fixture built
-to hit every null filter, tie and gap, and on an empty frame."""
+"""The fused report (seven queries) and the endpoint drill-down built from
+three of them equal, byte for byte in JSON, the reports composed one
+aggregates.py leaf per Spark action (tests/report_reference.py), on the
+sf fixture, on an edge fixture built to hit every null filter, tie and
+gap, and on an empty frame."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from python_fastly_log_query_spark.operators import aggregates as A
 from python_fastly_log_query_spark.operators import report as R
 
 from conftest import SF_SMALL
-from report_reference import reference_report
+from report_reference import reference_endpoint_report, reference_report
 
 SCHEMA = (
     "timestamp timestamp, ip_address string, http_method string, path string, "
@@ -113,6 +114,21 @@ def test_fused_report_equals_the_per_leaf_report(frames, name):
     for branch, leaves in want.items():
         for leaf, value in leaves.items():
             assert json.dumps(got[branch].get(leaf)) == json.dumps(value), leaf
+    assert json.dumps(got) == json.dumps(want)
+
+
+# /api/purchase has rows only in sf, whose event_id orders the parameter
+# values by first sight; /päth only in edge, which has no lineage column
+@pytest.mark.parametrize("endpoint", ["busiest", "/api/purchase", "/päth", "/absent"])
+@pytest.mark.parametrize("name", ["sf", "edge", "empty"])
+def test_endpoint_report_equals_the_per_leaf_report(frames, name, endpoint):
+    df = frames[name]
+    if endpoint == "busiest":
+        top = A.popular_endpoints(df, 1).collect()
+        endpoint = top[0]["path"] if top else "/"
+    got, want = R.endpoint_report(df, endpoint), reference_endpoint_report(df, endpoint)
+    for leaf, value in want.items():
+        assert json.dumps(got.get(leaf)) == json.dumps(value), leaf
     assert json.dumps(got) == json.dumps(want)
 
 

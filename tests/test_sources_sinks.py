@@ -161,7 +161,7 @@ def test_incremental_resume_skips_completed(spark, tmp_path):
     s2 = ck.run_incremental(spark, files, out, transform)
     assert (s2["processed_units"], s2["skipped_units"]) == (1, 2)
     assert ck.read_output(spark, out).count() == 15
-    # df.observe metric from the write job matches the batch's row count
+    # the batch's row count is the sum of its units' counts
     assert s1["rows_written"] == 10 and s2["rows_written"] == 5
     # lineage metrics recorded per unit
     recs = ck.completed_units(out)
