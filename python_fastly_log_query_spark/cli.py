@@ -4,8 +4,10 @@ application instead of a subprocess chain.
 Reference (SURVEY.md §3.1): ``query_logs.py`` shells out to
 ``sync_logs.py`` → ``parse_logs.py`` → ``analyze_logs.py`` with files as
 the IR between processes.  Here each command is a job over one DataFrame
-lineage, and ``query`` composes parse → enrich → route → analyze without
-leaving the JVM/session.
+lineage, and ``query`` composes parse → route → analyze without leaving
+the JVM/session.  ``query`` does not join GeoIP: the package has no real
+GeoIP dimension, and a synthetic one would put invented countries into
+the routed sinks.
 
 Run locally::
 
@@ -154,11 +156,9 @@ def cmd_analyze(args) -> int:
 
 
 def cmd_query(args) -> int:
-    """End-to-end: incremental parse -> enrich -> routed fan-out -> report,
-    one session, one lineage (reference orchestrator scripts/query_logs.py)."""
-    from .datagen import geoip_dim
+    """End-to-end: incremental parse -> routed fan-out -> report, one
+    session, one lineage (reference orchestrator scripts/query_logs.py)."""
     from .operators import report as R
-    from .operators.enrich import enrich_geoip
     from .operators.route import routed_counts, write_routed
     from .plans import checkpoint as ck
     from .sources.logfiles import list_log_files
@@ -172,28 +172,26 @@ def cmd_query(args) -> int:
     parse_out = os.path.join(work, "parsed")
     summary = ck.run_incremental(spark, files, parse_out, _parse_unit)
     parsed = ck.read_output(spark, parse_out, _parsed_checkpoint())
-    enriched = enrich_geoip(parsed, geoip_dim(spark, 256))
     if args.route_by == "service":
-        # ADVICE r1: the enriched log frame has no service column — add it
+        # ADVICE r1: the parsed log frame has no service column — add it
         # via the longest-prefix service resolver before routing.  ADVICE
         # r2 flagged the old join's nondeterministic row key; the resolver
         # is now a per-row when-chain (operators/enrich.py), so no row key
         # exists at all and the checkpoint schema stays unchanged.
         from .operators.enrich import default_service_dim, enrich_service
 
-        enriched = enrich_service(enriched, default_service_dim(spark))
+        parsed = enrich_service(parsed, default_service_dim(spark))
     # the routed write fills this cache; the routed counts and the report
-    # read it instead of joining GeoIP again.  The report ignores the
-    # enrich columns, and the dim's ranges are disjoint, so the left join
-    # keeps exactly one row per parsed row.
-    enriched = enriched.cache()
+    # read it instead of reading the checkpoint again.  The report ignores
+    # the service/tier columns, which add no rows.
+    parsed = parsed.cache()
     routed_dir = os.path.join(work, "routed")
-    write_routed(enriched, routed_dir, args.route_by)
-    counts = {r["route"]: r["rows"] for r in routed_counts(enriched, args.route_by).collect()}
-    report = R.full_report(enriched)
+    write_routed(parsed, routed_dir, args.route_by)
+    counts = {r["route"]: r["rows"] for r in routed_counts(parsed, args.route_by).collect()}
+    report = R.full_report(parsed)
     report_path = os.path.join(work, "report.json")
     R.write_report(report, report_path)
-    enriched.unpersist()
+    parsed.unpersist()
     print(json.dumps({
         "parse": {k: summary[k] for k in ("total_units", "skipped_units", "processed_units")},
         "routed_counts": counts,
@@ -267,7 +265,7 @@ def build_parser() -> argparse.ArgumentParser:
     pa.add_argument("--json", action="store_true", default=False,
                     help="emit raw JSON instead of the console report")
 
-    pq = sub.add_parser("query", help="end-to-end parse -> enrich -> route -> report")
+    pq = sub.add_parser("query", help="end-to-end parse -> route -> report")
     pq.add_argument("--log-dir", required=True)
     pq.add_argument("--workdir", required=True)
     # "lang" routing applies to the documents pipeline (route_column('lang'),

@@ -10,8 +10,9 @@ zstd/parquet landing zones; this source exists for reference parity).
 ``source_file`` is the scan's file path with a local ``file:`` scheme
 stripped, so it equals what :func:`list_log_files` returned (the same
 path the checkpoint keys its units by); ``line_number`` (1-based,
-per file) is a per-partition counter, exact because unsplittable /
-small-file inputs map one file to one partition.
+per file) is a counter within each split (file, ``file_block_start``)
+plus the line count of the file's earlier splits, so it stays exact when
+a plain file larger than ``spark.sql.files.maxPartitionBytes`` is split.
 
 Object stores (reference src/sync/s3_sync.py:62-243 downloads S3 objects
 to local disk first): Spark reads buckets in place — pass ``s3a://bucket/
@@ -35,6 +36,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 _REMOTE_SCHEMES = ("s3a://", "s3://", "gs://", "abfss://", "hdfs://")
 
@@ -70,17 +72,31 @@ def read_log_lines(
     )
     if not line_numbers:
         return df
+    split = ["source_file", "_block"]
+    df = df.withColumn("_block", F.col("_metadata.file_block_start"))
 
     def _number(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-partition running counter; exact per file because a text
-        # partition never spans files and gzip files never split
-        counts: dict[str, int] = {}
+        # running counter per split: a split's lines are contiguous and in
+        # file order within its partition (gzip files are one split)
+        counts: dict[tuple[str, int], int] = {}
         for pdf in batches:
             nums = []
-            for f in pdf["source_file"]:
-                counts[f] = counts.get(f, 0) + 1
-                nums.append(counts[f])
-            pdf = pdf.assign(line_number=pd.Series(nums, index=pdf.index, dtype="int64"))
-            yield pdf
+            for key in zip(pdf["source_file"], pdf["_block"]):
+                counts[key] = counts.get(key, 0) + 1
+                nums.append(counts[key])
+            yield pdf.assign(_n=pd.Series(nums, index=pdf.index, dtype="int64"))
 
-    return df.mapInPandas(_number, schema="text string, source_file string, line_number long")
+    numbered = df.mapInPandas(
+        _number, schema="text string, source_file string, _block long, _n long"
+    )
+    # lines in the file's earlier splits: one row per split, broadcast back
+    # to the numbered lines, which are never shuffled
+    earlier = Window.partitionBy("source_file").orderBy("_block").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offsets = df.groupBy(*split).count().select(
+        *split, F.coalesce(F.sum("count").over(earlier), F.lit(0)).alias("_offset")
+    )
+    return numbered.join(F.broadcast(offsets), split).select(
+        "text", "source_file", (F.col("_n") + F.col("_offset")).alias("line_number")
+    )

@@ -10,9 +10,7 @@ import os
 from python_fastly_log_query_spark import queries
 
 BENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")
-LISTS = ("AGG_QUERIES", "STANDALONE_QUERIES", "DECADES_QUERIES", "SF1_REUSE")
-# SF1_REUSE entries that are bench-local measurements, not registry names
-NOT_REGISTRY = {"SF1_REUSE": {"pipeline", "simhash_neardup_pairs_w64"}}
+LISTS = ("AGG_QUERIES", "STANDALONE_QUERIES")
 
 
 def _bench_lists() -> dict[str, list[str]]:
@@ -33,7 +31,5 @@ def test_bench_lists_name_registered_queries():
     registered = set(queries.queries())
     for name, entries in lists.items():
         assert entries, name
-        extra = NOT_REGISTRY.get(name, set())
-        assert extra <= set(entries), name
-        missing = [q for q in entries if q not in registered and q not in extra]
+        missing = [q for q in entries if q not in registered]
         assert not missing, (name, missing)

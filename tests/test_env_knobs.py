@@ -22,9 +22,6 @@ ALLOWED = {
     "SPARK_GRAFT_TESTDATA": "root of the generated sf* test tables",
     "SPARK_GRAFT_PARITY_SF": "scale label of the oracle-parity sweep (sf0.001 by default)",
     "SPARK_GRAFT_SF_DIR": "input tables of the bench.py / bench_extra.py runs",
-    "SPARK_GRAFT_SF1": "0 skips bench.py's 10x sweep",
-    "SPARK_GRAFT_SF1_BUDGET": "wall-time budget of bench.py's 10x sweep",
-    "SPARK_GRAFT_DECADES_BUDGET": "wall-time budget of bench.py --scale-decades",
 }
 
 _NAME = re.compile(r"SPARK_GRAFT_[A-Z0-9_]+")

@@ -208,8 +208,8 @@ def _logical_nodes(plan) -> list[str]:
 
 
 def test_query_routed_counts_read_the_enriched_cache(spark, tmp_path, monkeypatch):
-    """The routed counts scan the cache the routed write filled: no second
-    GeoIP join."""
+    """The routed counts scan the cache the routed write filled, with no
+    join on top of it."""
     from python_fastly_log_query_spark.operators import route
 
     seen, plain_counts = [], route.routed_counts
@@ -235,7 +235,8 @@ def test_query_resume_rewrites_the_same_outputs(spark, tmp_path, capsys, route_b
     """A second `cli query` on the same workdir parses nothing, reads the
     checkpoint back with its declared schema and writes the same routed
     counts and report bytes; those bytes equal a report over the parsed
-    frame alone, so the enrich columns added no row."""
+    frame alone.  No synthetic GeoIP dim is joined, so the routed sinks
+    carry no country or asn column."""
     from python_fastly_log_query_spark.plans import checkpoint as ck
 
     logs, work = str(tmp_path / "logs"), str(tmp_path / "work")
@@ -256,6 +257,8 @@ def test_query_resume_rewrites_the_same_outputs(spark, tmp_path, capsys, route_b
     R.write_report(R.full_report(ck.read_output(spark, os.path.join(work, "parsed"))), plain)
     with open(plain, "rb") as f:
         assert f.read() == reports[0]
+    routed = spark.read.parquet(os.path.join(work, "routed")).columns
+    assert not {"country", "asn"} & set(routed), routed
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "json", "csv"])

@@ -71,6 +71,28 @@ def test_log_file_source_lineage(spark, tmp_path):
         assert sorted(nums) == [1, 2, 3, 4, 5]
 
 
+def test_line_numbers_span_the_splits_of_one_file(spark, tmp_path):
+    """A plain file larger than maxPartitionBytes is read in several
+    splits; its numbering must not restart in each one."""
+    d = tmp_path / "logs"
+    d.mkdir()
+    big = [LINE.format(s=n % 60, code=200) + f" n={n}" for n in range(1, 2001)]
+    (d / "big.log").write_text("\n".join(big) + "\n")
+    with gzip.open(d / "small.log.gz", "wt") as f:
+        f.write("\n".join(f"gz n={n}" for n in range(1, 301)) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(16 * 1024))
+    try:
+        df = read_log_lines(spark, str(d))
+        assert df.rdd.getNumPartitions() > 2
+        rows = df.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(rows) == 2300
+    assert all(r.line_number == int(r.text.rsplit("n=", 1)[1]) for r in rows)
+
+
 # ---------------------------------------------------------------- S7-S9
 
 
