@@ -1,16 +1,17 @@
 #!/usr/bin/env python
-"""Per-query measurement helper for the optimization rounds (guide §1.4).
+"""Per-query timing tool: the way to time one registered query, or a
+few, in isolation (``bench.py`` times the whole sweep).
 
-NOT part of the driver contract — ``bench.py`` stays frozen.  This tool
-reproduces bench.py's measurement protocol (best-of-3 noop-sink runs with
-``release_persists()`` + a JVM ``System.gc()`` before each) for an
-arbitrary subset of registered queries, so a single query can be isolated
-and re-timed in seconds instead of re-running the whole bench.
+NOT part of the driver contract.  It uses bench.py's measurement protocol
+(best-of-3 noop-sink runs with ``release_persists()`` + a JVM
+``System.gc()`` before each) for an arbitrary subset of registered
+queries, so a single query can be re-timed in seconds instead of
+re-running the whole bench.
 
 Usage:
     python bench_extra.py q1 q2 ...          # time the named queries
     python bench_extra.py --explain q1 ...   # print .explain("formatted")
-    python bench_extra.py --reps 5 q1        # best-of-N
+    python bench_extra.py --reps 5 q1        # best-of-N (also --reps=5)
     SPARK_GRAFT_SF_DIR=... overrides the data dir (default sf0.1).
 """
 
@@ -32,12 +33,18 @@ WARM_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    explain = "--explain" in sys.argv
+    argv = sys.argv[1:]
+    explain = "--explain" in argv
     reps = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1]) if "=" in a else int(a.removeprefix("--reps"))
+    args = []
+    while argv:
+        a = argv.pop(0)
+        if a == "--reps":
+            reps = int(argv.pop(0))
+        elif a.startswith("--reps="):
+            reps = int(a.split("=", 1)[1])
+        elif not a.startswith("--"):
+            args.append(a)
     spark = get_spark("bench_extra")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = Q.queries()

@@ -149,13 +149,8 @@ def _split_query(full_path: Optional[str]):
     return path, qs, params
 
 
-# which capture-group / probe feeds which output column
-_FAST_GROUPS = {
-    "priority": 0, "timestamp": 1, "cache_server": 2, "process": 3, "pid": 4,
-    "ip_address": 5, "referrer1": 6, "referrer2": 7, "date_string": 8,
-    "http_method": 9, "_full_path": 10, "status_code": 11, "response_size": 12,
-    "referrer": 13, "user_agent": 14, "cache_status": 15,
-}
+# the fields the full-line pattern captures
+_FAST_FIELDS = frozenset(field for field, _ in _LINE_SEGMENTS)
 _INT_COLS = frozenset({"priority", "pid", "status_code", "response_size"})
 _PATH_COLS = ("path", "query_string", "query_params")
 
@@ -184,7 +179,7 @@ def parse_lines_pdf(lines: pd.Series, columns: list[str] | None = None) -> pd.Da
 
     nonblank = (raw.notna() & (raw != "")).fillna(False).astype(bool)
 
-    want_fields = {c for c in _FAST_GROUPS if c in want}
+    want_fields = want & _FAST_FIELDS
     if need_path:
         want_fields.add("_full_path")
 

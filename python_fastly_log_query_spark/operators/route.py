@@ -33,21 +33,13 @@ def with_route(df: DataFrame, kind: str = "status_class") -> DataFrame:
 
 
 def write_routed(
-    df: DataFrame,
-    base_path: str,
-    kind: str = "status_class",
-    fmt: str = "parquet",
-    mode: str = "overwrite",
+    df: DataFrame, base_path: str, kind: str = "status_class"
 ) -> DataFrame:
-    """Fan-out write: one job, ``partitionBy('route')`` → one sink dir per
-    route under ``base_path``.  Returns the routed DF (for count checks)."""
+    """Fan-out write: one job, ``partitionBy('route')`` → one parquet sink
+    dir per route under ``base_path``, replacing what was there.  Returns
+    the routed DF (for count checks)."""
     routed = with_route(df, kind)
-    (
-        routed.write.mode(mode)
-        .partitionBy("route")
-        .format(fmt)
-        .save(base_path)
-    )
+    routed.write.mode("overwrite").partitionBy("route").parquet(base_path)
     return routed
 
 

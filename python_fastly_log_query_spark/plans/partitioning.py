@@ -47,9 +47,10 @@ def read_date_range(
     return df
 
 
-def spread(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure a compute-heavy operator sees enough input partitions to use
-    the cluster.
+    the cluster: fewer than half of defaultParallelism (and at least 2)
+    input partitions get a repartition to defaultParallelism.
 
     Small-file inputs (one parquet file = one split) otherwise serialize an
     expensive projection onto a single task — measured 264s -> 2.4s for
@@ -63,7 +64,7 @@ def spread(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
         # from maxFilesPerTrigger / source partitioning instead
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, int(target * min_fraction)):
+    if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
 

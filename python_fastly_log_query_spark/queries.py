@@ -13,7 +13,6 @@ parse→aggregate pipeline end-to-end.
 
 from __future__ import annotations
 
-import contextlib
 import os
 from collections.abc import Callable
 
@@ -30,12 +29,15 @@ from .plans.lasthours import filter_last_hours
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
-_REGISTRY: dict[str, tuple[SparkQuery, str | None]] = {}
+_REGISTRY: dict[str, tuple[SparkQuery, str | None, dict[str, str]]] = {}
 
 
-def register(name: str, sql: str | None):
+def register(name: str, sql: str | None, conf: dict[str, str] | None = None):
+    """Register ``fn`` under ``name`` with its DuckDB oracle ``sql``;
+    ``conf`` is the session conf the query needs while it runs."""
+
     def deco(fn: SparkQuery) -> SparkQuery:
-        _REGISTRY[name] = (fn, sql)
+        _REGISTRY[name] = (fn, sql, conf or {})
         return fn
 
     return deco
@@ -1599,28 +1601,16 @@ def _scratch_root() -> str:
 
 
 # Stateful-operator partition count for the streaming drains (opt r6).
+_STREAM_STATE_PARTITIONS = 8
+
+# Session pins a registered query declares (``register(..., conf=...)``);
+# the registry wrapper sets them around the call and restores them after.
+
 # A stateful operator's partition count freezes at checkpoint creation
 # and EVERY state partition pays fixed open/commit cost per micro-batch,
 # so it must be sized to the horizon's event volume — not inherited from
 # the session's scan/shuffle default; 8 covers every test scale.
-_STREAM_STATE_PARTITIONS = 8
-
-
-@contextlib.contextmanager
-def _shuffle_partitions(spark: SparkSession, n: int):
-    """Pin ``spark.sql.shuffle.partitions`` to ``n`` inside the block,
-    restoring the session value after."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _stream_drain_parts(spark: SparkSession):
-    return _shuffle_partitions(spark, _STREAM_STATE_PARTITIONS)
-
+_STREAM_DRAIN = {"spark.sql.shuffle.partitions": str(_STREAM_STATE_PARTITIONS)}
 
 # Shuffle sizing for HOST-DIMENSION fixpoint iterations (opt r6).  The
 # webgraph loops (pagerank/HITS/SCC/coreness/LPA/BFS) iterate frames
@@ -1630,17 +1620,13 @@ def _stream_drain_parts(spark: SparkSession):
 # schedules `partitions` tasks for a dim-sized frame, and the eager
 # per-round checkpoints re-materialize all of them.  Pin a small static
 # partition count (guide §2: derive partitioning from input size, not a
-# constant tuned to either geometry), restored on exit so the
-# surrounding query still runs under the session config.  AQE stays ON
+# constant tuned to either geometry), restored on exit so the lazy frame
+# the query returns still runs under the session config.  AQE stays ON
 # — the measured sweep (pagerank/LPA/HITS/SCC/coreness/centrality/
 # triangles/BFS at sf0.1) showed partitions=4 + AQE beating both the
 # session default and partitions=4 + AQE-off (which regressed the
 # broadcast-join-heavy triangle plan 0.9s -> 1.7s).
-_DIM_ITER_PARTS = 4
-
-
-def _dim_iteration_conf(spark: SparkSession):
-    return _shuffle_partitions(spark, _DIM_ITER_PARTS)
+_DIM_ITERATION = {"spark.sql.shuffle.partitions": "4"}
 
 
 def _stream_scratch(spark: SparkSession, family: str) -> tuple[str, str]:
@@ -1661,6 +1647,40 @@ def _stream_scratch(spark: SparkSession, family: str) -> tuple[str, str]:
     return work, name
 
 
+def _land_log_stream(
+    spark: SparkSession,
+    sf: str,
+    family: str,
+    columns: list[str],
+    max_files_per_trigger: int | None = None,
+) -> tuple[str, str, DataFrame]:
+    """Land the oracle log corpus as a parquet table of
+    ``_STREAM_STATE_PARTITIONS`` files under a fresh scratch dir and read
+    it back as a grok-parsed stream of ``columns``.  Returns the scratch
+    dir, the sink/query name and the parsed stream.
+
+    The landing write fans to the stream sizing (opt r6): a single-file
+    src runs every micro-batch's pandas parse as ONE task, while
+    defaultParallelism-many files pay file-count write/listing/commit
+    overhead a 100k-row batch never recoups (measured: 8-file drain 0.57s
+    vs 32-file 0.75-1.5s; AvailableNow with no trigger cap still drains
+    all files as ONE batch)."""
+    from .streaming.jobs import stream_parse_docs
+
+    work, name = _stream_scratch(spark, family)
+    oc.log_lines(spark, sf).repartition(_STREAM_STATE_PARTITIONS).write.mode(
+        "overwrite"
+    ).parquet(f"{work}/src")
+    parsed = stream_parse_docs(
+        spark,
+        f"{work}/src",
+        columns=columns,
+        schema="event_id long, text string",
+        max_files_per_trigger=max_files_per_trigger,
+    )
+    return work, name, parsed
+
+
 @register(
     "streaming_hourly_rollup",
     L
@@ -1671,6 +1691,7 @@ FROM logs
 WHERE ts_s IS NOT NULL
 GROUP BY 1, 2
 """,
+    conf=_STREAM_DRAIN,
 )
 def q_streaming_hourly_rollup(spark, sf):
     """Structured Streaming end-to-end with a FULL batch oracle (SURVEY
@@ -1685,29 +1706,14 @@ def q_streaming_hourly_rollup(spark, sf):
     batching-invariant).  Fresh checkpoint + source land per call: the
     exactly-once contract would otherwise skip reprocessing on re-runs.
     """
-    from . import oracle_corpus as oc
-    from .streaming.jobs import hourly_rollup, run_available_now, stream_parse_docs
+    from .streaming.jobs import hourly_rollup, run_available_now
 
-    work, name = _stream_scratch(spark, "stream_rollup")
-    # fan the landing write to the stream sizing (opt r6): a
-    # single-file src runs every micro-batch's pandas parse as ONE
-    # task, while defaultParallelism-many files pay file-count
-    # write/listing/commit overhead a 100k-row batch never recoups
-    # (measured: 8-file drain 0.57s vs 32-file 0.75-1.5s; AvailableNow
-    # with no trigger cap still drains all files as ONE batch)
-    oc.log_lines(spark, sf).repartition(
-        _STREAM_STATE_PARTITIONS
-    ).write.mode("overwrite").parquet(f"{work}/src")
-    parsed = stream_parse_docs(
-        spark,
-        f"{work}/src",
-        columns=["timestamp", "status_code"],
-        schema="event_id long, text string",
+    work, name, parsed = _land_log_stream(
+        spark, sf, "stream_rollup", ["timestamp", "status_code"]
     )
-    with _stream_drain_parts(spark):
-        run_available_now(
-            hourly_rollup(parsed), f"{work}/ckpt", queryName=name, outputMode="complete"
-        )
+    run_available_now(
+        hourly_rollup(parsed), f"{work}/ckpt", queryName=name, outputMode="complete"
+    )
     return spark.table(name)
 
 
@@ -2065,6 +2071,7 @@ def _top_ip_sessions(per_session):
 @register(
     "streaming_exact_dedup",
     "SELECT CAST(count(DISTINCT text) AS BIGINT) AS unique_docs FROM documents",
+    conf=_STREAM_DRAIN,
 )
 def q_streaming_exact_dedup(spark, sf):
     """Dedup at INGESTION — the exactly-once GLOBAL variant: streamed
@@ -2089,10 +2096,9 @@ def q_streaming_exact_dedup(spark, sf):
         .withColumn("fp", F.md5("text"))
         .dropDuplicates(["fp"])
     )
-    with _stream_drain_parts(spark):
-        run_available_now(
-            deduped.select("fp"), f"{work}/ckpt", queryName=name, outputMode="append"
-        )
+    run_available_now(
+        deduped.select("fp"), f"{work}/ckpt", queryName=name, outputMode="append"
+    )
     return spark.table(name).agg(F.count(F.lit(1)).alias("unique_docs"))
 
 
@@ -2180,6 +2186,12 @@ _ROCKSDB_PROVIDER = (
 @register(
     "streaming_dedup_bounded_state",
     "SELECT CAST(count(DISTINCT text) AS BIGINT) AS unique_docs FROM documents",
+    # every state partition owns a RocksDB instance with fixed
+    # open/commit cost per micro-batch: size it like every other drain
+    conf={
+        **_STREAM_DRAIN,
+        "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+    },
 )
 def q_streaming_dedup_bounded_state(spark, sf):
     """Ingestion dedup with BOUNDED state (VERDICT r3 item 3): duplicates
@@ -2214,22 +2226,10 @@ def q_streaming_dedup_bounded_state(spark, sf):
         F.timestamp_seconds(1_700_000_000 + F.col("doc_id") % 3600).alias("event_ts"),
     )
     deduped = dedup_within_watermark(stream, "fp", "event_ts", "2 hours")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
-    # every state partition owns a RocksDB instance with fixed
-    # open/commit cost per micro-batch: size it like every other drain
-    try:
-        with _stream_drain_parts(spark):
-            q = run_available_now(
-                deduped.select("fp"), f"{work}/ckpt", queryName=name,
-                outputMode="append",
-            )
-        LAST_STREAM_STATE_METRICS["streaming_dedup_bounded_state"] = state_metrics(q)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    q = run_available_now(
+        deduped.select("fp"), f"{work}/ckpt", queryName=name, outputMode="append"
+    )
+    LAST_STREAM_STATE_METRICS["streaming_dedup_bounded_state"] = state_metrics(q)
     return spark.table(name).agg(F.count(F.lit(1)).alias("unique_docs"))
 
 
@@ -2363,6 +2363,7 @@ SELECT ip_address, CAST(count(*) AS BIGINT) AS total_requests
 FROM logs WHERE ip_address IS NOT NULL
 GROUP BY 1
 """,
+    conf=_STREAM_DRAIN,
 )
 def q_streaming_ip_totals(spark, sf):
     """The CUSTOM STATEFUL operator under a full value oracle:
@@ -2373,27 +2374,15 @@ def q_streaming_ip_totals(spark, sf):
     must equal the plain batch GROUP BY count.  Closes §2.9's last
     rows-only gap: every streaming operator family (rollup, dedup,
     stateful) now carries a DuckDB-checked value contract."""
-    from .streaming.jobs import (
-        ip_request_rate_stream,
-        run_available_now,
-        stream_parse_docs,
-    )
+    from .streaming.jobs import ip_request_rate_stream, run_available_now
 
-    work, name = _stream_scratch(spark, "stream_ip_totals")
-    oc.log_lines(spark, sf).repartition(
-        _STREAM_STATE_PARTITIONS
-    ).write.mode("overwrite").parquet(f"{work}/src")
-    parsed = stream_parse_docs(
-        spark,
-        f"{work}/src",
-        columns=["timestamp", "ip_address"],
-        schema="event_id long, text string",
+    work, name, parsed = _land_log_stream(
+        spark, sf, "stream_ip_totals", ["timestamp", "ip_address"]
     )
-    with _stream_drain_parts(spark):
-        run_available_now(
-            ip_request_rate_stream(parsed), f"{work}/ckpt", queryName=name,
-            outputMode="update",
-        )
+    run_available_now(
+        ip_request_rate_stream(parsed), f"{work}/ckpt", queryName=name,
+        outputMode="update",
+    )
     return (
         spark.table(name)
         .groupBy("ip_address")
@@ -2413,17 +2402,8 @@ def q_streaming_routed_counts(spark, sf):
     fan-out is row-equal to the batch fan-out on the same corpus."""
     from pyspark.sql import functions as _F
 
-    from .streaming.jobs import stream_parse_docs
-
-    work, name = _stream_scratch(spark, "stream_routed")
-    oc.log_lines(spark, sf).repartition(
-        _STREAM_STATE_PARTITIONS
-    ).write.mode("overwrite").parquet(f"{work}/src")
-    parsed = stream_parse_docs(
-        spark,
-        f"{work}/src",
-        columns=["timestamp", "status_code"],
-        schema="event_id long, text string",
+    work, name, parsed = _land_log_stream(
+        spark, sf, "stream_routed", ["timestamp", "status_code"]
     )
     routed = parsed.withColumn("route", status_class(F.col("status_code")))
     q = (
@@ -3699,7 +3679,9 @@ def _bpe_merges_oracle() -> str:
     return f"WITH {_BPE_WF},\n{ctes}\n{final}"
 
 
-@register("bpe_merges", _bpe_merges_oracle())
+# vocabulary-dim fixpoint: same shuffle sizing as the host-graph loops
+# (measured 1.84 -> 1.29s at sf0.1; opt r6)
+@register("bpe_merges", _bpe_merges_oracle(), conf=_DIM_ITERATION)
 def q_bpe_merges(spark, sf):
     """BPE tokenizer vocabulary TRAINED IN-ENGINE (operators/bpe.py,
     Sennrich et al. 2016): one corpus scan builds the word-frequency
@@ -3715,10 +3697,7 @@ def q_bpe_merges(spark, sf):
     from .operators.bpe import bpe_train
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    # vocabulary-dim fixpoint: same shuffle sizing as the host-graph
-    # loops (measured 1.84 -> 1.29s at sf0.1; opt r6)
-    with _dim_iteration_conf(spark):
-        return bpe_train(spark, docs, num_merges=_BPE_K)
+    return bpe_train(spark, docs, num_merges=_BPE_K)
 
 
 def _bpe_tokens_oracle() -> str:
@@ -3756,7 +3735,7 @@ FROM tok GROUP BY doc_id
 """
 
 
-@register("bpe_token_stats", _bpe_tokens_oracle())
+@register("bpe_token_stats", _bpe_tokens_oracle(), conf=_DIM_ITERATION)
 def q_bpe_token_stats(spark, sf):
     """The learned BPE vocabulary APPLIED to the corpus
     (operators/bpe.py:bpe_apply): per-word representation, the K
@@ -3770,11 +3749,10 @@ def q_bpe_token_stats(spark, sf):
     from .operators.bpe import bpe_apply, bpe_train
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        merges = [
-            (r.lhs, r.rhs)
-            for r in bpe_train(spark, docs, num_merges=_BPE_K).collect()
-        ]
+    merges = [
+        (r.lhs, r.rhs)
+        for r in bpe_train(spark, docs, num_merges=_BPE_K).collect()
+    ]
     toked = bpe_apply(docs, merges)
     return toked.select(
         "doc_id",
@@ -3920,7 +3898,7 @@ def _wg_pagerank_oracle() -> str:
     return f"WITH {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_pagerank", _wg_pagerank_oracle())
+@register("host_pagerank", _wg_pagerank_oracle(), conf=_DIM_ITERATION)
 def q_host_pagerank(spark, sf):
     """Integer-exact PageRank over the extracted host graph
     (operators/webgraph.py:pagerank, 5 rounds, d=0.85, scores scaled
@@ -3934,9 +3912,8 @@ def q_host_pagerank(spark, sf):
     from .operators.webgraph import extract_outlinks, pagerank
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        edges = extract_outlinks(_wg_pages_spark(docs))
-        return pagerank(edges, iterations=5)
+    edges = extract_outlinks(_wg_pages_spark(docs))
+    return pagerank(edges, iterations=5)
 
 
 # ------------------------------------------------- host boilerplate lines
@@ -4608,7 +4585,7 @@ def _wg_lpa_oracle() -> str:
     return f"WITH {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_communities", _wg_lpa_oracle())
+@register("host_communities", _wg_lpa_oracle(), conf=_DIM_ITERATION)
 def q_host_communities(spark, sf):
     """Host communities via deterministic synchronous label propagation
     (operators/webgraph.py:label_propagation, 4 rounds) over the
@@ -4624,9 +4601,8 @@ def q_host_communities(spark, sf):
     from .operators.webgraph import extract_outlinks, label_propagation
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        edges = extract_outlinks(_wg_pages_spark(docs))
-        return label_propagation(edges, iterations=4)
+    edges = extract_outlinks(_wg_pages_spark(docs))
+    return label_propagation(edges, iterations=4)
 
 
 def _normalize_oracle() -> str:
@@ -5725,7 +5701,7 @@ FROM pr
 """
 
 
-@register("crawl_budget_tiers", _budget_tiers_oracle())
+@register("crawl_budget_tiers", _budget_tiers_oracle(), conf=_DIM_ITERATION)
 def q_crawl_budget_tiers(spark, sf):
     """Crawl-budget allocation: hosts quartiled by integer-exact
     PageRank (`ntile(4)` over (pr DESC, host)) — tier 1 gets the deep
@@ -5738,8 +5714,7 @@ def q_crawl_budget_tiers(spark, sf):
     from .operators.webgraph import extract_outlinks, pagerank
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        pr = pagerank(extract_outlinks(_wg_pages_spark(docs)), iterations=5)
+    pr = pagerank(extract_outlinks(_wg_pages_spark(docs)), iterations=5)
     w = Window.orderBy(F.desc("pr"), F.asc("host"))
     return pr.select(
         "host", "pr", F.ntile(4).over(w).cast("long").alias("tier")
@@ -5989,7 +5964,7 @@ def _wg_hits_oracle() -> str:
     return f"WITH {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_hits", _wg_hits_oracle())
+@register("host_hits", _wg_hits_oracle(), conf=_DIM_ITERATION)
 def q_host_hits(spark, sf):
     """HITS hub/authority scores over the extracted host graph
     (operators/webgraph.py:hits, 3 rounds, integer max-normalization):
@@ -6003,9 +5978,8 @@ def q_host_hits(spark, sf):
     from .operators.webgraph import extract_outlinks, hits
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        edges = extract_outlinks(_wg_pages_spark(docs))
-        return hits(edges, iterations=3)
+    edges = extract_outlinks(_wg_pages_spark(docs))
+    return hits(edges, iterations=3)
 
 
 # ---------------------------------------------------- MAD outlier audit
@@ -6204,6 +6178,7 @@ SELECT CAST(win_start AS TIMESTAMP) AS win_start, status_code,
        count(*) AS requests
 FROM e2 GROUP BY 1, 2
 """,
+    conf=_STREAM_DRAIN,
 )
 def q_streaming_hopping_rollup(spark, sf):
     """Streaming twin of hopping_window_rollup (streaming/jobs.py:
@@ -6214,24 +6189,15 @@ def q_streaming_hopping_rollup(spark, sf):
     streaming_hourly_rollup.  Watermark eviction applies per overlapping
     window, so state is (size/slide) x the tumbling rollup's — still
     bounded by the late-data horizon, never by stream length."""
-    from . import oracle_corpus as oc
-    from .streaming.jobs import hopping_rollup, run_available_now, stream_parse_docs
+    from .streaming.jobs import hopping_rollup, run_available_now
 
-    work, name = _stream_scratch(spark, "stream_hop")
-    oc.log_lines(spark, sf).repartition(
-        _STREAM_STATE_PARTITIONS
-    ).write.mode("overwrite").parquet(f"{work}/src")
-    parsed = stream_parse_docs(
-        spark,
-        f"{work}/src",
-        columns=["timestamp", "status_code"],
-        schema="event_id long, text string",
+    work, name, parsed = _land_log_stream(
+        spark, sf, "stream_hop", ["timestamp", "status_code"]
     )
-    with _stream_drain_parts(spark):
-        run_available_now(
-            hopping_rollup(parsed), f"{work}/ckpt", queryName=name,
-            outputMode="complete",
-        )
+    run_available_now(
+        hopping_rollup(parsed), f"{work}/ckpt", queryName=name,
+        outputMode="complete",
+    )
     return spark.table(name)
 
 
@@ -6306,7 +6272,7 @@ FROM pr5 p JOIN tr5 t USING (host)
     return f"WITH {_WG_EDGES_SQL}, {pr_ctes}, {tr_ctes} {final}"
 
 
-@register("host_trustrank", _wg_trustrank_oracle())
+@register("host_trustrank", _wg_trustrank_oracle(), conf=_DIM_ITERATION)
 def q_host_trustrank(spark, sf):
     """TrustRank + spam mass (operators/webgraph.py:pagerank with
     personalized teleport, Gyöngyi et al. 2004): authority re-walked
@@ -6319,12 +6285,11 @@ def q_host_trustrank(spark, sf):
     from .operators.webgraph import extract_outlinks, pagerank
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        edges = extract_outlinks(_wg_pages_spark(docs)).localCheckpoint()
-        pr = pagerank(edges, iterations=5)
-        tr = pagerank(
-            edges, iterations=5, personalize=_TR_SEEDS
-        ).withColumnRenamed("pr", "tr")
+    edges = extract_outlinks(_wg_pages_spark(docs)).localCheckpoint()
+    pr = pagerank(edges, iterations=5)
+    tr = pagerank(
+        edges, iterations=5, personalize=_TR_SEEDS
+    ).withColumnRenamed("pr", "tr")
     j = pr.join(tr, "host")
     return j.select(
         "host",
@@ -6508,7 +6473,7 @@ def _wg_bfs_oracle() -> str:
     return f"WITH {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_crawl_depths", _wg_bfs_oracle())
+@register("host_crawl_depths", _wg_bfs_oracle(), conf=_DIM_ITERATION)
 def q_host_crawl_depths(spark, sf):
     """BFS link-hop distance from the trusted seed set over the host
     graph (operators/webgraph.py:bfs_depths, 4 unrolled rounds): the
@@ -6521,8 +6486,7 @@ def q_host_crawl_depths(spark, sf):
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     edges = extract_outlinks(_wg_pages_spark(docs))
-    with _dim_iteration_conf(spark):
-        return bfs_depths(edges, ["site0.com"], max_depth=4)
+    return bfs_depths(edges, ["site0.com"], max_depth=4)
 
 
 # ----------------------------------------------------- k-center diversity
@@ -6651,7 +6615,7 @@ def q_cdc_scd2_history(spark, sf):
 # -------------------------------------------------------- streaming CDC
 
 
-@register("streaming_cdc_snapshot", _CDC_SNAPSHOT_SQL)
+@register("streaming_cdc_snapshot", _CDC_SNAPSHOT_SQL, conf=_STREAM_DRAIN)
 def q_streaming_cdc_snapshot(spark, sf):
     """Streaming CDC materialization (streaming/jobs.py:
     cdc_materialize_stream): the changelog lands as a 4-file parquet
@@ -6680,13 +6644,12 @@ def q_streaming_cdc_snapshot(spark, sf):
         "event_type string, value double",
         max_files_per_trigger=1,
     )
-    with _stream_drain_parts(spark):
-        run_available_now(
-            cdc_materialize_stream(chg),
-            f"{work}/ckpt",
-            queryName=name,
-            outputMode="update",
-        )
+    run_available_now(
+        cdc_materialize_stream(chg),
+        f"{work}/ckpt",
+        queryName=name,
+        outputMode="update",
+    )
     snap = spark.table(name)
     latest = snap.groupBy("k").agg(
         F.max_by(
@@ -7093,6 +7056,7 @@ GROUP BY 1
 ORDER BY attributed DESC, ip_address ASC
 LIMIT 20
 """,
+    conf=_STREAM_DRAIN,
 )
 def q_streaming_error_attribution(spark, sf):
     """Stream-stream interval join (streaming/jobs.py:
@@ -7161,11 +7125,10 @@ def q_streaming_error_attribution(spark, sf):
         sreq, serr, "req_ip", "err_ip", "req_ts", "err_ts", 21600,
         watermark=f"{horizon_s} seconds",
     )
-    with _stream_drain_parts(spark):
-        q = run_available_now(
-            joined.select("req_ip"), f"{work}/ckpt", queryName=name,
-            outputMode="append",
-        )
+    q = run_available_now(
+        joined.select("req_ip"), f"{work}/ckpt", queryName=name,
+        outputMode="append",
+    )
     LAST_STREAM_STATE_METRICS["streaming_error_attribution"] = state_metrics(q)
     return (
         spark.table(name)
@@ -7536,7 +7499,7 @@ def q_wav_decode_meta(spark, sf):
 # ----------------------------------------------- streaming sessionization
 
 
-@register("streaming_ip_sessions", _REGISTRY["ip_sessions"][1])
+@register("streaming_ip_sessions", _REGISTRY["ip_sessions"][1], conf=_STREAM_DRAIN)
 def q_streaming_ip_sessions(spark, sf):
     """Sessionization ON THE STREAM — the native ``session_window``
     aggregate under Structured Streaming (streaming/jobs.py:
@@ -7552,25 +7515,15 @@ def q_streaming_ip_sessions(spark, sf):
     per live session per key; complete mode here is the backfill shape,
     and the production configuration adds a watermark so closed
     sessions evict — the streaming twin of the rollup family's dial."""
-    from . import oracle_corpus as oc
-    from .streaming.jobs import run_available_now, session_rollup, stream_parse_docs
+    from .streaming.jobs import run_available_now, session_rollup
 
-    work, name = _stream_scratch(spark, "stream_sess")
-    oc.log_lines(spark, sf).repartition(8).write.mode("overwrite").parquet(
-        f"{work}/src"
+    work, name, parsed = _land_log_stream(
+        spark, sf, "stream_sess", ["timestamp", "ip_address"], max_files_per_trigger=2
     )
-    parsed = stream_parse_docs(
-        spark,
-        f"{work}/src",
-        columns=["timestamp", "ip_address"],
-        schema="event_id long, text string",
-        max_files_per_trigger=2,
+    run_available_now(
+        session_rollup(parsed), f"{work}/ckpt", queryName=name,
+        outputMode="complete",
     )
-    with _stream_drain_parts(spark):
-        run_available_now(
-            session_rollup(parsed), f"{work}/ckpt", queryName=name,
-            outputMode="complete",
-        )
     return _top_ip_sessions(spark.table(name))
 
 
@@ -7584,7 +7537,7 @@ def _triangle_oracle() -> str:
     return f"WITH {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_triangle_stats", _triangle_oracle())
+@register("host_triangle_stats", _triangle_oracle(), conf=_DIM_ITERATION)
 def q_host_triangle_stats(spark, sf):
     """Per-host triangle counts + integer clustering coefficient over
     the host link graph (operators/webgraph.py:triangle_stats) — the
@@ -7598,8 +7551,7 @@ def q_host_triangle_stats(spark, sf):
     from .operators.webgraph import extract_outlinks, triangle_stats
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        return triangle_stats(extract_outlinks(_wg_pages_spark(docs)))
+    return triangle_stats(extract_outlinks(_wg_pages_spark(docs)))
 
 
 def _editdist_auto_oracle() -> str:
@@ -7711,18 +7663,8 @@ def q_streaming_enriched_counts(spark, sf):
     At 10^12 rows/day this is the canonical enrich topology: the dim is
     broadcast once per batch, the fact side never shuffles."""
     from .datagen import geoip_dim
-    from .streaming.jobs import stream_parse_docs
 
-    work, name = _stream_scratch(spark, "stream_enrich")
-    oc.log_lines(spark, sf).repartition(
-        _STREAM_STATE_PARTITIONS
-    ).write.mode("overwrite").parquet(f"{work}/src")
-    parsed = stream_parse_docs(
-        spark,
-        f"{work}/src",
-        columns=["ip_address"],
-        schema="event_id long, text string",
-    )
+    work, name, parsed = _land_log_stream(spark, sf, "stream_enrich", ["ip_address"])
     enriched = enrich_geoip(parsed, geoip_dim(spark, 256)).select("country")
     q = (
         enriched.writeStream.format("parquet")
@@ -7748,7 +7690,7 @@ def _scc_oracle() -> str:
     return f"WITH RECURSIVE {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_scc", _scc_oracle())
+@register("host_scc", _scc_oracle(), conf=_DIM_ITERATION)
 def q_host_scc(spark, sf):
     """Strongly connected components of the DIRECTED host graph
     (operators/webgraph.py:scc_components) — mutual-reachability
@@ -7766,8 +7708,7 @@ def q_host_scc(spark, sf):
     from .operators.webgraph import extract_outlinks, scc_components
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        return scc_components(extract_outlinks(_wg_pages_spark(docs)))
+    return scc_components(extract_outlinks(_wg_pages_spark(docs)))
 
 
 @register(
@@ -7809,7 +7750,7 @@ def _centrality_oracle() -> str:
     return f"WITH RECURSIVE {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_centrality_stats", _centrality_oracle())
+@register("host_centrality_stats", _centrality_oracle(), conf=_DIM_ITERATION)
 def q_host_centrality_stats(spark, sf):
     """All-pairs harmonic centrality + eccentricity on the directed host
     graph (operators/webgraph.py:centrality_stats) — Boldi & Vigna's
@@ -7825,8 +7766,7 @@ def q_host_centrality_stats(spark, sf):
     from .operators.webgraph import centrality_stats, extract_outlinks
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        return centrality_stats(extract_outlinks(_wg_pages_spark(docs)))
+    return centrality_stats(extract_outlinks(_wg_pages_spark(docs)))
 
 
 @register(
@@ -8210,7 +8150,7 @@ def _coreness_oracle() -> str:
     return f"WITH {_WG_EDGES_SQL}, {ctes} {final}"
 
 
-@register("host_coreness", _coreness_oracle())
+@register("host_coreness", _coreness_oracle(), conf=_DIM_ITERATION)
 def q_host_coreness(spark, sf):
     """k-core number of every host in the link graph
     (operators/webgraph.py:coreness) — the global density hierarchy
@@ -8226,8 +8166,7 @@ def q_host_coreness(spark, sf):
     from .operators.webgraph import coreness, extract_outlinks
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with _dim_iteration_conf(spark):
-        return coreness(extract_outlinks(_wg_pages_spark(docs)), rounds=8)
+    return coreness(extract_outlinks(_wg_pages_spark(docs)), rounds=8)
 
 
 def _encoding_oracle() -> str:
@@ -8511,10 +8450,14 @@ def q_table_stats_report(spark, sf):
     return table_stats(ev, ["event_id", "ts", "user_id", "event_type", "props"])
 
 
-def _with_session_confs(fn: SparkQuery) -> SparkQuery:
+def _with_session_confs(fn: SparkQuery, conf: dict[str, str]) -> SparkQuery:
     """The driver runs queries on its own SparkSession; pin the
     semantics-critical runtime confs per call (UTC timestamps, last-win
     map keys) so results don't depend on the harness session setup.
+    Those two stay set: the returned frame is lazy and is evaluated after
+    this call returns.  ``conf`` (the query's registered pins) holds only
+    while ``fn`` runs; each key gets its previous value back afterwards,
+    or is unset again if it had none.
     Also releases any self-join persists left by the PREVIOUS query, so a
     long sweep keeps storage memory flat (VERDICT r2 item 5).
 
@@ -8530,7 +8473,17 @@ def _with_session_confs(fn: SparkQuery) -> SparkQuery:
         release_persists()
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        return fn(spark, sf)
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            return fn(spark, sf)
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
     wrapped.__name__ = getattr(fn, "__name__", "query")
     return wrapped
@@ -8547,7 +8500,10 @@ def _ordered_names() -> list[str]:
 
 
 def queries() -> dict[str, SparkQuery]:
-    return {n: _with_session_confs(_REGISTRY[n][0]) for n in _ordered_names()}
+    return {
+        n: _with_session_confs(_REGISTRY[n][0], _REGISTRY[n][2])
+        for n in _ordered_names()
+    }
 
 
 def oracle_sql() -> dict[str, str]:

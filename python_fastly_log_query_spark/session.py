@@ -56,8 +56,7 @@ def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         # catalog; keep their data out of the repo cwd
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE")
-            or os.path.join(
+            os.path.join(
                 os.environ.get("SPARK_GRAFT_WORK_DIR")
                 or os.path.join(tempfile.gettempdir(), "pflq_spark_work"),
                 "spark-warehouse",

@@ -18,7 +18,6 @@ ALLOWED = {
     "SPARK_GRAFT_CPUS": "local[N] task slots; the Tier-1 command pins it to the usable cores",
     "SPARK_GRAFT_DRIVER_MEM": "Spark JVM heap override of the 40%-of-MemTotal default",
     "SPARK_GRAFT_WORK_DIR": "work root for the warehouse and streaming checkpoints",
-    "SPARK_GRAFT_WAREHOUSE": "spark.sql.warehouse.dir override for bucketed tables",
     "SPARK_GRAFT_TESTDATA": "root of the generated sf* test tables",
     "SPARK_GRAFT_PARITY_SF": "scale label of the oracle-parity sweep (sf0.001 by default)",
     "SPARK_GRAFT_SF_DIR": "input tables of the bench.py / bench_extra.py runs",
