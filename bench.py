@@ -41,6 +41,7 @@ from python_fastly_log_query_spark import queries as Q  # noqa: E402
 from python_fastly_log_query_spark.datagen import geoip_dim  # noqa: E402
 from python_fastly_log_query_spark.functions.columns import status_class  # noqa: E402
 from python_fastly_log_query_spark.operators import aggregates as agg  # noqa: E402
+from python_fastly_log_query_spark.operators.dedup import release_persists  # noqa: E402
 from python_fastly_log_query_spark.operators.enrich import enrich_geoip  # noqa: E402
 from python_fastly_log_query_spark.session import get_spark  # noqa: E402
 
@@ -232,6 +233,7 @@ STANDALONE_QUERIES = [
 #   while an isolated session shows 0.4-1.3s steady state for the same
 #   code).
 PROTOCOL = "v3_best_of_3_noop_gc_release_persists"
+REPS = 3
 
 
 def timed(fn) -> float:
@@ -240,16 +242,34 @@ def timed(fn) -> float:
     return round(time.perf_counter() - t0, 4)
 
 
-def timed2(spark, fn) -> float:
-    """Best-of-3 steady state (see PROTOCOL)."""
-    from python_fastly_log_query_spark.operators.dedup import release_persists
+def timed2(spark, fn, reps: int) -> float:
+    """Best-of-``reps`` steady state (see PROTOCOL)."""
 
     def once() -> float:
         release_persists()
         spark._jvm.System.gc()
         return timed(fn)
 
-    return min(once(), once(), once())
+    return min(once() for _ in range(reps))
+
+
+def warm_up(spark, qmap) -> None:
+    """Warm the JVM/Arrow path on a tiny slice so a timed run measures the
+    engine, not first-call classloading; the dedup/ANN queries also
+    exercise interpreted higher-order expressions whose first evaluation
+    pays multi-second codegen/classload (measured: 14s cold vs 2.5s for a
+    strict superset query run right after).  The warm-up queries persist
+    their exploded self-join frames; they are released so warm-up lineage
+    never leaks into a timed run."""
+    oc.parsed_events(spark, WARM_DIR).limit(100).count()
+    for warm_q in (
+        "dedup_minhash_lsh",
+        "embedding_lsh_topk",
+        "embedding_neardup_banded",
+        "simhash_neardup_pairs",
+    ):
+        qmap[warm_q](spark, WARM_DIR).write.mode("overwrite").format("noop").save()
+    release_persists()
 
 
 def main() -> None:
@@ -270,26 +290,7 @@ def main() -> None:
 
     plan_fps = fingerprint_queries(spark, SF_DIR, qmap)
 
-    # warm the JVM/Arrow path on a tiny slice so we measure the engine,
-    # not first-call classloading; the dedup/ANN queries additionally
-    # exercise interpreted higher-order expressions whose first evaluation
-    # pays multi-second codegen/classload (measured: 14s cold vs 2.5s for
-    # a strict superset query run right after)
-    oc.parsed_events(spark, WARM_DIR).limit(100).count()
-    for warm_q in (
-        "dedup_minhash_lsh",
-        "embedding_lsh_topk",
-        "embedding_neardup_banded",
-        "simhash_neardup_pairs",
-    ):
-        qmap[warm_q](spark, WARM_DIR).write.mode(
-            "overwrite"
-        ).format("noop").save()
-    # the warm-up queries persist their exploded self-join frames; release
-    # them so warm-up lineage never leaks into the timed section
-    from python_fastly_log_query_spark.operators.dedup import release_persists
-
-    release_persists()
+    warm_up(spark, qmap)
 
     # ---- flagship: full parse -> enrich -> route -> hourly rollup ----
     n_rows = oc.events_df(spark, SF_DIR).count()
@@ -311,7 +312,7 @@ def main() -> None:
             .save()
         )
 
-    timings["pipeline"] = timed2(spark, flagship)
+    timings["pipeline"] = timed2(spark, flagship, REPS)
 
     # ---- shared parsed frame (the §3.2 single-scan architecture) ----
     parsed = oc.parsed_events(spark, SF_DIR).cache()
@@ -323,7 +324,7 @@ def main() -> None:
         parsed.persist()
         parsed.count()
 
-    timings["parse_cache"] = timed2(spark, materialize_cache)
+    timings["parse_cache"] = timed2(spark, materialize_cache, REPS)
 
     agg_fns = {
         "requests_per_hour": agg.requests_per_hour,
@@ -345,7 +346,7 @@ def main() -> None:
     }
     for name in AGG_QUERIES:
         fn = agg_fns[name]
-        timings[name] = timed2(spark, lambda fn=fn: fn(parsed).collect())
+        timings[name] = timed2(spark, lambda fn=fn: fn(parsed).collect(), REPS)
 
     for name in STANDALONE_QUERIES:
         fn = qmap[name]
@@ -355,6 +356,7 @@ def main() -> None:
         timings[name] = timed2(
             spark,
             lambda fn=fn: fn(spark, SF_DIR).write.mode("overwrite").format("noop").save(),
+            REPS,
         )
 
     # production-width simhash (VERDICT r2 item 6): 64-bit signatures,
@@ -369,6 +371,7 @@ def main() -> None:
         spark,
         lambda: simhash_neardup_pairs(docs, bits=64, max_hamming=2)
         .write.mode("overwrite").format("noop").save(),
+        REPS,
     )
     from python_fastly_log_query_spark.operators.dedup import simhash_blocks
 
@@ -412,6 +415,7 @@ def main() -> None:
     timings["streaming_dedup_bounded_state"] = timed2(
         spark,
         lambda: qmap["streaming_dedup_bounded_state"](spark, SF_DIR).collect(),
+        REPS,
     )
     state_batches = Q.LAST_STREAM_STATE_METRICS.get("streaming_dedup_bounded_state", [])
     print(

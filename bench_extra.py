@@ -2,9 +2,10 @@
 """Per-query timing tool: the way to time one registered query, or a
 few, in isolation (``bench.py`` times the whole sweep).
 
-NOT part of the driver contract.  It uses bench.py's measurement protocol
-(best-of-3 noop-sink runs with ``release_persists()`` + a JVM
-``System.gc()`` before each) for an arbitrary subset of registered
+NOT part of the driver contract.  It imports bench.py's measurement
+protocol (``bench.timed2``: best-of-N noop-sink runs with
+``release_persists()`` + a JVM ``System.gc()`` before each) and its
+warm-up (``bench.warm_up``) for an arbitrary subset of registered
 queries, so a single query can be re-timed in seconds instead of
 re-running the whole bench.
 
@@ -20,16 +21,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import SF_DIR, timed2, warm_up  # noqa: E402
 from python_fastly_log_query_spark import queries as Q  # noqa: E402
+from python_fastly_log_query_spark.operators.dedup import release_persists  # noqa: E402
 from python_fastly_log_query_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# the warm-up slice sits next to the measured scale
-WARM_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 def main() -> None:
@@ -48,7 +46,6 @@ def main() -> None:
     spark = get_spark("bench_extra")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = Q.queries()
-    from python_fastly_log_query_spark.operators.dedup import release_persists
 
     if explain:
         for name in args:
@@ -60,31 +57,16 @@ def main() -> None:
         spark.stop()
         return
 
-    # warm-up (mirrors bench.py): tiny-slice runs so classloading/JIT is
-    # not charged to the first timed query
-    from python_fastly_log_query_spark import oracle_corpus as oc
-
-    oc.parsed_events(spark, WARM_DIR).limit(100).count()
-    for warm_q in ("dedup_minhash_lsh", "embedding_lsh_topk"):
-        qmap[warm_q](spark, WARM_DIR).write.mode(
-            "overwrite").format("noop").save()
-    release_persists()
-
+    warm_up(spark, qmap)
     out: dict[str, float] = {}
     for name in args:
         fn = qmap[name]
-
-        def once() -> float:
-            release_persists()
-            spark._jvm.System.gc()
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            return round(time.perf_counter() - t0, 4)
-
-        samples = [once() for _ in range(reps)]
-        out[name] = min(samples)
-        print(json.dumps({"query": name, "best": min(samples), "samples": samples}),
-              file=sys.stderr)
+        out[name] = timed2(
+            spark,
+            lambda fn=fn: fn(spark, SF_DIR).write.mode("overwrite").format("noop").save(),
+            reps,
+        )
+        print(json.dumps({"query": name, "best": out[name], "reps": reps}), file=sys.stderr)
     print(json.dumps(out))
     spark.stop()
 

@@ -1,6 +1,5 @@
 from .columns import (  # noqa: F401
     agent_type,
-    host_of_url,
     ip_to_long,
     query_signature,
     status_class,

@@ -81,11 +81,6 @@ def ip_to_long(ip: Column) -> Column:
     )
 
 
-def host_of_url(url: Column) -> Column:
-    """Host component of an http(s) URL."""
-    return F.parse_url(url, F.lit("HOST"))
-
-
 def round_half_away(col: Column | str, nd: int) -> Column:
     """Half-away-from-zero rounding of the double's BINARY value:
     ``sign(x) * floor(|x| * 10^nd + 0.5) / 10^nd``.

@@ -1166,7 +1166,7 @@ def bloom_params(n_keys: int, bits_per_key: int = 10, n_hashes: int = 5):
     """Bloom sizing from the corpus count: m = next power of two >=
     bits_per_key * n (power of two only for SQL-mirrorable modulo; the
     false-positive rate at 10 bits/key, k=5 is ~1%).  Input-driven for
-    the same reason `banded_params`/`minhash_params` are — a fixed m is
+    the same reason `banded_params`/`minhash_params_scaled` are — a fixed m is
     exactly the class of bug that degrades silently at the next scale
     decade (an overloaded bloom returns maybe for everything and the
     prefilter stops pruning)."""

@@ -181,65 +181,6 @@ def minhash_signatures(
     return ab.select(F.col(id_col), *extra, sig.alias("signature"))
 
 
-def minhash_params(
-    threshold: float,
-    target_recall: float = 0.95,
-    fp_sim: float | None = None,
-    fp_budget: float = 0.2,
-    max_bands: int = 64,
-) -> tuple[int, int]:
-    """Size ``(num_hashes, bands)`` for MinHash-LSH banding from the
-    Jaccard threshold — the MinHash twin of similarity.banded_params.
-
-    A pair at Jaccard s collides in a band of r rows with s^r; recall
-    over b bands is 1 - (1-s^r)^b (S-curve midpoint t ~ (1/b)^(1/r)).
-    Unlike hyperplane banding there is NO 2^r bucket ceiling to size
-    against N: band keys are md5 digests of signature slices, so bucket
-    count tracks the number of DISTINCT slices and a random pair
-    (background Jaccard ~ 0 for web text) collides with probability
-    ~ s_rand^r ~ 0.  r therefore buys PRECISION near the threshold and b
-    buys recall; the cost of a configuration is its signature width r*b
-    (minhash evaluations per doc and rows in the banding shuffle).
-
-    Selection, in strict preference order:
-    1. narrowest signature meeting ``target_recall`` at ``threshold``
-       with false-positive rate at ``fp_sim`` (default 0.6*threshold)
-       within ``fp_budget``;
-    2. if the fp budget is unreachable within ``max_bands`` (intrinsic
-       for LOW thresholds — selectivity collapses as threshold drops,
-       same phenomenon as cosine banding), the recall-meeting config with
-       the LOWEST fp rate;
-    3. if no config meets recall within ``max_bands``, the max-recall one.
-    NOTE the giant-cluster guard (:func:`neardup_pipeline`) is
-    orthogonal: exact-duplicate clusters must still be collapsed first,
-    whatever (r, b) says.
-    """
-    import math
-
-    fp_sim = 0.6 * threshold if fp_sim is None else fp_sim
-    best = None
-    for r in range(2, 17):
-        pr = threshold**r
-        need = (
-            1
-            if pr >= 1.0
-            else math.ceil(math.log(max(1e-12, 1.0 - target_recall)) / math.log(1.0 - pr))
-        )
-        feasible = need <= max_bands
-        b = min(need, max_bands)
-        recall = 1.0 - (1.0 - pr) ** b
-        fp = 1.0 - (1.0 - fp_sim**r) ** b
-        if feasible and fp <= fp_budget:
-            key = (2, -(r * b))  # tier 1: narrowest
-        elif feasible:
-            key = (1, -fp, -(r * b))  # tier 2: lowest fp
-        else:
-            key = (0, recall, -(r * b))  # tier 3: max recall
-        if best is None or key > best[0]:
-            best = (key, r * b, b)
-    return best[1], best[2]
-
-
 def minhash_params_scaled(
     n_docs: int,
     dup_sim: float = 0.9,
@@ -249,8 +190,7 @@ def minhash_params_scaled(
     max_r: int = 16,
     max_bands: int = 64,
 ) -> tuple[int, int]:
-    """Corpus-size-aware ``(num_hashes, bands)``: the missing constraint
-    in :func:`minhash_params` at scale.
+    """Corpus-size-aware ``(num_hashes, bands)`` for MinHash-LSH banding.
 
     With FIXED (r, b), spurious candidates grow QUADRATICALLY: the exact
     expectation is ``E[junk] = b * sum over pairs of J^r``, an N^2-count
@@ -404,7 +344,7 @@ def lsh_candidate_pairs(
 
     band key = md5 of the band's minhash slice; one shuffle on
     (band, key); output (doc_a < doc_b) distinct.  Size (num_hashes,
-    bands) for a target threshold/recall with :func:`minhash_params`.
+    bands) for a corpus size with :func:`minhash_params_scaled`.
     """
     banded = selfjoin_ready(
         banded_signature_keys(docs, num_hashes, bands, id_col, text_col)
@@ -464,29 +404,6 @@ def candidate_pairs_from_table(spark, out_dir: str, id_col: str = "doc_id") -> D
 # ---------------------------------------------------------------- simhash
 
 
-def simhash_from_hashes(token_hashes: F.Column, bits: int = 16) -> F.Column:
-    """``bits``-bit SimHash from PRE-COMPUTED per-token md5 hex digests.
-
-    Bit j of a token's fingerprint = (hex digit j of its digest) >= 8.
-    SimHash bit j = majority vote across tokens (+1/-1 sum >= 0), packed
-    little-endian; shiftleft (not bit * 2^j literals) so bit 63 packs into
-    the sign bit at bits=64.
-    """
-
-    def _vote_merge(j: int):
-        return lambda s, h: s + F.when(
-            F.substring(h, j + 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"), 1
-        ).otherwise(-1)
-
-    acc = None
-    for j in range(bits):
-        vote = F.aggregate(token_hashes, F.lit(0), _vote_merge(j))
-        bit = F.when(vote >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        term = F.shiftleft(bit, j)
-        acc = term if acc is None else acc.bitwiseOR(term)
-    return acc
-
-
 def _token_digest(bits: int):
     """Per-token hex digest wide enough for ``bits`` sign digits: one md5
     gives 32 hex chars; wider signatures concatenate salted digests
@@ -501,14 +418,6 @@ def _token_digest(bits: int):
         return F.concat(*parts) if len(parts) > 1 else parts[0]
 
     return fn
-
-
-def simhash(text: F.Column, bits: int = 16) -> F.Column:
-    """Inline-column SimHash (digests recomputed per bit — prefer
-    :func:`simhash_docs`, which materializes one digest per token)."""
-    return simhash_from_hashes(
-        F.transform(F.split(text, " "), _token_digest(bits)), bits
-    )
 
 
 def simhash_docs(docs: DataFrame, bits: int = 16, ngram: int = 1) -> DataFrame:
@@ -538,7 +447,7 @@ def simhash_docs(docs: DataFrame, bits: int = 16, ngram: int = 1) -> DataFrame:
     )
 
     # Vote + pack in a numpy batch stage (opt r6).  The Catalyst shape
-    # (simhash_from_hashes) runs `bits` interpreted aggregate folds over
+    # (one F.aggregate vote fold per bit) runs `bits` interpreted folds over
     # the digest array per row — 2.2s for w64/3-gram at sf0.1; the vote
     # is pure integer counting over the SAME JVM-computed md5 hex
     # digests, so the numpy twin is bit-identical by construction

@@ -254,29 +254,6 @@ def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     return media.mapInPandas(_iter, schema=FEATURES_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """STUB frame sampler for video payloads: emits one row per sampled
-    frame index (real impl: decode + slice frames).  Demonstrates the
-    one-to-many mapInPandas shape (row explosion inside Arrow batches)."""
-
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for m, k, d in zip(pdf["media_id"], pdf["kind"], pdf["data"]):
-                if k != "video":
-                    continue
-                meta = _fake_decode(bytes(d), k)
-                for idx in range(0, meta["n_frames"], every_n):
-                    out.append({"media_id": m, "frame_index": idx,
-                                "frame_sha1": hashlib.sha1(
-                                    bytes(d) + idx.to_bytes(4, "big")).hexdigest()})
-            yield pd.DataFrame(out, columns=["media_id", "frame_index", "frame_sha1"])
-
-    return media.mapInPandas(
-        _iter, schema="media_id long, frame_index int, frame_sha1 string"
-    )
-
-
 # ------------------------------------------------------------ BMP (image)
 
 BMP_DECODED_SCHEMA = (
@@ -603,8 +580,7 @@ AVI_FRAMES_SCHEMA = (
 
 
 def avi_frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling over AVI payloads (supersedes the
-    :func:`frame_sample` stub for genuine containers): emit one row per
+    """Frame sampling over AVI payloads: emit one row per
     every_n-th frame with that frame's channel sums and top-left corner
     — decoding ONLY the sampled '00db' chunks.  The RIFF index walk is
     header-arithmetic (each chunk's size field says where the next one

@@ -7,9 +7,8 @@ Divergences from the reference, both documented in SURVEY.md §7:
   scripts/analyze_logs.py:940-944 and :950-954 — idempotent apart from a
   slightly later wall-clock ``now``).
 
-At scale this predicate is the partition-pruning filter: with the table
-partitioned by ``days(warc_ts)`` the scan touches only the trailing
-partitions (SURVEY.md §2.1 S4).
+It is a row filter on the parsed timestamp, not partition pruning: no
+command writes day partitions, so the scan reads every parsed row.
 """
 
 from __future__ import annotations

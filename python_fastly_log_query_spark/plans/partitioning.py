@@ -1,50 +1,18 @@
-"""Date partitioning + partition-pruned date-range reads (SURVEY.md §2.1
-S4; reference analog: day/hour prefix listing, src/sync/s3_sync.py:113-123,
-src/utils/date_utils.py:49-96).
+"""Partition and file layout planners: input spreading, z-order keys and
+bins, small-file compaction bins, missing-day audit and table statistics.
 
-The reference iterates S3 prefixes day by day; the Spark-native shape is
-a table partitioned by ``ds = to_date(warc_ts)`` (Iceberg: a
-``days(warc_ts)`` partition transform) so a date-range predicate prunes
-the scan to the requested days — the `--last-hours` filter
-(plans/lasthours.py) rides the same pruning.
+Day partitioning (SURVEY.md §2.1 S4; the reference iterates S3 prefixes
+day by day, src/sync/s3_sync.py:113-123) is not offered: ``cli parse
+--incremental`` keeps a per-file skip list in its checkpoint
+(plans/checkpoint.py), which replaces day-prefix iteration, and
+``--last-hours`` (plans/lasthours.py) is a row filter on the parsed
+timestamp, not partition pruning.
 """
 
 from __future__ import annotations
 
-from datetime import date, datetime
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_date_partitioned(
-    df: DataFrame, path: str, ts_col: str = "warc_ts", mode: str = "overwrite"
-) -> None:
-    """Write partitioned by day-of-timestamp (parquet analog of Iceberg's
-    ``days(ts)`` transform)."""
-    (
-        df.withColumn("ds", F.to_date(ts_col))
-        .write.mode(mode)
-        .partitionBy("ds")
-        .parquet(path)
-    )
-
-
-def read_date_range(
-    spark: SparkSession,
-    path: str,
-    start: str | date | datetime | None = None,
-    end: str | date | datetime | None = None,
-) -> DataFrame:
-    """Read with a partition-pruning ``ds`` range predicate (inclusive,
-    UTC, like the reference's date_utils ranges).  ``None`` bounds are
-    open."""
-    df = spark.read.parquet(path)
-    if start is not None:
-        df = df.filter(F.col("ds") >= F.lit(str(start)[:10]))
-    if end is not None:
-        df = df.filter(F.col("ds") <= F.lit(str(end)[:10]))
-    return df
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -51,25 +51,9 @@ def _r(df: DataFrame, cols: list[str], nd: int = 4) -> DataFrame:
     return out
 
 
-def _parsed(
-    spark: SparkSession, sf: str, cols: list[str] | None = None
-) -> DataFrame:
-    """Oracle corpus through the pandas grok parser.  ``cols`` prunes
-    the parsed output through the mapInPandas boundary (guide §4.1:
-    Catalyst cannot push a projection into the Python stage; fallback
-    probes are per-field independent, so restricting columns never
-    changes the values of the kept ones).  ``event_id`` always rides
-    as the passthrough key.
-
-    Registry call sites deliberately do NOT prune (opt r6 finding): a
-    pruned plan no longer matches a session-cached full parse, and in
-    any sweep that caches the shared parsed frame (bench.py's agg
-    section does), CacheManager substitution makes the FULL-parse
-    lineage effectively free while a pruned twin re-parses from
-    scratch — measured +0.4-1.3s per query when the eight standalone
-    consumers were pruned.  Prune only in pipelines with no shared
-    cached parse (the flagship does, via parsed_events(columns=...))."""
-    return oc.parsed_events(spark, sf, columns=cols)
+def _parsed(spark: SparkSession, sf: str) -> DataFrame:
+    """Oracle corpus through the pandas grok parser, all columns."""
+    return oc.parsed_events(spark, sf)
 
 
 L = oc.LOGS_CTE  # "WITH logs AS (...)" prefix

@@ -106,7 +106,6 @@ def _java_opts(mem: str | None) -> str:
 def get_spark(
     app_name: str = "python-fastly-log-query-spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     """Build (or get) a SparkSession configured for this engine.
 
@@ -114,8 +113,8 @@ def get_spark(
     this host) in the sandbox; on a real cluster pass None and let
     spark-submit decide.
 
-    ``shuffle_partitions`` applies unless the launch conf already sets
-    ``spark.sql.shuffle.partitions`` (``spark-submit --conf``,
+    ``DEFAULT_SHUFFLE_PARTITIONS`` applies unless the launch conf already
+    sets ``spark.sql.shuffle.partitions`` (``spark-submit --conf``,
     spark-defaults.conf): builder options would override it, and AQE's
     coalescing can lower the count but never raise it.
     """
@@ -124,5 +123,5 @@ def get_spark(
     b = SparkSession.builder.appName(app_name).master(master)
     spark = builder_conf(b).getOrCreate()
     if not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
     return spark

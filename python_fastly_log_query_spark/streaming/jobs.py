@@ -4,10 +4,10 @@ The reference is batch-only; its incremental sync/parse is file
 micro-batching and ``--last-hours`` is a processing-time window.  The
 streaming analogs here:
 
-- ``stream_parse``: ``readStream.text`` over a landing directory (new
-  files become micro-batches — the sync/parse loop without the cron), the
-  same pandas-UDF grok parser (mapInPandas works unchanged on streaming
-  DataFrames).
+- ``stream_parse_docs``: a parquet landing table whose rows hold raw
+  log lines (new files become micro-batches — the sync/parse loop without
+  the cron), parsed by the same pandas-UDF grok parser (mapInPandas works
+  unchanged on streaming DataFrames).
 - ``hourly_rollup``: tumbling event-time window on the parsed timestamp
   with a watermark for late lines (G2 as a streaming aggregate).
 - ``ip_request_rate_stream``: custom stateful operator via
@@ -38,22 +38,6 @@ from pyspark.sql.types import (
 )
 
 from ..operators.parse import parse_logs
-
-
-def stream_parse(
-    spark: SparkSession,
-    input_dir: str,
-    pattern: str = "*.log",
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Streaming grok parse over a landing directory of log files."""
-    lines = (
-        spark.readStream.format("text")
-        .option("pathGlobFilter", pattern)
-        .load(input_dir)
-        .withColumnRenamed("value", "text")
-    )
-    return parse_logs(lines, "text", columns=columns)
 
 
 def stream_docs(
@@ -88,7 +72,7 @@ def stream_parse_docs(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Grok parse over a streaming parquet table whose ``line_col`` holds
-    raw log lines — the table-source twin of :func:`stream_parse`.
+    raw log lines.
     ``max_files_per_trigger`` forwards to :func:`stream_docs` so callers
     can force multi-batch drains (exercises cross-batch state)."""
     docs = stream_docs(

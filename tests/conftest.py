@@ -24,7 +24,8 @@ SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 def spark():
     from python_fastly_log_query_spark.session import get_spark
 
-    s = get_spark(master="local[4]", shuffle_partitions=8)
+    s = get_spark(master="local[4]")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()
 

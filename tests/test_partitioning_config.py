@@ -1,62 +1,7 @@
-"""Date partition pruning (S4) + multi-source registry (S5)."""
+"""Layout planners of plans/partitioning.py: spread, z-order, missing days
+and compaction bins."""
 
 from __future__ import annotations
-
-import contextlib
-import io
-import json
-
-from pyspark.sql import functions as F
-
-from python_fastly_log_query_spark import config as cfg
-from python_fastly_log_query_spark.plans import partitioning as P
-
-from conftest import SF_SMALL
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def test_date_range_read_prunes_partitions(spark, tmp_path):
-    path = str(tmp_path / "by_day")
-    events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    P.write_date_partitioned(events, path, ts_col="ts")
-
-    all_days = sorted(
-        r.ds for r in spark.read.parquet(path).select("ds").distinct().collect()
-    )
-    assert len(all_days) > 2
-    start, end = str(all_days[1]), str(all_days[1])
-    pruned = P.read_date_range(spark, path, start, end)
-    # correctness: equals a full-scan filter
-    want = events.filter(F.to_date("ts") == F.lit(start)).count()
-    assert pruned.count() == want
-    # plan: the ds predicate lands in PartitionFilters, not a post-scan filter
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters")[1][:200]
-    assert "ds" in pf
-
-
-def test_load_sources_registry(tmp_path):
-    p = tmp_path / "sources.json"
-    p.write_text(json.dumps({
-        "log_sources": {
-            "cdn": {"enabled": True, "path": "/data/cdn", "route_by": "lang"},
-            "media": {"enabled": False, "path": "/data/media"},
-            "api": {"path": "/data/api", "retention_days": 30},
-        }
-    }))
-    sources = cfg.load_sources(p)
-    names = [s.name for s in sources]
-    assert names == ["cdn", "api"]  # disabled source skipped, order kept
-    assert sources[0].route_by == "lang"
-    assert sources[1].route_by == "status_class"
-    assert sources[1].options == {"retention_days": 30}
 
 
 def test_spread_is_noop_on_well_partitioned_input(spark):

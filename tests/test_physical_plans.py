@@ -353,28 +353,6 @@ def test_exact_cosine_pairs_broadcast_cap_raises(spark):
     assert out.count() == 5
 
 
-def test_minhash_params_scurve_contract():
-    """minhash_params must hit the recall target at the threshold; where
-    the fp budget is reachable (thresholds >= ~0.7) it must be met, and
-    at low thresholds the fallback minimizes fp instead of giving up.
-    Tighter recall targets demand wider signatures."""
-    from python_fastly_log_query_spark.operators.dedup import minhash_params
-
-    for threshold in (0.5, 0.7, 0.9):
-        nh, b = minhash_params(threshold, target_recall=0.95)
-        r = nh // b
-        recall = 1 - (1 - threshold**r) ** b
-        fp = 1 - (1 - (0.6 * threshold) ** r) ** b
-        assert recall >= 0.95, (threshold, nh, b)
-        if threshold >= 0.7:
-            assert fp <= 0.2, (threshold, nh, b)
-        else:
-            assert fp <= 0.35, (threshold, nh, b)  # tier-2 min-fp fallback
-    loose, _ = minhash_params(0.8, target_recall=0.9)
-    tight, _ = minhash_params(0.8, target_recall=0.999)
-    assert tight >= loose
-
-
 def test_minhash_params_scaled_contract():
     """Corpus-size-aware sizing: for every decade config, the recall
     constraint holds at dup_sim AND the per-doc junk bound holds at the
