@@ -24,7 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import SF_DIR, timed2, warm_up  # noqa: E402
+from bench import REPS, SF_DIR, timed2, warm_up  # noqa: E402
 from python_fastly_log_query_spark import queries as Q  # noqa: E402
 from python_fastly_log_query_spark.operators.dedup import release_persists  # noqa: E402
 from python_fastly_log_query_spark.session import get_spark  # noqa: E402
@@ -33,7 +33,7 @@ from python_fastly_log_query_spark.session import get_spark  # noqa: E402
 def main() -> None:
     argv = sys.argv[1:]
     explain = "--explain" in argv
-    reps = 3
+    reps = REPS
     args = []
     while argv:
         a = argv.pop(0)
