@@ -24,7 +24,7 @@ from python_fastly_log_query_spark.oracle_corpus import parsed_events  # noqa: E
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: parse (pandas-UDF grok) → GeoIP broadcast enrich →
+    """Flagship: parse (``mapInArrow`` grok) → GeoIP broadcast enrich →
     status-class route → hourly rollup, on sf0.001."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")

@@ -11,7 +11,7 @@ parsed DataFrame (SURVEY.md §3.2 — the reference re-materializes pandas
 frames per analyze fn; we don't).  So the bench times:
 
 - ``pipeline``  — the flagship parse→enrich→route→aggregate job end to end
-  (best-of-3 like every entry; includes the pandas-UDF grok parse);
+  (best-of-3 like every entry; includes the ``mapInArrow`` grok parse);
 - ``parse_cache`` — materializing the shared parsed DataFrame once
   (single-run by nature: a rerun would count the already-cached frame);
 - each aggregate query over the cached parsed frame (what a dashboard

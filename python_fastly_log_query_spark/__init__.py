@@ -4,7 +4,7 @@ A from-scratch, Spark-first reimplementation of the query/data-processing
 capabilities of ``cloudbuildlab/python-fastly-log-query`` (reference at
 /root/reference, read-only), re-expressed as declarative DataFrame plans:
 
-- parse: vectorized pandas-UDF grok parser (reference src/parse/log_parser.py)
+- parse: Arrow-batched ``mapInArrow`` grok parser (reference src/parse/log_parser.py)
 - enrich: broadcast lookup joins (GeoIP ranges / service dims)
 - route: fan-out multi-sink writes keyed by routing rules
 - aggregate: the reference dashboard aggregates (reference

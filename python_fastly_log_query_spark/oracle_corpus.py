@@ -4,7 +4,7 @@ The driver's correctness gate compares Spark queries against DuckDB SQL over
 the same parquet tables (``__spark_entry__.py`` contract).  To make the
 parse→aggregate pipeline oracle-checkable, we derive a Fastly log line from
 each ``events`` row with pure column expressions.  The SPARK side builds the
-line and runs it through the real pandas-UDF parser; the DUCKDB side never
+line and runs it through the real pipeline parser; the DUCKDB side never
 parses — it recomputes the same field derivations directly.  Agreement
 therefore proves the parser extracts exactly what was encoded.
 
@@ -85,7 +85,7 @@ def parsed_events(
 
     ``columns`` prunes the parsed output (manual projection through the
     UDF boundary — see operators/parse.py).  The testdata events table is
-    one small parquet file per SF, so the pandas-UDF parse would run as a
+    one small parquet file per SF, so the ``mapInArrow`` parse would run as a
     single task; spread() fans the lines over the cluster first (no-op on
     well-partitioned production input)."""
     from .plans.partitioning import spread

@@ -51,7 +51,7 @@ _TOKENS = (
     ("sorts", "Sort "),
     ("hash_aggregates", "HashAggregate"),
 )
-_PYTHON_TOKENS = ("MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas",
+_PYTHON_TOKENS = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "FlatMapGroupsInPandas",
                   "FlatMapCoGroupsInPandas", "BatchEvalPython")
 
 

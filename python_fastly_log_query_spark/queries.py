@@ -5,7 +5,7 @@ Spark callables take ``(spark, sf_dir)`` and return a DataFrame whose
 column NAMES and (for floats) ROUNDING match the oracle exactly — the
 driver hashes values after sorting columns by name (driver contract).
 
-The parse-derived queries run the REAL pandas-UDF parser over log lines
+The parse-derived queries run the REAL pipeline parser over log lines
 deterministically derived from the ``events`` table (oracle_corpus); the
 DuckDB side recomputes the encoded fields directly — agreement proves the
 parse→aggregate pipeline end-to-end.
@@ -1681,7 +1681,7 @@ def q_streaming_hourly_rollup(spark, sf):
     """Structured Streaming end-to-end with a FULL batch oracle (SURVEY
     §2.9): the oracle corpus is landed as a parquet table directory, read
     back as a file STREAM (the north rule's table-source shape), grok-
-    parsed by the same pandas-UDF parser, aggregated by the watermarked
+    parsed by the same ``mapInArrow`` parser, aggregated by the watermarked
     tumbling-window rollup, and drained exactly-once with
     Trigger.AvailableNow into a memory sink.  The drained result must
     equal the plain batch GROUP BY — the DuckDB oracle — proving the

@@ -6,8 +6,8 @@ Semantics-critical configs:
 - ``spark.sql.mapKeyDedupPolicy=LAST_WIN``: query-param maps keep the last
   duplicate key, matching the reference's dict overwrite semantics
   (reference src/parse/log_parser.py:96-102).
-- Arrow on: the grok parse stage is a pandas UDF; Arrow batching is the
-  vectorized transfer path.
+- Arrow on: the grok parse is ONE Arrow-batched ``mapInArrow`` stage;
+  Arrow batching is the vectorized transfer path.
 - AQE on (+ skew join): runtime shuffle re-planning for the 100 TB target.
 """
 

@@ -6,8 +6,8 @@ streaming analogs here:
 
 - ``stream_parse_docs``: a parquet landing table whose rows hold raw
   log lines (new files become micro-batches — the sync/parse loop without
-  the cron), parsed by the same pandas-UDF grok parser (mapInPandas works
-  unchanged on streaming DataFrames).
+  the cron), parsed by the same grok parser (its ``mapInArrow`` stage
+  works unchanged on streaming DataFrames).
 - ``hourly_rollup``: tumbling event-time window on the parsed timestamp
   with a watermark for late lines (G2 as a streaming aggregate).
 - ``ip_request_rate_stream``: custom stateful operator via

@@ -128,7 +128,7 @@ def test_seeded_lines_match_golden():
 
 
 def test_spark_stage_matches_local_function(spark):
-    """The mapInPandas stage returns, field by field, what
+    """The ONE Arrow-batched ``mapInArrow`` stage returns, field by field, what
     ``parse_lines_pdf`` gives on the same lines: the Arrow round trip
     loses nothing (``query_params`` included), the passthrough column
     survives and blank lines are dropped."""

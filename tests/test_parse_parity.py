@@ -71,7 +71,7 @@ def test_batch_equals_scalar():
 
 
 def test_spark_parse_end_to_end(spark, ref_parser):
-    """Full Spark mapInPandas stage vs reference goldens, incl. the
+    """Full Spark ``mapInArrow`` stage vs reference goldens, incl. the
     byte-identical raw text per url invariant."""
     rows = [(f"https://example.org/doc/{i}", line) for i, line in enumerate(FIXTURE_LINES)]
     df = spark.createDataFrame(rows, "url string, text string")

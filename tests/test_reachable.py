@@ -36,6 +36,7 @@ _BUCKETING = "the brief's co-located join: bucketed writes whose shuffle-free jo
 ALLOWED = {
     "operators/parse.py:parse_log_line": _PARSE_REF,
     "operators/parse.py:row_record": _PARSE_REF,
+    "operators/parse.py:parse_lines_pdf": "pandas view of parse_lines for the golden and parity tests and perfbench's parser-tally test",
     "operators/aggregates.py:total_requests": "used by tests/report_reference.py",
     "operators/sketch.py:kmv_bottom_k": _KMV_REF,
     "operators/sketch.py:kmv_overlap": _KMV_REF,
