@@ -20,7 +20,7 @@ reference's own ``parse_log_line``):
   does not fit its column (IntegerType for priority/pid/status_code,
   LongType for response_size) instead of a wrapped number;
 - timestamps parse strictly as ``%Y-%m-%dT%H:%M:%SZ`` with
-  ``datetime.strptime`` → UTC (ref :76-82, :113-119);
+  ``datetime.strptime``'s semantics → UTC (ref :76-82, :113-119);
 - ``path``/``query_string`` split on first ``?``; query params split on
   ``&``, only ``key=value`` pairs kept (bare keys dropped from the map but
   kept in ``query_string``), value split on FIRST ``=``, duplicate keys:
@@ -49,6 +49,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..schema import PARSED_FIELDS
 
@@ -103,11 +104,8 @@ _SLOTS = [field for field, _ in _LINE_SEGMENTS]
 _BLANK = (None,) * len(_SLOTS)
 _PATH_COLS = ("path", "query_string", "query_params")
 _NO_PATH = (None, None, None)
-# Arrow types Spark reads back for the non-string parsed fields
-_INT_TYPES = {"priority": pa.int32(), "pid": pa.int32(), "status_code": pa.int32(),
-              "response_size": pa.int64()}
-_TS_TYPE = pa.timestamp("us", tz="UTC")
-_PARAMS_TYPE = pa.map_(pa.string(), pa.string())
+# the Arrow type Spark reads back for each parsed field
+_ARROW_TYPES = {f.name: to_arrow_type(f.dataType) for f in PARSED_FIELDS}
 
 
 def _fallback(s: str) -> tuple:
@@ -159,10 +157,10 @@ def _safe_int(s: str | None, hi: int) -> int | None:
     return v if -hi - 1 <= v <= hi else None
 
 
-def _timestamps(vals: tuple) -> pa.Array:
-    """Strict ``%Y-%m-%dT%H:%M:%SZ`` → UTC (ref :76-82); each distinct
-    string of the batch parses once.  Both patterns give the string that
-    exact shape, so an ASCII one reads the same through the C
+def _timestamps(vals: tuple) -> list[int | None]:
+    """Strict ``%Y-%m-%dT%H:%M:%SZ`` → UTC microseconds (ref :76-82); each
+    distinct string of the batch parses once.  Both patterns give the
+    string that exact shape, so an ASCII one reads the same through the C
     ``fromisoformat`` as through ``strptime``, which is kept for the
     Unicode digits only it accepts."""
     us = {}
@@ -173,22 +171,20 @@ def _timestamps(vals: tuple) -> pa.Array:
             us[s] = (dt - _EPOCH) // _US
         except (AttributeError, ValueError):
             us[s] = None
-    return pa.array([us[s] for s in vals], _TS_TYPE)
+    return [us[s] for s in vals]
 
 
 def _column(col: str, vals: tuple | list) -> pa.Array:
-    if col in _INT_TYPES:
-        hi = (1 << (_INT_TYPES[col].bit_width - 1)) - 1
+    typ = _ARROW_TYPES[col]
+    if pa.types.is_integer(typ):
+        hi = (1 << (typ.bit_width - 1)) - 1
         short = len(str(hi)) - 1  # a run of this many digits always fits
-        return pa.array([int(s) if s and len(s) <= short else _safe_int(s, hi)
-                         for s in vals], _INT_TYPES[col])
-    if col == "timestamp":
-        return _timestamps(vals)
-    if col == "query_params":
-        return pa.array(vals, _PARAMS_TYPE)
-    if col in _SLOTS:  # reference ``safe_get``: '' is absent
+        vals = [int(s) if s and len(s) <= short else _safe_int(s, hi) for s in vals]
+    elif pa.types.is_timestamp(typ):
+        vals = _timestamps(vals)
+    elif col in _SLOTS:  # reference ``safe_get``: '' is absent
         vals = [s or None for s in vals]
-    return pa.array(vals, pa.string())
+    return pa.array(vals, typ)
 
 
 def parse_lines(
