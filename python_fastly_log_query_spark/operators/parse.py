@@ -42,7 +42,6 @@ import re
 from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 
@@ -296,7 +295,7 @@ def row_record(row: pd.Series) -> dict | None:
         return None
     out = {}
     for k, v in row.drop(labels=["_keep"]).items():
-        if v is None or (isinstance(v, float) and np.isnan(v)) or v is pd.NaT or v is pd.NA:
+        if v is None or v is pd.NaT or v is pd.NA:
             continue
         if k in ("priority", "pid", "status_code", "response_size"):
             v = int(v)
