@@ -156,31 +156,28 @@ def _safe_int(s: str | None, hi: int) -> int | None:
     return v if -hi - 1 <= v <= hi else None
 
 
-def _timestamps(vals: tuple) -> list[int | None]:
-    """Strict ``%Y-%m-%dT%H:%M:%SZ`` → UTC microseconds (ref :76-82); each
-    distinct string of the batch parses once.  Both patterns give the
-    string that exact shape, so an ASCII one reads the same through the C
-    ``fromisoformat`` as through ``strptime``, which is kept for the
-    Unicode digits only it accepts."""
-    us = {}
-    for s in set(vals):
-        try:
-            dt = (datetime.fromisoformat(s[:-1]) if s.isascii()
-                  else datetime.strptime(s, _TS_FORMAT))
-            us[s] = (dt - _EPOCH) // _US
-        except (AttributeError, ValueError):
-            us[s] = None
-    return [us[s] for s in vals]
+def _timestamp(s: str) -> int | None:
+    """Strict ``%Y-%m-%dT%H:%M:%SZ`` → UTC microseconds (ref :76-82).  Both
+    patterns give the string that exact shape, so an ASCII one with an
+    hour below 24 reads the same through the C ``fromisoformat`` as
+    through ``strptime``, which takes the rest: Unicode digits, which only
+    it accepts, and hour 24, which it rejects but newer ``fromisoformat``
+    reads as the next day's midnight."""
+    try:
+        dt = (datetime.fromisoformat(s[:-1]) if s.isascii() and s[11:13] < "24"
+              else datetime.strptime(s, _TS_FORMAT))
+    except ValueError:
+        return None
+    return (dt - _EPOCH) // _US
 
 
 def _column(col: str, vals: tuple | list) -> pa.Array:
     typ = _ARROW_TYPES[col]
     if pa.types.is_integer(typ):
         hi = (1 << (typ.bit_width - 1)) - 1
-        short = len(str(hi)) - 1  # a run of this many digits always fits
-        vals = [int(s) if s and len(s) <= short else _safe_int(s, hi) for s in vals]
+        vals = [_safe_int(s, hi) for s in vals]
     elif pa.types.is_timestamp(typ):
-        vals = _timestamps(vals)
+        vals = [_timestamp(s) if s else None for s in vals]
     elif col in _SLOTS:  # reference ``safe_get``: '' is absent
         vals = [s or None for s in vals]
     return pa.array(vals, typ)
@@ -200,7 +197,7 @@ def parse_lines(
     ``mapInArrow``, so the operator does it itself); the path/query split
     runs only when a path field is wanted.
     """
-    want = [c for c in PARSED_ORDER if columns is None or c in set(columns)]
+    want = [c for c in PARSED_ORDER if columns is None or c in columns]
     raw = [ln.strip() if ln else ln for ln in lines]
     match = FAST_PATTERN.match
     rows = [(m.groups() if (m := match(s)) else _fallback(s)) if s else _BLANK
@@ -259,17 +256,18 @@ def parse_logs(
     passthrough = passthrough or []
     if dict(df.dtypes).get(line_col) == "binary":
         df = df.withColumn(line_col, F.decode(F.col(line_col), "UTF-8"))
-    out_cols = [c for c in PARSED_ORDER if columns is None or c in set(columns)]
     in_schema = df.select(*passthrough, line_col).schema
+    fields = {f.name: f for f in PARSED_FIELDS}
+    # the fields parse_lines builds for ``columns``, in the order it builds them
     out_schema = T.StructType(
         [in_schema[c] for c in passthrough]
-        + [f for f in PARSED_FIELDS if f.name in set(out_cols)]
+        + [fields[c] for c in parse_lines([], columns)[0]]
     )
 
     def _iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             lines = batch.column(line_col).to_numpy(zero_copy_only=False).tolist()
-            parsed, keep = parse_lines(lines, out_cols)
+            parsed, keep = parse_lines(lines, columns)
             out = pa.RecordBatch.from_arrays(
                 [batch.column(c) for c in passthrough] + list(parsed.values()),
                 names=out_schema.names,

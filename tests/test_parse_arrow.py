@@ -130,6 +130,7 @@ def test_pruned_columns_equal_full_parse():
     "2025-11-09T23:57:35Z", "2024-02-29T00:00:00Z", "2025-02-29T00:00:00Z",
     "2025-01-01T00:00:60Z", "2025-00-01T00:00:00Z", "0000-01-01T00:00:00Z",
     "1000-01-01T00:00:00Z", "9999-12-31T23:59:59Z", "٢٠٢٥-01-01T00:00:00Z",
+    "2025-01-01T24:00:00Z", "2025-01-01T00:00:61Z",
 ])
 def test_timestamp_reads_as_strptime(ts):
     try:
