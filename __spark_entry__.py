@@ -21,13 +21,14 @@ from python_fastly_log_query_spark.datagen import geoip_dim  # noqa: E402
 from python_fastly_log_query_spark.functions.columns import status_class  # noqa: E402
 from python_fastly_log_query_spark.operators.enrich import enrich_geoip  # noqa: E402
 from python_fastly_log_query_spark.oracle_corpus import parsed_events  # noqa: E402
+from python_fastly_log_query_spark.session import SEMANTIC_CONFS  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: parse (``mapInArrow`` grok) → GeoIP broadcast enrich →
     status-class route → hourly rollup, on sf0.001."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    for k, v in SEMANTIC_CONFS.items():
+        spark.conf.set(k, v)
     # column pruning through the parse UDF: the rollup consumes only these
     parsed = parsed_events(
         spark, "/root/testdata/sf0.001",

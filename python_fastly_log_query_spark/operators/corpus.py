@@ -2366,57 +2366,42 @@ def content_chunks(
     DuckDB oracle."""
     import hashlib
 
-    import pandas as pd
-
+    from ..functions.arrow import numpy_stage
     from ..plans.partitioning import spread
 
-    def _iter(batches):
-        for pdf in batches:
-            ids, idxs, md5s, ntoks = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["_text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                n = len(toks)
-                chunk: list[str] = []
-                ci = 0
-                for i, tok in enumerate(toks):
-                    chunk.append(tok)
-                    if i >= k - 1 and i < n - 1:
-                        gram = " ".join(toks[i - k + 1 : i + 1])
-                        fp = int(
-                            hashlib.md5(gram.encode()).hexdigest()[:8], 16
-                        )
-                        if fp % divisor == 0:
-                            ids.append(did)
-                            idxs.append(ci)
-                            md5s.append(
-                                hashlib.md5(" ".join(chunk).encode()).hexdigest()
-                            )
-                            ntoks.append(len(chunk))
-                            chunk = []
-                            ci += 1
-                if chunk:
-                    ids.append(did)
-                    idxs.append(ci)
-                    md5s.append(
-                        hashlib.md5(" ".join(chunk).encode()).hexdigest()
-                    )
-                    ntoks.append(len(chunk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "chunk_idx": pd.Series(idxs, dtype="int64"),
-                    "chunk_md5": pd.Series(md5s, dtype="object"),
-                    "n_toks": pd.Series(ntoks, dtype="int64"),
-                }
-            )
+    def _chunks(cols):
+        ids, idxs, md5s, ntoks = [], [], [], []
+        for did, text in zip(cols["doc_id"].tolist(), cols["_text"]):
+            if text is None:
+                continue
+            toks = text.split(" ")
+            n = len(toks)
+            chunk: list[str] = []
+            ci = 0
+            for i, tok in enumerate(toks):
+                chunk.append(tok)
+                if i >= k - 1 and i < n - 1:
+                    gram = " ".join(toks[i - k + 1 : i + 1])
+                    fp = int(hashlib.md5(gram.encode()).hexdigest()[:8], 16)
+                    if fp % divisor == 0:
+                        ids.append(did)
+                        idxs.append(ci)
+                        md5s.append(hashlib.md5(" ".join(chunk).encode()).hexdigest())
+                        ntoks.append(len(chunk))
+                        chunk = []
+                        ci += 1
+            if chunk:
+                ids.append(did)
+                idxs.append(ci)
+                md5s.append(hashlib.md5(" ".join(chunk).encode()).hexdigest())
+                ntoks.append(len(chunk))
+        return {"doc_id": ids, "chunk_idx": idxs, "chunk_md5": md5s, "n_toks": ntoks}
 
     bound = spread(docs).select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
     )
-    return bound.mapInPandas(
-        _iter, schema="doc_id long, chunk_idx long, chunk_md5 string, n_toks long"
+    return numpy_stage(
+        bound, "doc_id long, chunk_idx long, chunk_md5 string, n_toks long", _chunks
     )
 
 

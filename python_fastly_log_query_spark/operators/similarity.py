@@ -19,6 +19,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.arrow import numpy_stage
 from ..functions.columns import round_half_away
 
 
@@ -213,70 +214,28 @@ def banded_keys_np(
     bands: int,
     dim: int = 64,
     id_col: str = "vec_id",
+    exact: bool = False,
 ) -> DataFrame:
-    """Exploded ``(id, band, key)`` signature frame via ONE numpy matmul
-    per Arrow batch — the signature stage for auto-sized banded LSH.
+    """Exploded ``(id, band, key)`` signature frame via ONE numpy
+    projection per Arrow batch — the signature stage for banded LSH.
 
-    With auto-sizing, r*b plane projections per row as interpreted
-    Catalyst HOF aggregates (no codegen, no CSE) would dominate runtime
-    (hundreds of 64-element dots per row); a batched X @ P is the job a
-    BLAS matmul exists for.  Hyperplanes are the same deterministic
-    md5-derived ±1 vectors as :func:`lsh_bucket`.  Per-partition map, no
-    shuffle, embarrassingly parallel at any scale.
-    """
+    r*b plane projections per row as interpreted Catalyst HOF aggregates
+    (no codegen, no CSE) would dominate runtime (hundreds of 64-element
+    dots per row); a batched projection is the job numpy exists for.
+    Hyperplanes are the same deterministic md5-derived ±1 vectors as
+    :func:`lsh_bucket`.  Per-partition map, no shuffle, embarrassingly
+    parallel at any scale.
+
+    ``exact=False`` projects with one BLAS matmul (the auto-sized path).
+    ``exact=True`` uses :func:`_matmul_left`, whose projections are
+    BIT-IDENTICAL to :func:`lsh_bucket`'s Catalyst fold — including the
+    sign of a near-zero projection, which is what the key encodes; a
+    BLAS matmul sums pairwise and could flip it.  The fixed-mode oracle
+    twin needs that (measured 1.47s → 0.46s against the interpreted
+    keying stage for r=3, b=8 over 2k vectors at sf0.1).  The auto path
+    keeps the matmul: at 2000 vectors × 285 planes the fold takes
+    0.126 s against 0.008 s (4-core host, median of 7)."""
     import numpy as np
-    import pandas as pd
-
-    r, b = planes_per_band, bands
-    planes = np.array(
-        [hyperplane(k, dim) for k in range(r * b)], dtype=np.float64
-    ).T  # (dim, r*b)
-    weights = 1 << np.arange(r, dtype=np.int64)
-
-    def _iter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = (x @ planes >= 0).astype(np.int64).reshape(len(pdf), b, r)
-            keys = bits @ weights  # (n, b) little-endian packed, = lsh_bucket
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(np.int64), b),
-                    "band": np.tile(np.arange(b, dtype=np.int32), len(pdf)),
-                    "key": keys.reshape(-1),
-                }
-            )
-
-    return emb.select(id_col, "embedding").mapInPandas(
-        _iter, schema=f"{id_col} long, band int, key long"
-    )
-
-
-def banded_keys_np_exact(
-    emb: DataFrame,
-    planes_per_band: int,
-    bands: int,
-    dim: int = 64,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Fixed-mode twin of :func:`banded_keys_np` whose projections are
-    BIT-IDENTICAL to :func:`lsh_bucket`'s Catalyst fold (opt r6).
-
-    ``lsh_bucket`` evaluates ``aggregate(zip_with(e, p, x*y), 0.0, +)``
-    — elementwise double products summed STRICTLY left-to-right.  IEEE
-    binary64 multiply/add are correctly rounded and deterministic, so
-    one vectorized per-dimension add loop (accumulator seeded +0.0, the
-    :func:`_dot_left` association) reproduces every projection bit for
-    bit — including the sign of near-zero projections, which is what
-    the bucket key encodes.  A BLAS matmul would sum pairwise and could
-    flip a near-zero sign, changing the candidate set, which is why the
-    fixed/oracle-twin mode could not use :func:`banded_keys_np` as-is.
-    Replaces the interpreted HOF keying stage (r*b aggregate folds per
-    row, no codegen, no CSE): measured 1.47s → 0.46s for the r=3, b=8
-    signature stage over 2k vectors at sf0.1."""
-    import numpy as np
-    import pandas as pd
 
     r, b = planes_per_band, bands
     planes = np.array(
@@ -284,29 +243,18 @@ def banded_keys_np_exact(
     )  # (r*b, dim)
     weights = 1 << np.arange(r, dtype=np.int64)
 
-    def _iter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            proj = np.zeros((n, r * b), dtype=np.float64)
-            # strict left-to-right per-dimension adds: proj[:, k] ends up
-            # bit-identical to the Catalyst fold for plane k
-            for j in range(dim):
-                proj += x[:, j : j + 1] * planes[:, j]
-            bits = (proj >= 0).astype(np.int64).reshape(n, b, r)
-            keys = bits @ weights
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(np.int64), b),
-                    "band": np.tile(np.arange(b, dtype=np.int32), n),
-                    "key": keys.reshape(-1),
-                }
-            )
+    def _keys(cols):
+        x = cols["embedding"].astype(np.float64)
+        proj = _matmul_left(x, planes) if exact else x @ planes.T
+        bits = (proj >= 0).astype(np.int64).reshape(len(x), b, r)
+        return {
+            id_col: np.repeat(cols[id_col], b),
+            "band": np.tile(np.arange(b), len(x)),
+            "key": (bits @ weights).reshape(-1),  # little-endian, = lsh_bucket
+        }
 
-    return emb.select(id_col, "embedding").mapInPandas(
-        _iter, schema=f"{id_col} long, band int, key long"
+    return numpy_stage(
+        emb.select(id_col, "embedding"), f"{id_col} long, band int, key long", _keys
     )
 
 
@@ -344,6 +292,33 @@ def _dot_left(a, b, block: int = 262144):
     return acc
 
 
+def _matmul_left(x, w):
+    """``x @ w.T`` for float64 ``x`` (n, dim) and ``w`` (m, dim), each
+    entry summed STRICTLY left to right from +0.0 — :func:`_dot_left`'s
+    association, so entry (i, j) is bit-identical to
+    ``_dot_left(x[i], w[j])`` and to the Catalyst :func:`dot` fold.  One
+    vectorized multiply-add per dimension over the whole (n, m) block."""
+    import numpy as np
+
+    out = np.zeros((len(x), len(w)), dtype=np.float64)
+    for j in range(x.shape[1]):
+        out += x[:, j : j + 1] * w[:, j]
+    return out
+
+
+def _per_source_topk(a, b, cos, k: int):
+    """Indices of the first ``k`` rows per ``a`` in (a asc, cos desc,
+    b asc) order — the callers' ranking-window order; a NaN cosine sorts
+    last, as in pandas."""
+    import numpy as np
+
+    order = np.lexsort((b, -cos, a))
+    sa = a[order]
+    first = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
+    rank = np.arange(len(order)) - np.repeat(first, np.diff(np.r_[first, len(order)]))
+    return order[rank < k]
+
+
 def _emb_broadcast(emb: DataFrame, id_col: str):
     """Driver-side gather of (sorted ids, row-major float64 matrix, norms)
     shipped to workers as ONE Spark broadcast — the codebook pattern.
@@ -377,13 +352,13 @@ def exact_cosine_pairs(
 
     ``mode='broadcast'``: ship the whole (ids, matrix, norms) to workers
     once; each Arrow batch of pairs is two fancy-index gathers + one
-    einsum.  Right whenever the vector set fits executor memory (up to
+    strict-fold dot.  Right whenever the vector set fits executor memory (up to
     ~10^6-10^7 rows — the ANN-codebook regime).
 
     ``mode='join'``: equi-join the embedding column onto both pair sides
     (broadcast or shuffle hash join, Catalyst's choice), then one
-    mapInPandas computes cosine per batch — the 10^12-row path, no
-    driver-side gather anywhere.
+    :func:`numpy_stage` computes cosine per Arrow batch — the 10^12-row
+    path, no driver-side gather anywhere.
 
     ``mode='auto'`` picks by row count.  Returns (a_col, b_col, cosine
     double, unrounded); callers round/filter JVM-side so rounding
@@ -405,7 +380,6 @@ def exact_cosine_pairs(
     shuffle" move for ranking.
     """
     import numpy as np
-    import pandas as pd
 
     if mode == "auto":
         n = n_rows if n_rows is not None else emb.count()
@@ -421,6 +395,12 @@ def exact_cosine_pairs(
                 f"use mode='join' (the no-gather path) or raise the cap explicitly"
             )
     out_schema = f"{a_col} long, {b_col} long, cosine double"
+
+    def _scored(a, b, cos):
+        if per_source_topk is not None:
+            top = _per_source_topk(a, b, cos, per_source_topk)
+            a, b, cos = a[top], b[top], cos[top]
+        return {a_col: a, b_col: b, "cosine": cos}
 
     if mode == "broadcast":
         bc = _emb_broadcast(emb, id_col)
@@ -438,55 +418,25 @@ def exact_cosine_pairs(
                 )
             return idx
 
-        def _iter(batches):
+        def _cosine(cols):
             ids, mat, norms = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ia = _gather(ids, pdf[a_col].to_numpy(np.int64))
-                ib = _gather(ids, pdf[b_col].to_numpy(np.int64))
-                cos = _dot_left(mat[ia], mat[ib]) / (norms[ia] * norms[ib])
-                out = pd.DataFrame(
-                    {a_col: pdf[a_col], b_col: pdf[b_col], "cosine": cos}
-                )
-                if per_source_topk is not None:
-                    out = (
-                        out.sort_values(
-                            [a_col, "cosine", b_col],
-                            ascending=[True, False, True],
-                        )
-                        .groupby(a_col, sort=False)
-                        .head(per_source_topk)
-                    )
-                yield out
+            ia, ib = _gather(ids, cols[a_col]), _gather(ids, cols[b_col])
+            cos = _dot_left(mat[ia], mat[ib]) / (norms[ia] * norms[ib])
+            return _scored(cols[a_col], cols[b_col], cos)
 
-        return pairs.select(a_col, b_col).mapInPandas(_iter, schema=out_schema)
+        return numpy_stage(pairs.select(a_col, b_col), out_schema, _cosine)
 
     ea = emb.select(F.col(id_col).alias(a_col), F.col("embedding").alias("_ea"))
     eb = emb.select(F.col(id_col).alias(b_col), F.col("embedding").alias("_eb"))
     joined = pairs.select(a_col, b_col).join(ea, a_col).join(eb, b_col)
 
-    def _iter_join(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.stack(pdf["_ea"].to_numpy()).astype(np.float64)
-            b = np.stack(pdf["_eb"].to_numpy()).astype(np.float64)
-            cos = _dot_left(a, b) / (
-                np.sqrt(_dot_left(a, a)) * np.sqrt(_dot_left(b, b))
-            )
-            out = pd.DataFrame({a_col: pdf[a_col], b_col: pdf[b_col], "cosine": cos})
-            if per_source_topk is not None:
-                out = (
-                    out.sort_values(
-                        [a_col, "cosine", b_col], ascending=[True, False, True]
-                    )
-                    .groupby(a_col, sort=False)
-                    .head(per_source_topk)
-                )
-            yield out
+    def _cosine_join(cols):
+        a = cols["_ea"].astype(np.float64)
+        b = cols["_eb"].astype(np.float64)
+        cos = _dot_left(a, b) / (np.sqrt(_dot_left(a, a)) * np.sqrt(_dot_left(b, b)))
+        return _scored(cols[a_col], cols[b_col], cos)
 
-    return joined.mapInPandas(_iter_join, schema=out_schema)
+    return numpy_stage(joined, out_schema, _cosine_join)
 
 
 def banded_neardup_pairs(
@@ -508,12 +458,13 @@ def banded_neardup_pairs(
     dedup.py lsh_candidate_pairs).  Three-stage plan:
 
     1. signature — each row explodes to one NARROW ``(id, band, key)``
-       row per band (no embedding/norm payload through the shuffle).
-       FIXED mode (``planes_per_band`` given): Catalyst HOF bucket keys,
-       byte-mirrorable in a DuckDB oracle — the sf0.001/0.01 twin.
+       row per band (no embedding/norm payload through the shuffle),
+       keyed by the numpy stage :func:`banded_keys_np`.
+       FIXED mode (``planes_per_band`` given): its strict-fold
+       projections, bit-identical to the :func:`lsh_bucket` fold a
+       DuckDB oracle replays — the sf0.001/0.01 twin.
        AUTO mode (``planes_per_band=None``): ``(r, b)`` sized from a
-       count via :func:`banded_params` and keys computed by the numpy
-       matmul stage :func:`banded_keys_np`.
+       count via :func:`banded_params`, keys from its BLAS matmul.
     2. candidates — pure (band, key) equi-join (hash join, never a
        nested loop), ``id < id`` dedup, DISTINCT pair ids only.
     3. verify — exact cosine on candidates via the batched numpy stage
@@ -528,23 +479,17 @@ def banded_neardup_pairs(
     from .dedup import selfjoin_ready
 
     n = n_rows
-    if planes_per_band is None:
+    fixed = planes_per_band is not None
+    if fixed:
+        bands = 4 if bands is None else bands
+    else:
         n = emb.count() if n is None else n
         planes_per_band, bands = banded_params(
             n, threshold, target_recall, target_bucket_size, max_bands
         )
-        keyed_raw = banded_keys_np(spread(emb), planes_per_band, bands, dim, id_col)
-    else:
-        # fixed mode: keys via the strict-fold numpy stage — projections
-        # bit-identical to the lsh_bucket Catalyst fold the DuckDB twin
-        # replays, at batch speed instead of r*b interpreted HOF
-        # aggregates per row (see banded_keys_np_exact; opt r6)
-        bands = 4 if bands is None else bands
-        keyed_raw = banded_keys_np_exact(
-            spread(emb), planes_per_band, bands, dim, id_col
-        )
-
-    keyed = selfjoin_ready(keyed_raw)
+    keyed = selfjoin_ready(
+        banded_keys_np(spread(emb), planes_per_band, bands, dim, id_col, exact=fixed)
+    )
     a, b2 = keyed.alias("a"), keyed.alias("b")
     cand = (
         a.join(
@@ -591,7 +536,6 @@ def ivf_assign(
     (n_cells rows — dimension-sized) and closed over the stage.
     """
     import numpy as np
-    import pandas as pd
 
     from ..plans.partitioning import spread
 
@@ -603,32 +547,18 @@ def ivf_assign(
     )
     C = np.stack(cpdf["embedding"].to_numpy()).astype(np.float64)
     cnorm = np.sqrt(_dot_left(C, C))
-    dim = C.shape[1]
 
-    def _iter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            xnorm = np.sqrt(_dot_left(X, X))
-            # strict left-to-right fold per (row, centroid) pair
-            dots = np.zeros((n, len(C)), dtype=np.float64)
-            for j in range(dim):
-                dots += X[:, j : j + 1] * C[:, j]
-            cos = dots / (xnorm[:, None] * cnorm[None, :])
-            cells = np.argmax(cos, axis=1).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": pdf["embedding"],
-                    "_norm": xnorm,
-                    "cell": cells,
-                }
-            )
+    def _assign(cols):
+        X = cols["embedding"].astype(np.float64)
+        xnorm = np.sqrt(_dot_left(X, X))
+        cos = _matmul_left(X, C) / (xnorm[:, None] * cnorm[None, :])
+        return {"_norm": xnorm, "cell": np.argmax(cos, axis=1)}
 
-    return spread(emb).select(id_col, "embedding").mapInPandas(
-        _iter, schema=f"{id_col} long, embedding array<float>, _norm double, cell long"
+    return numpy_stage(
+        spread(emb).select(id_col, "embedding"),
+        f"{id_col} long, embedding array<float>, _norm double, cell long",
+        _assign,
+        keep=(id_col, "embedding"),
     )
 
 
@@ -739,31 +669,20 @@ def _km_assign_df(
     (k*dim longs; broadcasts identically at deploy scale).  ``keep``
     columns ride the Arrow batch untouched so callers that scan within
     cells (:func:`ivf_learned_topk`) stay map-only.  No shuffle."""
-    import numpy as np
-    import pandas as pd
-
     C, c2 = _km_np(centroids)
     extra = "".join(
         f", {c} {df.schema[c].dataType.simpleString()}" for c in keep
     )
 
-    def _iter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf[vec_col].to_numpy()).astype(np.int64)
-            cells, dists = _km_assign_batch(Q, C, c2)
-            out = {
-                id_col: pdf[id_col].to_numpy(np.int64),
-                "cell": cells.astype(np.int32),
-                "dist_sq": dists,
-            }
-            for c in keep:
-                out[c] = pdf[c].to_numpy()
-            yield pd.DataFrame(out)
+    def _assign(cols):
+        cells, dists = _km_assign_batch(cols[vec_col], C, c2)
+        return {"cell": cells, "dist_sq": dists}
 
-    return df.select(id_col, vec_col, *keep).mapInPandas(
-        _iter, schema=f"{id_col} long, cell int, dist_sq long{extra}"
+    return numpy_stage(
+        df.select(id_col, vec_col, *keep),
+        f"{id_col} long, cell int, dist_sq long{extra}",
+        _assign,
+        keep=(id_col, *keep),
     )
 
 
@@ -777,33 +696,25 @@ def _km_partials(
     rows per batch instead of n*dim exploded rows.  All int64 sums,
     associative, so any batch/partition split yields the same total."""
     import numpy as np
-    import pandas as pd
 
     C, c2 = _km_np(centroids)
     k, dim = C.shape
 
-    def _iter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf[vec_col].to_numpy()).astype(np.int64)
-            cells, _ = _km_assign_batch(Q, C, c2)
-            s = np.zeros((k, dim), dtype=np.int64)
-            np.add.at(s, cells, Q)
-            n = np.bincount(cells, minlength=k).astype(np.int64)
-            occ = np.nonzero(n)[0]
-            yield pd.DataFrame(
-                {
-                    "cell": np.repeat(occ.astype(np.int32), dim),
-                    "d": np.tile(np.arange(dim, dtype=np.int32), len(occ)),
-                    "s": s[occ].reshape(-1),
-                    "n": np.repeat(n[occ], dim),
-                }
-            )
+    def _partials(cols):
+        Q = cols[vec_col]
+        cells, _ = _km_assign_batch(Q, C, c2)
+        s = np.zeros((k, dim), dtype=np.int64)
+        np.add.at(s, cells, Q)
+        n = np.bincount(cells, minlength=k).astype(np.int64)
+        occ = np.nonzero(n)[0]
+        return {
+            "cell": np.repeat(occ, dim),
+            "d": np.tile(np.arange(dim), len(occ)),
+            "s": s[occ].reshape(-1),
+            "n": np.repeat(n[occ], dim),
+        }
 
-    return df.select(vec_col).mapInPandas(
-        _iter, schema="cell int, d int, s long, n long"
-    )
+    return numpy_stage(df.select(vec_col), "cell int, d int, s long, n long", _partials)
 
 
 def kmeans_fit(
@@ -1041,29 +952,18 @@ def _km_probe_df(
     documented KMEANS_SCALE bounds) replays the oracle's
     ``row_number() OVER (ORDER BY dist, cell)`` exactly."""
     import numpy as np
-    import pandas as pd
 
     C, c2 = _km_np(centroids)
     k = C.shape[0]
 
-    def _iter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf[vec_col].to_numpy()).astype(np.int64)
-            d = np.einsum("ij,ij->i", Q, Q)[:, None] - 2 * (Q @ C.T) + c2[None, :]
-            key = d * k + np.arange(k, dtype=np.int64)[None, :]
-            order = np.argsort(key, axis=1)[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(np.int64), nprobe),
-                    "cell": order.reshape(-1).astype(np.int32),
-                }
-            )
+    def _probe(cols):
+        Q = cols[vec_col]
+        d = np.einsum("ij,ij->i", Q, Q)[:, None] - 2 * (Q @ C.T) + c2[None, :]
+        key = d * k + np.arange(k, dtype=np.int64)[None, :]
+        order = np.argsort(key, axis=1)[:, :nprobe]
+        return {id_col: np.repeat(cols[id_col], nprobe), "cell": order.reshape(-1)}
 
-    return df.select(id_col, vec_col).mapInPandas(
-        _iter, schema=f"{id_col} long, cell int"
-    )
+    return numpy_stage(df.select(id_col, vec_col), f"{id_col} long, cell int", _probe)
 
 
 def knn_graph_learned(
@@ -1328,7 +1228,6 @@ def pq_codes(
     computation per Arrow batch (shuffle-free per-partition map); the
     DuckDB oracle recomputes the same argmin relationally."""
     import numpy as np
-    import pandas as pd
 
     sw = dim // n_subs
     cents_pdf = (
@@ -1339,29 +1238,20 @@ def pq_codes(
     )
     bc = emb.sparkSession.sparkContext.broadcast(c)
 
-    def _iter(batches):
-        cents = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64).reshape(
-                len(pdf), n_subs, sw
-            )
-            # (B, n_cents, n_subs): squared L2 per subspace; argmin takes
-            # the FIRST minimum = lowest centroid id (tie rule)
-            diff = x[:, None, :, :] - cents[None, :, :, :]
-            d = (diff * diff).sum(-1)
-            codes = d.argmin(axis=1)  # (B, n_subs)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(np.int64), n_subs),
-                    "sub": np.tile(np.arange(n_subs, dtype=np.int32), len(pdf)),
-                    "code": codes.reshape(-1).astype(np.int32),
-                }
-            )
+    def _codes(cols):
+        x = cols["embedding"].astype(np.float64).reshape(-1, n_subs, sw)
+        # (B, n_cents, n_subs): squared L2 per subspace; argmin takes
+        # the FIRST minimum = lowest centroid id (tie rule)
+        diff = x[:, None, :, :] - bc.value[None, :, :, :]
+        codes = (diff * diff).sum(-1).argmin(axis=1)  # (B, n_subs)
+        return {
+            id_col: np.repeat(cols[id_col], n_subs),
+            "sub": np.tile(np.arange(n_subs), len(x)),
+            "code": codes.reshape(-1),
+        }
 
-    return emb.select(id_col, "embedding").mapInPandas(
-        _iter, schema=f"{id_col} long, sub int, code int"
+    return numpy_stage(
+        emb.select(id_col, "embedding"), f"{id_col} long, sub int, code int", _codes
     )
 
 
@@ -1605,7 +1495,6 @@ def semantic_decontam(
     to the f64 oracle) + one row-wise argmax; the corpus never
     shuffles and nothing doc-sized hits the driver."""
     import numpy as np
-    import pandas as pd
 
     ev = emb.filter(F.col(id_col) % eval_mod == 0)
     n_eval = ev.count()
@@ -1617,27 +1506,21 @@ def semantic_decontam(
     b = _emb_broadcast(ev, id_col)
     train = with_norm(emb.filter(F.col(id_col) % eval_mod != 0))
 
-    def _iter(batches):
+    def _nearest(cols):
         eids, emat, enorms = b.value
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = pdf["_norm"].to_numpy(np.float64)
-            m = len(pdf)
-            cos = np.empty((m, len(eids)), dtype=np.float64)
-            for j in range(len(eids)):
-                ej = np.broadcast_to(emat[j], mat.shape)
-                cos[:, j] = _dot_left(mat, ej) / (norms * enorms[j])
-            best = cos.argmax(axis=1)  # first occurrence = smallest eval id
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(np.int64),
-                    "near_eval_id": eids[best],
-                    "c": cos[np.arange(m), best],
-                }
-            )
+        X = cols["embedding"].astype(np.float64)
+        cos = _matmul_left(X, emat) / (cols["_norm"][:, None] * enorms[None, :])
+        best = cos.argmax(axis=1)  # first occurrence = smallest eval id
+        return {
+            "near_eval_id": eids[best],
+            "c": cos[np.arange(len(best)), best],
+        }
 
-    scored = train.select(id_col, "embedding", "_norm").mapInPandas(
-        _iter, schema=f"{id_col} long, near_eval_id long, c double"
+    scored = numpy_stage(
+        train.select(id_col, "embedding", "_norm"),
+        f"{id_col} long, near_eval_id long, c double",
+        _nearest,
+        keep=(id_col,),
     )
     return scored.select(
         id_col,

@@ -24,6 +24,7 @@ from .functions.columns import round_half_away, status_class
 from .operators import aggregates as agg
 from .operators.enrich import enrich_geoip
 from .plans.lasthours import filter_last_hours
+from .session import SEMANTIC_CONFS, work_root
 
 # ---------------------------------------------------------------- helpers
 
@@ -52,7 +53,7 @@ def _r(df: DataFrame, cols: list[str], nd: int = 4) -> DataFrame:
 
 
 def _parsed(spark: SparkSession, sf: str) -> DataFrame:
-    """Oracle corpus through the pandas grok parser, all columns."""
+    """Oracle corpus through the Arrow grok parser, all columns."""
     return oc.parsed_events(spark, sf)
 
 
@@ -1572,18 +1573,6 @@ def q_embedding_neardup_banded_auto(spark, sf):
 _STREAM_SCRATCH: dict[str, tuple[str, str]] = {}
 
 
-def _scratch_root() -> str:
-    """Scratch root for streaming checkpoints / staged tables: overridable
-    via SPARK_GRAFT_WORK_DIR, else the system temp dir (ADVICE r3: never a
-    hardcoded checkout path — the registry must run from any location,
-    including a --py-files zip where the package has no on-disk dir)."""
-    import tempfile
-
-    return os.environ.get("SPARK_GRAFT_WORK_DIR") or os.path.join(
-        tempfile.gettempdir(), "pflq_spark_work"
-    )
-
-
 # Stateful-operator partition count for the streaming drains (opt r6).
 _STREAM_STATE_PARTITIONS = 8
 
@@ -1625,7 +1614,7 @@ def _stream_scratch(spark: SparkSession, family: str) -> tuple[str, str]:
         except Exception:
             pass
     run_id = uuid.uuid4().hex[:12]
-    work = os.path.join(_scratch_root(), family, run_id)
+    work = os.path.join(work_root(), family, run_id)
     name = f"{family}_{run_id}"
     _STREAM_SCRATCH[family] = (work, name)
     return work, name
@@ -1644,7 +1633,7 @@ def _land_log_stream(
     dir, the sink/query name and the parsed stream.
 
     The landing write fans to the stream sizing (opt r6): a single-file
-    src runs every micro-batch's pandas parse as ONE task, while
+    src runs every micro-batch's parse as ONE task, while
     defaultParallelism-many files pay file-count write/listing/commit
     overhead a 100k-row batch never recoups (measured: 8-file drain 0.57s
     vs 32-file 0.75-1.5s; AvailableNow with no trigger cap still drains
@@ -8455,8 +8444,8 @@ def _with_session_confs(fn: SparkQuery, conf: dict[str, str]) -> SparkQuery:
         from .operators.dedup import release_persists
 
         release_persists()
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        for k, v in SEMANTIC_CONFS.items():
+            spark.conf.set(k, v)
         prev = {k: spark.conf.get(k, None) for k in conf}
         for k, v in conf.items():
             spark.conf.set(k, v)

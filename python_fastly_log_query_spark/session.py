@@ -20,16 +20,33 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# The semantics-critical confs of the module docstring, set on every
+# session this engine builds or runs a registry query on.
+SEMANTIC_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+}
+
+
+def work_root() -> str:
+    """Scratch root for the warehouse, streaming checkpoints and staged
+    tables: ``$SPARK_GRAFT_WORK_DIR``, else ``<tmp>/pflq_spark_work``.
+    Never a checkout path, so the package runs from any location, a
+    ``--py-files`` zip included."""
+    return os.environ.get("SPARK_GRAFT_WORK_DIR") or os.path.join(
+        tempfile.gettempdir(), "pflq_spark_work"
+    )
+
 
 def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply this engine's required configs to any SparkSession builder."""
     mem = _driver_mem()
     if mem is not None:
         builder = builder.config("spark.driver.memory", mem)
+    for k, v in SEMANTIC_CONFS.items():
+        builder = builder.config(k, v)
     return (
-        builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        builder.config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -54,14 +71,7 @@ def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
         # bucketed tables (plans/bucketing.py) register in the session
         # catalog; keep their data out of the repo cwd
-        .config(
-            "spark.sql.warehouse.dir",
-            os.path.join(
-                os.environ.get("SPARK_GRAFT_WORK_DIR")
-                or os.path.join(tempfile.gettempdir(), "pflq_spark_work"),
-                "spark-warehouse",
-            ),
-        )
+        .config("spark.sql.warehouse.dir", os.path.join(work_root(), "spark-warehouse"))
         .config("spark.ui.enabled", "false")
     )
 

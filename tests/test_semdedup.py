@@ -72,22 +72,34 @@ def test_semdedup_plan_cell_equi_join_and_persisted_ordering(spark):
 
 
 def test_dot_left_is_exact_left_assoc_fold():
-    """_dot_left must be BIT-IDENTICAL to the scalar left-to-right fold
-    the SQL oracles use (acc starts at +0.0), at every tile boundary."""
+    """_dot_left and _matmul_left must be BIT-IDENTICAL to the scalar
+    left-to-right fold the SQL oracles use (acc starts at +0.0), at every
+    tile boundary."""
     import numpy as np
 
-    from python_fastly_log_query_spark.operators.similarity import _dot_left
+    from python_fastly_log_query_spark.operators.similarity import (
+        _dot_left,
+        _matmul_left,
+    )
 
     rng = np.random.default_rng(7)
     n = 1000
     a = rng.standard_normal((n, 64))
     b = rng.standard_normal((n, 64))
     got = _dot_left(a, b, block=256)  # force several tiles
+    w = b[:40]
+    mm = _matmul_left(a, w)
+    assert mm.shape == (n, 40)
     for i in rng.integers(0, n, 100):
         acc = 0.0
         for j in range(64):
             acc += a[i, j] * b[i, j]
         assert got[i] == acc  # bitwise, no tolerance
+        for r in rng.integers(0, 40, 3):
+            acc = 0.0
+            for j in range(64):
+                acc += a[i, j] * w[r, j]
+            assert mm[i, r] == acc
 
 
 def test_semantic_decontam_flags_planted_leak(spark):
