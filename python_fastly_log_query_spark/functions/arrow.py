@@ -1,13 +1,18 @@
-"""One Arrow-batched numpy stage for the operators whose work is numpy.
+"""Arrow is the one batch format between the JVM and Python.
 
-:func:`numpy_stage` is a single ``mapInArrow`` stage: each Arrow batch
-reaches ``fn`` as numpy columns, and ``fn``'s arrays go back as Arrow
-arrays of the declared schema's types — no pandas frame either way.
+- :func:`numpy_stage` is a single ``mapInArrow`` stage: each Arrow batch
+  reaches ``fn`` as numpy columns, and ``fn``'s arrays go back as Arrow
+  arrays of the declared schema's types — no pandas frame either way.
+- :func:`row_stage` is the same stage for row-wise work (codecs,
+  splitters): ``fn`` maps a partition's rows to output rows.
+- :func:`collect_columns` gathers a small frame onto the driver with one
+  ``toArrow()``, its columns converted as a numpy stage reads them.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from itertools import islice
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -31,6 +36,8 @@ def column_values(name: str, col: pa.Array):
         return col.to_numpy(zero_copy_only=False)
     flat = col.flatten()
     lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if not len(col):
+        return flat.to_numpy(zero_copy_only=False).reshape(0, 0)
     if col.null_count or flat.null_count or (lengths != lengths[0]).any():
         raise ValueError(
             f"array column {name!r} needs one length and no null row or "
@@ -38,6 +45,26 @@ def column_values(name: str, col: pa.Array):
             f"{col.null_count} null rows, {flat.null_count} null elements"
         )
     return flat.to_numpy(zero_copy_only=False).reshape(len(col), int(lengths[0]))
+
+
+def collect_columns(df: DataFrame) -> dict:
+    """``df`` gathered onto the driver with ONE ``toArrow()``:
+    ``{column: values}``, each converted by :func:`column_values`.
+    Dimension-sized frames only (a codebook, an edge list under a cap)."""
+    table = df.toArrow()
+    return {
+        name: column_values(name, table.column(name).combine_chunks())
+        for name in table.column_names
+    }
+
+
+def _schemas(schema: str) -> tuple[T.StructType, pa.Schema]:
+    """The DDL ``schema`` as Spark's struct and as the Arrow schema its
+    batches are built with (``to_arrow_type`` per field)."""
+    out_schema = T.DataType.fromDDL(schema)
+    return out_schema, pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields]
+    )
 
 
 class _Columns(dict):
@@ -70,9 +97,9 @@ def numpy_stage(
     declared type without overflow checks (Spark's pandas conversion does
     not check either), so ``fn`` must then return one row per input row.
     """
-    out_schema = T.DataType.fromDDL(schema)
-    names = out_schema.names
-    types = [to_arrow_type(f.dataType) for f in out_schema.fields]
+    out_schema, arrow_schema = _schemas(schema)
+    names = arrow_schema.names
+    types = arrow_schema.types
 
     def _iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -88,5 +115,35 @@ def numpy_stage(
                 ],
                 names=names,
             )
+
+    return df.mapInArrow(_iter, schema=out_schema)
+
+
+# rows per output batch of :func:`row_stage` (the session's
+# ``spark.sql.execution.arrow.maxRecordsPerBatch``)
+_ROWS_PER_BATCH = 10_000
+
+
+def row_stage(
+    df: DataFrame,
+    schema: str,
+    fn: Callable[[Iterator[dict]], Iterable[dict]],
+) -> DataFrame:
+    """Run ``fn`` over each partition of ``df`` as ONE ``mapInArrow`` stage
+    whose output has the DDL ``schema``.
+
+    ``fn`` takes the partition's rows as an iterator of ``{column: value}``
+    dicts (Arrow's Python values: ``bytes`` for binary, ``int`` for long)
+    and yields output rows as dicts; it may yield any number of rows per
+    input row and may keep state across the whole partition.  A missing
+    key is NULL.  Output rows are built into batches of the declared
+    Arrow types, :data:`_ROWS_PER_BATCH` rows at a time.
+    """
+    out_schema, arrow_schema = _schemas(schema)
+
+    def _iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = iter(fn(row for batch in batches for row in batch.to_pylist()))
+        while chunk := list(islice(rows, _ROWS_PER_BATCH)):
+            yield pa.RecordBatch.from_pylist(chunk, schema=arrow_schema)
 
     return df.mapInArrow(_iter, schema=out_schema)

@@ -57,7 +57,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1222,6 +1221,25 @@ def bloom_bitset(fps: DataFrame, m: int, k: int, max_bits: int = 1 << 30):
     return bits
 
 
+def bloom_probe(bbits):
+    """Membership test against a broadcast :func:`bloom_bitset` as one
+    Arrow UDF over a :func:`bloom_positions` column: True where all ``k``
+    of a row's bits are set (a bitset probe has no Column encoding)."""
+    from pyspark.sql.functions import arrow_udf
+
+    from ..functions.arrow import column_values
+
+    def maybe_in(pos):
+        import pyarrow as pa
+
+        bs = bbits.value
+        arr = column_values("pos", pos)  # (rows, k) int64
+        hit = (bs[arr // 8] >> (arr % 8).astype(np.uint8)) & 1
+        return pa.array(hit.all(axis=1))
+
+    return arrow_udf(maybe_in, "boolean")
+
+
 def incremental_dedup_bloom(
     corpus: DataFrame,
     batch: DataFrame,
@@ -1235,7 +1253,7 @@ def incremental_dedup_bloom(
     2. build a corpus bloom (:func:`bloom_bitset`, input-sized m) and
        broadcast the bitset;
     3. batch rows test membership in a vectorized Arrow batch
-       (`pandas_udf` — a bitset probe has no Column encoding);
+       (:func:`bloom_probe`);
     4. bloom-positive candidates are verified EXACTLY: the corpus is
        probed with a broadcast-hash semi-join against the (tiny)
        candidate fp set — map-only over the corpus — and the confirmed
@@ -1248,22 +1266,12 @@ def incremental_dedup_bloom(
     deterministic (md5), caught by the verify, and visible in the output
     as ``bloom_maybe=1, is_dup=0`` rows.
     """
-    from pyspark.sql.functions import pandas_udf
-
     spark = corpus.sparkSession
     n = corpus.count()
     m, k = bloom_params(n, bits_per_key, n_hashes)
 
     cfp = corpus.select(F.md5(F.col("text")).alias("fp"))
-    bits = bloom_bitset(cfp, m, k)
-    bbits = spark.sparkContext.broadcast(bits)
-
-    @pandas_udf("boolean")
-    def maybe_in(pos: pd.Series) -> pd.Series:
-        bs = bbits.value
-        arr = np.vstack(pos.to_numpy())  # (rows, k) int64
-        hit = (bs[arr // 8] >> (arr % 8).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=1))
+    maybe_in = bloom_probe(spark.sparkContext.broadcast(bloom_bitset(cfp, m, k)))
 
     from .dedup import selfjoin_ready
 
@@ -1776,22 +1784,13 @@ def bloom_semijoin(
     result is row-identical to the plain join, which is the registered
     oracle's check.  Returns the prefiltered ``facts`` (same schema).
     """
-    from pyspark.sql.functions import pandas_udf
-
     spark = facts.sparkSession
     n = dim.count()
     m, k = bloom_params(n, bits_per_key, n_hashes)
     bits = bloom_bitset(
         dim.select(F.col(key).cast("string").alias("fp")), m, k
     )
-    bbits = spark.sparkContext.broadcast(bits)
-
-    @pandas_udf("boolean")
-    def maybe_in(pos: pd.Series) -> pd.Series:
-        bs = bbits.value
-        arr = np.vstack(pos.to_numpy())
-        hit = (bs[arr // 8] >> (arr % 8).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=1))
+    maybe_in = bloom_probe(spark.sparkContext.broadcast(bits))
 
     return facts.withColumn(
         "_maybe",

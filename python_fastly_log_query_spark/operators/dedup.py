@@ -455,26 +455,31 @@ def simhash_docs(docs: DataFrame, bits: int = 16, ngram: int = 1) -> DataFrame:
     # little-endian pack with bit 63 wrapping into the sign exactly like
     # shiftleft) — verified exceptAll 0/0 against the fold at both
     # (64, 3-gram) and (16, unigram).  Measured 2.2s -> 0.73s.
+    import itertools
+
     import numpy as np
 
     from ..functions.arrow import numpy_stage
 
     def _vote(cols):
-        out = np.empty(len(cols["_th"]), dtype=np.int64)
-        for i, toks in enumerate(cols["_th"]):
-            dig = np.frombuffer(
-                "".join(toks).encode(), dtype=np.uint8
-            ).reshape(len(toks), -1)[:, :bits]
-            # hex digit >= '8': bytes are 0-9a-f, so byte >= ord('8')
-            votes = 2 * (dig >= 56).sum(axis=0, dtype=np.int64) - len(toks)
-            packed = int(
-                (
-                    (votes >= 0).astype(np.uint64)
-                    << np.arange(bits, dtype=np.uint64)
-                ).sum(dtype=np.uint64)
-            )
-            out[i] = packed - (1 << 64) if packed >= (1 << 63) else packed
-        return {"simhash": out}
+        toks = cols["_th"]
+        n_toks = np.fromiter(map(len, toks), np.int64, len(toks))
+        # reduceat reads an empty segment as its next row's first token;
+        # split and word_shingles never return an empty array
+        assert n_toks.all(), "simhash_docs: a document with no features"
+        # every digest has one width: the batch's tokens as one byte matrix
+        dig = np.frombuffer(
+            "".join(itertools.chain.from_iterable(toks)).encode(), dtype=np.uint8
+        ).reshape(int(n_toks.sum()), -1)[:, :bits]
+        # hex digit >= '8': bytes are 0-9a-f, so byte >= ord('8')
+        starts = np.concatenate([[0], np.cumsum(n_toks)[:-1]])
+        high = np.add.reduceat((dig >= 56).astype(np.int64), starts, axis=0)
+        votes = 2 * high - n_toks[:, None]
+        packed = ((votes >= 0).astype(np.uint64) << np.arange(bits, dtype=np.uint64)).sum(
+            axis=1, dtype=np.uint64
+        )
+        # bit 63 wraps into the sign, as shiftleft does
+        return {"simhash": packed.view(np.int64)}
 
     return numpy_stage(hashed, "doc_id long, simhash long", _vote, keep=("doc_id",))
 
@@ -656,7 +661,9 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
     """Union-find over a driver-collected (big, small) edge frame —
     the small-graph fast path of :func:`connected_components` (callers
     guarantee the count is under ``driver_max_edges``)."""
-    pdf = e.toPandas()
+    from ..functions.arrow import collect_columns
+
+    edges = collect_columns(e.select("big", "small"))
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -666,8 +673,8 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for a, b in zip(pdf["big"].to_numpy(), pdf["small"].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
+    for a, b in zip(edges["big"].tolist(), edges["small"].tolist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     rows = [(n, find(n)) for n in parent]

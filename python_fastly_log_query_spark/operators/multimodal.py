@@ -2,7 +2,7 @@
 metadata (driver brief).
 
 The Spark-side plumbing is real — schemas, partition-preserving
-``mapInPandas`` stages, Arrow batch shapes, deterministic feature
+Arrow row stages (``functions.arrow.row_stage``), deterministic feature
 extraction.  Codec status (VERDICT r4 item 7):
 
 - **WAV audio is a REAL codec path**: :func:`wav_from_docs` writes
@@ -36,9 +36,10 @@ import hashlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..functions.arrow import row_stage
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, data binary, meta map<string,string>"
@@ -136,51 +137,47 @@ def wav_from_docs(docs: DataFrame) -> DataFrame:
     - 32768 with seed = first 8 hex digits of md5('wav-' || id).
     Per-partition map; payloads stay in Arrow buffers."""
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
         import io
         import struct
         import wave
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rate = 8000 if did % 2 == 0 else 16000
-                n = 100 + did % 400
-                seed = int(hashlib.md5(f"wav-{did}".encode()).hexdigest()[:8], 16)
-                samples = [
-                    ((seed + 2654435761 * i) % 65536) - 32768 for i in range(n)
-                ]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(rate)
-                    w.writeframes(struct.pack(f"<{n}h", *samples))
-                rows.append(
-                    {"media_id": did, "kind": "audio", "data": buf.getvalue(),
-                     "meta": {"codec": "pcm_s16le"}}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "data", "meta"])
+        for row in rows:
+            did = row["doc_id"]
+            rate = 8000 if did % 2 == 0 else 16000
+            n = 100 + did % 400
+            seed = int(hashlib.md5(f"wav-{did}".encode()).hexdigest()[:8], 16)
+            samples = [((seed + 2654435761 * i) % 65536) - 32768 for i in range(n)]
+            buf = io.BytesIO()
+            with wave.open(buf, "wb") as w:
+                w.setnchannels(1)
+                w.setsampwidth(2)
+                w.setframerate(rate)
+                w.writeframes(struct.pack(f"<{n}h", *samples))
+            yield {"media_id": did, "kind": "audio", "data": buf.getvalue(),
+                   "meta": {"codec": "pcm_s16le"}}
 
-    return docs.select("doc_id").mapInPandas(_iter, schema=MEDIA_SCHEMA)
+    return row_stage(docs.select("doc_id"), MEDIA_SCHEMA, _rows)
+
+
+def _strict_decode(media: DataFrame, parse, schema: str, codec: str) -> DataFrame:
+    """One Arrow row stage that decodes every payload with ``parse`` and
+    raises on the first payload ``parse`` rejects (returns None for)."""
+
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
+        for row in rows:
+            got = parse(row["data"])
+            if got is None:
+                raise ValueError(f"media_id {row['media_id']}: payload is not {codec}")
+            yield {"media_id": row["media_id"], **got}
+
+    return row_stage(media.select("media_id", "data"), schema, _rows)
 
 
 def decode_wav(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL audio decode: every payload must be RIFF/WAVE
     (raises otherwise — this is the strict path by construction)."""
-
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for m, d in zip(pdf["media_id"], pdf["data"]):
-                got = _wav_parse(bytes(d))
-                if got is None:
-                    raise ValueError(f"media_id {m}: payload is not RIFF/WAVE")
-                rows.append({"media_id": m, **got})
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_iter, schema=WAV_DECODED_SCHEMA)
+    return _strict_decode(media, _wav_parse, WAV_DECODED_SCHEMA, "RIFF/WAVE")
 
 
 def decode_media(media: DataFrame, strict: bool = False) -> DataFrame:
@@ -189,29 +186,24 @@ def decode_media(media: DataFrame, strict: bool = False) -> DataFrame:
     NotImplementedError exactly where the remaining image/video codecs
     belong, instead of faking them."""
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for m, k, d in zip(pdf["media_id"], pdf["kind"], pdf["data"]):
-                data = bytes(d)
-                wav = _wav_parse(data)
-                if wav is not None:
-                    rows.append(
-                        {"media_id": m, "kind": k, "width": 0, "height": 0,
-                         "n_frames": wav["n_frames"], "n_bytes": len(data),
-                         "sha1": hashlib.sha1(data).hexdigest()}
-                    )
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "no real image/video codec in this environment; "
-                        "plug a decoder into _fake_decode (WAV audio "
-                        "already decodes for real)"
-                    )
-                rows.append({"media_id": m, "kind": k, **_fake_decode(data, k)})
-            yield pd.DataFrame(rows)
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
+        for row in rows:
+            m, k, data = row["media_id"], row["kind"], row["data"]
+            wav = _wav_parse(data)
+            if wav is not None:
+                yield {"media_id": m, "kind": k, "width": 0, "height": 0,
+                       "n_frames": wav["n_frames"], "n_bytes": len(data),
+                       "sha1": hashlib.sha1(data).hexdigest()}
+                continue
+            if strict:
+                raise NotImplementedError(
+                    "no real image/video codec in this environment; "
+                    "plug a decoder into _fake_decode (WAV audio "
+                    "already decodes for real)"
+                )
+            yield {"media_id": m, "kind": k, **_fake_decode(data, k)}
 
-    return media.mapInPandas(_iter, schema=DECODED_SCHEMA)
+    return row_stage(media.select("media_id", "kind", "data"), DECODED_SCHEMA, _rows)
 
 
 def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
@@ -230,28 +222,25 @@ def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     if not 1 <= dim <= 8:
         raise ValueError("sha256 yields 8 uint32 lanes; dim must be in [1, 8]")
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
         import math
         import struct
 
-        for pdf in batches:
-            feats = []
-            for d in pdf["data"]:
-                u = struct.unpack("<8I", hashlib.sha256(bytes(d)).digest())[:dim]
-                v = [(x % 1000) / 1000.0 - 0.5 for x in u]
-                acc = 0.0
-                for x in v:  # sequential, mirrors SQL v0*v0 + v1*v1 + ...
-                    acc = acc + x * x
-                norm = math.sqrt(acc)
-                feats.append(
-                    [np.float32(x / norm) for x in v] if norm else
-                    [np.float32(x) for x in v]
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "kind": pdf["kind"], "features": feats}
-            )
+        for row in rows:
+            u = struct.unpack("<8I", hashlib.sha256(row["data"]).digest())[:dim]
+            v = [(x % 1000) / 1000.0 - 0.5 for x in u]
+            acc = 0.0
+            for x in v:  # sequential, mirrors SQL v0*v0 + v1*v1 + ...
+                acc = acc + x * x
+            norm = math.sqrt(acc)
+            yield {
+                "media_id": row["media_id"],
+                "kind": row["kind"],
+                "features": [np.float32(x / norm) for x in v] if norm else
+                [np.float32(x) for x in v],
+            }
 
-    return media.mapInPandas(_iter, schema=FEATURES_SCHEMA)
+    return row_stage(media.select("media_id", "kind", "data"), FEATURES_SCHEMA, _rows)
 
 
 # ------------------------------------------------------------ BMP (image)
@@ -281,41 +270,36 @@ def bmp_from_docs(docs: DataFrame) -> DataFrame:
     channel value = (seed + 97x + 131y + 57c) % 256 with seed = first
     8 hex digits of md5('bmp-' || id)."""
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
         import struct
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 4 + did % 13
-                h = 3 + did % 5
-                seed = int(hashlib.md5(f"bmp-{did}".encode()).hexdigest()[:8], 16)
-                pad = (4 - (3 * w) % 4) % 4
-                stride = 3 * w + pad
-                body = bytearray()
-                for y in range(h - 1, -1, -1):  # bottom-up storage
-                    for x in range(w):
-                        body += bytes(
-                            (
-                                _bmp_px(seed, x, y, 2),  # B first on disk
-                                _bmp_px(seed, x, y, 1),
-                                _bmp_px(seed, x, y, 0),
-                            )
+        for row in rows:
+            did = row["doc_id"]
+            w = 4 + did % 13
+            h = 3 + did % 5
+            seed = int(hashlib.md5(f"bmp-{did}".encode()).hexdigest()[:8], 16)
+            pad = (4 - (3 * w) % 4) % 4
+            stride = 3 * w + pad
+            body = bytearray()
+            for y in range(h - 1, -1, -1):  # bottom-up storage
+                for x in range(w):
+                    body += bytes(
+                        (
+                            _bmp_px(seed, x, y, 2),  # B first on disk
+                            _bmp_px(seed, x, y, 1),
+                            _bmp_px(seed, x, y, 0),
                         )
-                    body += b"\x00" * pad
-                size = 54 + h * stride
-                hdr = struct.pack("<2sIHHI", b"BM", size, 0, 0, 54)
-                info = struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * stride, 2835, 2835, 0, 0
-                )
-                rows.append(
-                    {"media_id": did, "kind": "image",
-                     "data": bytes(hdr + info + body), "meta": {"codec": "bmp24"}}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "data", "meta"])
+                    )
+                body += b"\x00" * pad
+            size = 54 + h * stride
+            hdr = struct.pack("<2sIHHI", b"BM", size, 0, 0, 54)
+            info = struct.pack(
+                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * stride, 2835, 2835, 0, 0
+            )
+            yield {"media_id": did, "kind": "image",
+                   "data": bytes(hdr + info + body), "meta": {"codec": "bmp24"}}
 
-    return docs.select("doc_id").mapInPandas(_iter, schema=MEDIA_SCHEMA)
+    return row_stage(docs.select("doc_id"), MEDIA_SCHEMA, _rows)
 
 
 def _bmp_parse(data: bytes) -> dict | None:
@@ -362,18 +346,7 @@ def _bmp_parse(data: bytes) -> dict | None:
 def decode_bmp(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL image decode: every payload must be a 24-bit
     uncompressed BMP (raises otherwise — strict by construction)."""
-
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for m, d in zip(pdf["media_id"], pdf["data"]):
-                got = _bmp_parse(bytes(d))
-                if got is None:
-                    raise ValueError(f"media_id {m}: payload is not BMP24")
-                rows.append({"media_id": m, **got})
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_iter, schema=BMP_DECODED_SCHEMA)
+    return _strict_decode(media, _bmp_parse, BMP_DECODED_SCHEMA, "BMP24")
 
 
 # --------------------------------------------------------------- AVI video
@@ -408,62 +381,57 @@ def avi_from_docs(docs: DataFrame) -> DataFrame:
     pixel rule :func:`_avi_px` with seed = first 8 hex digits of
     md5('avi-' || id)."""
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
         import struct
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 4 + did % 9
-                h = 2 + did % 4
-                nf = 2 + did % 5
-                rate, scale = 10 + did % 20, 1
-                seed = int(
-                    hashlib.md5(f"avi-{did}".encode()).hexdigest()[:8], 16
-                )
-                pad = (4 - (3 * w) % 4) % 4
-                stride = 3 * w + pad
-                frames = bytearray()
-                for f in range(nf):
-                    body = bytearray()
-                    for y in range(h - 1, -1, -1):  # bottom-up storage
-                        for x in range(w):
-                            body += bytes(
-                                (
-                                    _avi_px(seed, f, x, y, 2),  # B on disk
-                                    _avi_px(seed, f, x, y, 1),
-                                    _avi_px(seed, f, x, y, 0),
-                                )
+        for row in rows:
+            did = row["doc_id"]
+            w = 4 + did % 9
+            h = 2 + did % 4
+            nf = 2 + did % 5
+            rate, scale = 10 + did % 20, 1
+            seed = int(
+                hashlib.md5(f"avi-{did}".encode()).hexdigest()[:8], 16
+            )
+            pad = (4 - (3 * w) % 4) % 4
+            stride = 3 * w + pad
+            frames = bytearray()
+            for f in range(nf):
+                body = bytearray()
+                for y in range(h - 1, -1, -1):  # bottom-up storage
+                    for x in range(w):
+                        body += bytes(
+                            (
+                                _avi_px(seed, f, x, y, 2),  # B on disk
+                                _avi_px(seed, f, x, y, 1),
+                                _avi_px(seed, f, x, y, 0),
                             )
-                        body += b"\x00" * pad
-                    frames += b"00db" + struct.pack("<I", len(body)) + body
-                movi = b"LIST" + struct.pack("<I", 4 + len(frames)) + b"movi" + frames
-                strf = b"strf" + struct.pack("<I", 40) + struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * stride, 0, 0, 0, 0
-                )
-                strh = b"strh" + struct.pack("<I", 56) + struct.pack(
-                    "<4s4sIHHIIIIIIII4H",
-                    b"vids", b"DIB ", 0, 0, 0, 0,
-                    scale, rate, 0, nf, h * stride + 8, 0, 0,
-                    0, 0, w, h,
-                )
-                strl = b"LIST" + struct.pack("<I", 4 + len(strh) + len(strf)) + b"strl" + strh + strf
-                avih = b"avih" + struct.pack("<I", 56) + struct.pack(
-                    "<14I",
-                    1_000_000 * scale // rate, 0, 0, 0, nf, 0, 1,
-                    h * stride + 8, w, h, 0, 0, 0, 0,
-                )
-                hdrl = b"LIST" + struct.pack("<I", 4 + len(avih) + len(strl)) + b"hdrl" + avih + strl
-                content = b"AVI " + hdrl + movi
-                data = b"RIFF" + struct.pack("<I", len(content)) + content
-                rows.append(
-                    {"media_id": did, "kind": "video",
-                     "data": bytes(data), "meta": {"codec": "avi-dib24"}}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "data", "meta"])
+                        )
+                    body += b"\x00" * pad
+                frames += b"00db" + struct.pack("<I", len(body)) + body
+            movi = b"LIST" + struct.pack("<I", 4 + len(frames)) + b"movi" + frames
+            strf = b"strf" + struct.pack("<I", 40) + struct.pack(
+                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * stride, 0, 0, 0, 0
+            )
+            strh = b"strh" + struct.pack("<I", 56) + struct.pack(
+                "<4s4sIHHIIIIIIII4H",
+                b"vids", b"DIB ", 0, 0, 0, 0,
+                scale, rate, 0, nf, h * stride + 8, 0, 0,
+                0, 0, w, h,
+            )
+            strl = b"LIST" + struct.pack("<I", 4 + len(strh) + len(strf)) + b"strl" + strh + strf
+            avih = b"avih" + struct.pack("<I", 56) + struct.pack(
+                "<14I",
+                1_000_000 * scale // rate, 0, 0, 0, nf, 0, 1,
+                h * stride + 8, w, h, 0, 0, 0, 0,
+            )
+            hdrl = b"LIST" + struct.pack("<I", 4 + len(avih) + len(strl)) + b"hdrl" + avih + strl
+            content = b"AVI " + hdrl + movi
+            data = b"RIFF" + struct.pack("<I", len(content)) + content
+            yield {"media_id": did, "kind": "video",
+                   "data": bytes(data), "meta": {"codec": "avi-dib24"}}
 
-    return docs.select("doc_id").mapInPandas(_iter, schema=MEDIA_SCHEMA)
+    return row_stage(docs.select("doc_id"), MEDIA_SCHEMA, _rows)
 
 
 def _avi_parse(data: bytes) -> dict | None:
@@ -559,18 +527,7 @@ def _avi_parse(data: bytes) -> dict | None:
 def decode_avi(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL video decode: every payload must be an
     uncompressed-DIB AVI (raises otherwise — strict by construction)."""
-
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for m, d in zip(pdf["media_id"], pdf["data"]):
-                got = _avi_parse(bytes(d))
-                if got is None:
-                    raise ValueError(f"media_id {m}: payload is not DIB AVI")
-                rows.append({"media_id": m, **got})
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_iter, schema=AVI_DECODED_SCHEMA)
+    return _strict_decode(media, _avi_parse, AVI_DECODED_SCHEMA, "DIB AVI")
 
 
 AVI_FRAMES_SCHEMA = (
@@ -586,7 +543,7 @@ def avi_frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
     header-arithmetic (each chunk's size field says where the next one
     starts), so a sampler touching 1-in-N frames does 1/N of the pixel
     work — the property that makes frame sampling affordable on
-    petabyte video corpora.  One-to-many ``mapInPandas`` (row explosion
+    petabyte video corpora.  One-to-many Arrow row stage (row explosion
     inside Arrow batches), no shuffle."""
     import struct
 
@@ -622,36 +579,27 @@ def avi_frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
             raise ValueError("AVI payload missing hdrl or frames")
         return w, h, out
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for m, d in zip(pdf["media_id"], pdf["data"]):
-                data = bytes(d)
-                w, h, frames = _frames(data)
-                pad = (4 - (3 * w) % 4) % 4
-                stride = 3 * w + pad
-                for idx, off, sz in frames:
-                    if idx % every_n:
-                        continue  # the skipped frame's pixels are never read
-                    sums = [0, 0, 0]
-                    for y in range(h):
-                        ro = off + (h - 1 - y) * stride
-                        for x in range(w):
-                            b, g, r = data[ro + 3 * x : ro + 3 * x + 3]
-                            sums[0] += r
-                            sums[1] += g
-                            sums[2] += b
-                    r0o = off + (h - 1) * stride
-                    b0, g0, r0 = data[r0o : r0o + 3]
-                    rows.append(
-                        {"media_id": m, "frame_index": idx,
-                         "sum_r": sums[0], "sum_g": sums[1], "sum_b": sums[2],
-                         "corner_rgb": (r0 << 16) | (g0 << 8) | b0}
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_index", "sum_r", "sum_g",
-                         "sum_b", "corner_rgb"],
-            )
+    def _rows(rows: Iterator[dict]) -> Iterator[dict]:
+        for row in rows:
+            data = row["data"]
+            w, h, frames = _frames(data)
+            pad = (4 - (3 * w) % 4) % 4
+            stride = 3 * w + pad
+            for idx, off, sz in frames:
+                if idx % every_n:
+                    continue  # the skipped frame's pixels are never read
+                sums = [0, 0, 0]
+                for y in range(h):
+                    ro = off + (h - 1 - y) * stride
+                    for x in range(w):
+                        b, g, r = data[ro + 3 * x : ro + 3 * x + 3]
+                        sums[0] += r
+                        sums[1] += g
+                        sums[2] += b
+                r0o = off + (h - 1) * stride
+                b0, g0, r0 = data[r0o : r0o + 3]
+                yield {"media_id": row["media_id"], "frame_index": idx,
+                       "sum_r": sums[0], "sum_g": sums[1], "sum_b": sums[2],
+                       "corner_rgb": (r0 << 16) | (g0 << 8) | b0}
 
-    return media.mapInPandas(_iter, schema=AVI_FRAMES_SCHEMA)
+    return row_stage(media.select("media_id", "data"), AVI_FRAMES_SCHEMA, _rows)

@@ -41,8 +41,8 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 from datetime import datetime, timedelta
+from typing import TYPE_CHECKING
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
@@ -51,6 +51,9 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..schema import PARSED_FIELDS
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # The Fastly syslog line format (documented at reference README.md:235-243):
 # <priority>timestamp cache-server process[pid]: IP "-" "-" date
@@ -213,7 +216,10 @@ def parse_lines(
 def parse_lines_pdf(lines: pd.Series) -> pd.DataFrame:
     """:func:`parse_lines` as a pandas frame on ``lines``' index, blank rows
     kept with ``_keep`` False (tests and the benchmark's tally check):
-    nullable Int32/Int64 integers, naive UTC timestamps, dict params."""
+    nullable Int32/Int64 integers, naive UTC timestamps, dict params.
+    pandas is imported here only: the parse stage itself never needs it."""
+    import pandas as pd
+
     s = lines.astype("string")
     cols, keep = parse_lines(s.astype(object).where(s.notna(), None).tolist())
     out = pa.table(cols).to_pandas(
@@ -283,12 +289,16 @@ def parse_log_line(line: str) -> dict | None:
     Returns a dict shaped like the reference's ``parse_log_line`` output:
     absent fields are missing keys, except explicit-None cases.
     """
+    import pandas as pd
+
     return row_record(parse_lines_pdf(pd.Series([line])).iloc[0])
 
 
 def row_record(row: pd.Series) -> dict | None:
     """One ``parse_lines_pdf`` row in :func:`parse_log_line`'s shape (None
     for a dropped blank line)."""
+    import pandas as pd
+
     if not bool(row["_keep"]):
         return None
     out = {}

@@ -19,7 +19,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.arrow import numpy_stage
+from ..functions.arrow import collect_columns, numpy_stage
 from ..functions.columns import round_half_away
 
 
@@ -325,11 +325,10 @@ def _emb_broadcast(emb: DataFrame, id_col: str):
     Dimension-table sized inputs only (guarded by the caller)."""
     import numpy as np
 
-    pdf = emb.select(id_col, "embedding").toPandas()
-    ids = pdf[id_col].to_numpy(np.int64)
-    order = np.argsort(ids)
-    ids = ids[order]
-    mat = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
+    cols = collect_columns(emb.select(id_col, "embedding"))
+    order = np.argsort(cols[id_col])
+    ids = cols[id_col][order]
+    mat = cols["embedding"][order].astype(np.float64)
     norms = np.sqrt(_dot_left(mat, mat))
     return emb.sparkSession.sparkContext.broadcast((ids, mat, norms))
 
@@ -539,13 +538,8 @@ def ivf_assign(
 
     from ..plans.partitioning import spread
 
-    cpdf = (
-        emb.filter(F.col(id_col) < n_cells)
-        .select(id_col, "embedding")
-        .toPandas()
-        .sort_values(id_col)
-    )
-    C = np.stack(cpdf["embedding"].to_numpy()).astype(np.float64)
+    cents = collect_columns(emb.filter(F.col(id_col) < n_cells).select(id_col, "embedding"))
+    C = cents["embedding"][np.argsort(cents[id_col])].astype(np.float64)
     cnorm = np.sqrt(_dot_left(C, C))
 
     def _assign(cols):
@@ -1230,12 +1224,8 @@ def pq_codes(
     import numpy as np
 
     sw = dim // n_subs
-    cents_pdf = (
-        pq_centroids(emb, n_cents, id_col).orderBy("cent_id").toPandas()
-    )
-    c = np.stack(cents_pdf["_ce"].to_numpy()).astype(np.float64).reshape(
-        n_cents, n_subs, sw
-    )
+    cents = collect_columns(pq_centroids(emb, n_cents, id_col).orderBy("cent_id"))
+    c = cents["_ce"].astype(np.float64).reshape(n_cents, n_subs, sw)
     bc = emb.sparkSession.sparkContext.broadcast(c)
 
     def _codes(cols):

@@ -139,15 +139,14 @@ def kmv_bottom_k(hashes: DataFrame, k: int) -> DataFrame:
 
     def gen(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         state = np.empty(0, dtype=np.int64)
-        for pdf in batches:
-            hs = pdf["h"].to_numpy(dtype="int64")
-            state = np.unique(np.concatenate([state, hs]))[:k]
-        yield pd.DataFrame({"h": state})
+        for batch in batches:
+            state = np.unique(np.concatenate([state, batch.column("h").to_numpy()]))[:k]
+        yield pa.RecordBatch.from_arrays([pa.array(state)], names=["h"])
 
-    partials = hashes.select("h").mapInPandas(gen, "h long")
+    partials = hashes.select("h").mapInArrow(gen, "h long")
     return partials.distinct().orderBy("h").limit(k)
 
 
@@ -220,26 +219,24 @@ def kmv_bottom_k_sides(hashes: DataFrame, k: int) -> DataFrame:
 
     def gen(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         sa = np.empty(0, dtype=np.int64)
         sb = np.empty(0, dtype=np.int64)
-        for pdf in batches:
-            hs = pdf["h"].to_numpy(dtype="int64")
-            ina = pdf["in_a"].to_numpy(dtype=bool)
-            inb = pdf["in_b"].to_numpy(dtype=bool)
+        for batch in batches:
+            hs = batch.column("h").to_numpy()
+            ina = batch.column("in_a").to_numpy(zero_copy_only=False).astype(bool)
+            inb = batch.column("in_b").to_numpy(zero_copy_only=False).astype(bool)
             sa = np.unique(np.concatenate([sa, hs[ina]]))[:k]
             sb = np.unique(np.concatenate([sb, hs[inb]]))[:k]
-        yield pd.DataFrame(
-            {
-                "side": ["a"] * len(sa) + ["b"] * len(sb),
-                "h": np.concatenate([sa, sb]),
-            }
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(["a"] * len(sa) + ["b"] * len(sb)), pa.array(np.concatenate([sa, sb]))],
+            names=["side", "h"],
         )
 
     from pyspark.sql import Window
 
-    partials = hashes.select("h", "in_a", "in_b").mapInPandas(
+    partials = hashes.select("h", "in_a", "in_b").mapInArrow(
         gen, "side string, h long"
     )
     w = Window.partitionBy("side").orderBy("h")

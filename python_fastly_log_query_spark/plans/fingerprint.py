@@ -52,7 +52,7 @@ _TOKENS = (
     ("hash_aggregates", "HashAggregate"),
 )
 _PYTHON_TOKENS = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "FlatMapGroupsInPandas",
-                  "FlatMapCoGroupsInPandas", "BatchEvalPython")
+                  "FlatMapGroupsInArrow", "FlatMapCoGroupsInPandas", "BatchEvalPython")
 
 
 def plan_string(df: DataFrame) -> str:

@@ -959,21 +959,12 @@ SELECT vec_id, round(c, 4) AS cosine FROM sims ORDER BY c DESC, vec_id ASC LIMIT
 """,
 )
 def q_embedding_topk_cosine(spark, sf):
+    from .operators.similarity import cosine
+
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     joined = emb.crossJoin(F.broadcast(qv))
-    c = dot(F.col("embedding"), F.col("qe")) / (
-        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(dot(F.col("qe"), F.col("qe")))
-    )
+    c = cosine(F.col("embedding"), F.col("qe"))
     return (
         joined.select("vec_id", c.alias("c"))
         .orderBy(F.desc("c"), F.asc("vec_id"))
@@ -7592,24 +7583,15 @@ def q_hybrid_rrf_topk(spark, sf):
     already-rounded, bit-equal-by-contract output scores, ties by id —
     so the fused integer scores are engine-exact."""
     from .operators.corpus import bm25_topk, rrf_fuse
+    from .operators.similarity import cosine
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     bm_a = bm25_topk(docs, _RRF_TERMS_A, k=20)
     bm_b = bm25_topk(docs, _RRF_TERMS_B, k=20)
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    c = dot(F.col("embedding"), F.col("qe")) / (
-        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(dot(F.col("qe"), F.col("qe")))
-    )
+    c = cosine(F.col("embedding"), F.col("qe"))
     cos = (
         emb.crossJoin(F.broadcast(qv))
         .select(F.col("vec_id").alias("doc_id"), c.alias("_c"))
@@ -8063,7 +8045,7 @@ def q_avi_decode_meta(spark, sf):
     exact chunk framing via the closed-form container size.  The
     oracle recomputes every fact from the deterministic synthesis
     rule, verifying encoder→decoder end to end.  Map-only
-    ``mapInPandas`` both ways — at 10^12 docs this is one scan, no
+    Arrow row stages both ways — at 10^12 docs this is one scan, no
     shuffle, bytes staying in Arrow buffers."""
     from .operators.multimodal import avi_from_docs, decode_avi
 

@@ -61,7 +61,7 @@ def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         #   are multi-MB allocations; with default G1 region sizing those go
         #   down the humongous-object path, whose allocation lock serializes
         #   executor threads (measured: 26s -> 2s for an identity
-        #   mapInPandas over 4M wide rows at local[32]).
+        #   Python map stage over 4M wide rows at local[32]).
         # - -Xms == -Xmx: pre-size the heap so early jobs don't pay
         #   repeated grow-the-heap GC cycles (a 2-3x slow first minute).
         #   Both default to 40% of the host's MemTotal.

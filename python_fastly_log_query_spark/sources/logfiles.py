@@ -32,7 +32,7 @@ import glob
 import os
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,18 +75,22 @@ def read_log_lines(
     split = ["source_file", "_block"]
     df = df.withColumn("_block", F.col("_metadata.file_block_start"))
 
-    def _number(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _number(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # running counter per split: a split's lines are contiguous and in
-        # file order within its partition (gzip files are one split)
+        # file order within its partition (gzip files are one split); only
+        # the split key becomes Python values, the text passes through
         counts: dict[tuple[str, int], int] = {}
-        for pdf in batches:
+        for batch in batches:
             nums = []
-            for key in zip(pdf["source_file"], pdf["_block"]):
+            for key in zip(*(batch.column(c).to_pylist() for c in split)):
                 counts[key] = counts.get(key, 0) + 1
                 nums.append(counts[key])
-            yield pdf.assign(_n=pd.Series(nums, index=pdf.index, dtype="int64"))
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(nums, pa.int64())],
+                names=[*batch.schema.names, "_n"],
+            )
 
-    numbered = df.mapInPandas(
+    numbered = df.mapInArrow(
         _number, schema="text string, source_file string, _block long, _n long"
     )
     # lines in the file's earlier splits: one row per split, broadcast back

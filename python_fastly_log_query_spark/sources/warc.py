@@ -16,9 +16,10 @@ Layout follows Common Crawl's convention exactly:
 - **The unit of Spark parallelism is the FILE** (Common Crawl ships
   ~1 GB files; one task each).  ``read_warc`` goes through the
   ``binaryFile`` data source — each file is one row, one task, and the
-  record splitter runs inside a single Arrow-batched ``mapInPandas``
-  stage.  At 100 TB that is ~100k files across the cluster with zero
-  shuffle; everything downstream of the splitter is columnar.
+  record splitter runs inside a single Arrow row stage
+  (``functions.arrow.row_stage``).  At 100 TB that is ~100k files across
+  the cluster with zero shuffle; everything downstream of the splitter is
+  columnar.
 - **Record framing is Content-Length-driven, never scanned**: the
   splitter reads the header block (terminated by CRLFCRLF), takes
   ``Content-Length`` from it, and slices exactly that many payload
@@ -36,14 +37,17 @@ No third-party dependency: stdlib ``gzip``/``zlib`` only.
 from __future__ import annotations
 
 import gzip
+import hashlib
 import io
 import os
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..functions.arrow import row_stage
 
 __all__ = [
     "WARC_SCHEMA",
@@ -94,6 +98,29 @@ def _record_bytes(url: str, payload: bytes, rec_id: str, date: str) -> bytes:
     return hdr + payload + _HDR_END
 
 
+def _write_file(group: pa.Table, path: str, gzip_members: bool) -> tuple[int, pa.Table]:
+    """One writer task's file: the group's ``(file_id, seq, url, payload)``
+    rows encoded in ``seq`` order and written under ``path``.  Returns the
+    file's size and its CDX index (``CDX_SCHEMA``, one row per record)."""
+    group = group.sort_by("seq")
+    fid = group.column("file_id")[0].as_py()
+    fname = f"part-{fid:05d}.warc" + (".gz" if gzip_members else "")
+    out = io.BytesIO()
+    cdx: dict[str, list] = {c: [] for c in ("url", "seq", "file", "offset", "length")}
+    for seq, url, payload in zip(
+        *(group.column(c).to_pylist() for c in ("seq", "url", "payload"))
+    ):
+        rec_id = hashlib.md5(f"warc-{seq}".encode()).hexdigest()
+        rec = _record_bytes(str(url), payload, rec_id, _FIXED_DATE)
+        member = gzip.compress(rec, 6, mtime=0) if gzip_members else rec
+        for c, v in zip(cdx, (str(url), seq, fname, out.tell(), len(member))):
+            cdx[c].append(v)
+        out.write(member)
+    with open(os.path.join(path, fname), "wb") as f:
+        f.write(out.getvalue())
+    return out.tell(), pa.table(cdx)
+
+
 def write_warc(
     records: DataFrame,
     path: str,
@@ -107,7 +134,7 @@ def write_warc(
     File assignment is ``seq % n_files`` and records are laid out in
     ``seq`` order within a file, so the output is a pure function of the
     input frame (byte-identical across partitionings — the repo's
-    determinism discipline).  The writer is one ``applyInPandas`` over
+    determinism discipline).  The writer is one ``applyInArrow`` over
     ``groupBy(file_id)``: each task encodes and writes ITS file; nothing
     rides through the driver except the ``n_files``-row summary, which
     is returned (the eager action that materializes the files).
@@ -118,35 +145,17 @@ def write_warc(
     """
     os.makedirs(path, exist_ok=True)
 
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        pdf = pdf.sort_values("seq")
-        fid = int(pdf["file_id"].iloc[0])
-        fname = f"part-{fid:05d}.warc" + (".gz" if gzip_members else "")
-        out = io.BytesIO()
-        for seq, url, payload in zip(pdf["seq"], pdf["url"], pdf["payload"]):
-            payload = bytes(payload)
-            rec_id = hashlib.md5(f"warc-{int(seq)}".encode()).hexdigest()
-            rec = _record_bytes(str(url), payload, rec_id, _FIXED_DATE)
-            out.write(gzip.compress(rec, 6, mtime=0) if gzip_members else rec)
-        blob = out.getvalue()
-        with open(os.path.join(path, fname), "wb") as f:
-            f.write(blob)
-        return pd.DataFrame(
-            {
-                "file": [fname],
-                "n_records": [len(pdf)],
-                "n_bytes": [len(blob)],
-            }
+    def _write(group: pa.Table) -> pa.Table:
+        n_bytes, cdx = _write_file(group, path, gzip_members)
+        return pa.table(
+            {"file": cdx.column("file")[:1], "n_records": [cdx.num_rows], "n_bytes": [n_bytes]}
         )
 
     plan = (
-        records.withColumn(
-            "file_id", (F.col("seq") % n_files).cast("long")
-        )
+        records.withColumn("file_id", (F.col("seq") % n_files).cast("long"))
+        .select("file_id", "seq", "url", "payload")
         .groupBy("file_id")
-        .applyInPandas(_write, "file string, n_records long, n_bytes long")
+        .applyInArrow(_write, "file string, n_records long, n_bytes long")
     )
     return plan.collect()  # n_files rows — the eager write action
 
@@ -173,40 +182,20 @@ def write_warc_indexed(
 
     Scale: the index is ~60 B/doc (10^12 docs → ~60 TB archive keys in
     a few-TB parquet table, itself partition-prunable by file); the
-    write plan is the same one-task-per-file ``applyInPandas`` as
+    write plan is the same one-task-per-file ``applyInArrow`` as
     ``write_warc``, with the index rows riding out as the task's output
     instead of a 1-row summary.
     """
     os.makedirs(path, exist_ok=True)
 
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        pdf = pdf.sort_values("seq")
-        fid = int(pdf["file_id"].iloc[0])
-        fname = f"part-{fid:05d}.warc.gz"
-        out = io.BytesIO()
-        idx = []
-        for seq, url, payload in zip(pdf["seq"], pdf["url"], pdf["payload"]):
-            payload = bytes(payload)
-            rec_id = hashlib.md5(f"warc-{int(seq)}".encode()).hexdigest()
-            member = gzip.compress(
-                _record_bytes(str(url), payload, rec_id, _FIXED_DATE),
-                6,
-                mtime=0,
-            )
-            idx.append((str(url), int(seq), fname, out.tell(), len(member)))
-            out.write(member)
-        with open(os.path.join(path, fname), "wb") as f:
-            f.write(out.getvalue())
-        return pd.DataFrame(
-            idx, columns=["url", "seq", "file", "offset", "length"]
-        )
+    def _write(group: pa.Table) -> pa.Table:
+        return _write_file(group, path, gzip_members=True)[1]
 
     (
         records.withColumn("file_id", (F.col("seq") % n_files).cast("long"))
+        .select("file_id", "seq", "url", "payload")
         .groupBy("file_id")
-        .applyInPandas(_write, CDX_SCHEMA)
+        .applyInArrow(_write, CDX_SCHEMA)
         .write.mode("overwrite")
         .parquet(index_path)  # materializing the index IS the write action
     )
@@ -232,16 +221,16 @@ def fetch_warc_records(
     Returns ``(url, seq, content_length, payload)``.
     """
 
-    def _fetch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset")  # one forward pass per file
-        fname = os.path.join(warc_path, str(pdf["file"].iloc[0]))
+    def _fetch(group: pa.Table) -> pa.Table:
+        group = group.sort_by("offset")  # one forward pass per file
+        fname = os.path.join(warc_path, str(group.column("file")[0].as_py()))
         rows = []
         with open(fname, "rb") as f:
             for url, seq, off, ln in zip(
-                pdf["url"], pdf["seq"], pdf["offset"], pdf["length"]
+                *(group.column(c).to_pylist() for c in ("url", "seq", "offset", "length"))
             ):
-                f.seek(int(off))
-                member = f.read(int(ln))
+                f.seek(off)
+                member = f.read(ln)
                 data = (
                     gzip.decompress(member)
                     if member[:2] == _GZIP_MAGIC
@@ -254,15 +243,16 @@ def fetch_warc_records(
                         f"{len(recs)} records, expected exactly 1"
                     )
                 hdr, payload = recs[0]
-                rows.append((str(url), int(seq), len(payload), payload))
-        return pd.DataFrame(
-            rows, columns=["url", "seq", "content_length", "payload"]
-        )
+                rows.append(
+                    {"url": str(url), "seq": seq, "content_length": len(payload),
+                     "payload": payload}
+                )
+        return pa.Table.from_pylist(rows)
 
     return (
         index.select("url", "seq", "file", "offset", "length")
         .groupBy("file")
-        .applyInPandas(
+        .applyInArrow(
             _fetch, "url string, seq long, content_length long, payload binary"
         )
     )
@@ -336,7 +326,7 @@ def read_warc(
     record frame (``WARC_SCHEMA``).
 
     Plan: ``binaryFile`` scan (one row/task per file — Common Crawl's
-    own parallelism unit) -> ONE ``mapInPandas`` splitter stage.  No
+    own parallelism unit) -> ONE Arrow row stage as the splitter.  No
     shuffle; lineage columns ``(file, rec_index)`` identify every
     record's provenance the way the log source's ``(file, line)`` pair
     does.  Gzip detection is per-file by magic bytes, so mixed
@@ -344,33 +334,22 @@ def read_warc(
     """
     raw = spark.read.format("binaryFile").load(path).select("path", "content")
 
-    def _split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "file", "rec_index", "warc_type", "record_id", "warc_date",
-            "url", "content_type", "content_length", "payload",
-        ]
-        for pdf in batches:
-            rows = []
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                if data[:2] == _GZIP_MAGIC:
-                    data = _gunzip_members(data)
-                for i, (hdr, payload) in enumerate(
-                    _iter_records(data, strict)
-                ):
-                    rows.append(
-                        (
-                            fpath,
-                            i,
-                            hdr.get("warc-type"),
-                            hdr.get("warc-record-id"),
-                            hdr.get("warc-date"),
-                            hdr.get("warc-target-uri"),
-                            hdr.get("content-type"),
-                            len(payload),
-                            payload,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _split(files: Iterator[dict]) -> Iterator[dict]:
+        for row in files:
+            data = row["content"]
+            if data[:2] == _GZIP_MAGIC:
+                data = _gunzip_members(data)
+            for i, (hdr, payload) in enumerate(_iter_records(data, strict)):
+                yield {
+                    "file": row["path"],
+                    "rec_index": i,
+                    "warc_type": hdr.get("warc-type"),
+                    "record_id": hdr.get("warc-record-id"),
+                    "warc_date": hdr.get("warc-date"),
+                    "url": hdr.get("warc-target-uri"),
+                    "content_type": hdr.get("content-type"),
+                    "content_length": len(payload),
+                    "payload": payload,
+                }
 
-    return raw.mapInPandas(_split, WARC_SCHEMA)
+    return row_stage(raw, WARC_SCHEMA, _split)

@@ -1,6 +1,7 @@
-"""The Arrow numpy stage (functions/arrow.py) and the per-source top-k
-kernel of ``exact_cosine_pairs``: column conversion rules, the keep-column
-cast, and parity of the numpy top-k with the pandas shape it replaced."""
+"""The Arrow stages (functions/arrow.py) and the per-source top-k kernel of
+``exact_cosine_pairs``: column conversion rules, the keep-column cast,
+the row stage's shapes and state, and parity of the numpy top-k with the
+pandas shape it replaced."""
 
 from __future__ import annotations
 
@@ -9,7 +10,12 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from python_fastly_log_query_spark.functions.arrow import column_values, numpy_stage
+from python_fastly_log_query_spark.functions.arrow import (
+    collect_columns,
+    column_values,
+    numpy_stage,
+    row_stage,
+)
 from python_fastly_log_query_spark.operators.similarity import _per_source_topk
 
 
@@ -95,3 +101,73 @@ def test_numpy_stage_raises_on_a_ragged_array_column(spark):
     out = numpy_stage(df, "s double", lambda cols: {"s": cols["embedding"].sum(1)})
     with pytest.raises(Exception, match="ValueError: array column 'embedding'"):
         out.collect()
+
+
+def test_row_stage_one_to_many_and_rows_with_no_output(spark):
+    def _explode(rows):
+        for row in rows:
+            for j in range(row["id"] % 3):  # ids 0, 3, 6 yield nothing
+                yield {"id": row["id"], "j": j}
+
+    out = row_stage(spark.range(8), "id long, j int", _explode)
+    got = sorted((r.id, r.j) for r in out.collect())
+    assert got == [(i, j) for i in range(8) for j in range(i % 3)]
+
+
+def test_row_stage_carries_state_across_a_partitions_batches(spark):
+    # 25,000 rows in one partition: three input batches and three output
+    # batches of at most 10,000 rows each
+    def _running(rows):
+        n = 0
+        for row in rows:
+            n += 1
+            yield {"id": row["id"], "n": n}
+
+    out = row_stage(spark.range(0, 25_000, numPartitions=1), "id long, n long", _running)
+    got = sorted((r.id, r.n) for r in out.collect())
+    assert got == [(i, i + 1) for i in range(25_000)]
+
+
+def test_row_stage_builds_binary_map_and_float_array_columns(spark):
+    def _typed(rows):
+        for row in rows:
+            i = row["id"]
+            yield {
+                "id": i,
+                "data": bytes([i, 255]),
+                "meta": {"k": str(i)},
+                "vec": [np.float32(0.1) * i, 0.5],
+            }
+        yield {"id": -1}  # missing keys are NULL
+
+    out = row_stage(
+        spark.range(0, 3, numPartitions=1),
+        "id long, data binary, meta map<string,string>, vec array<float>",
+        _typed,
+    )
+    assert dict(out.dtypes) == {
+        "id": "bigint", "data": "binary", "meta": "map<string,string>", "vec": "array<float>",
+    }
+    rows = {r.id: r for r in out.collect()}
+    assert rows[2].data == bytes([2, 255]) and rows[2].meta == {"k": "2"}
+    assert rows[2].vec == [float(np.float32(np.float32(0.1) * 2)), 0.5]
+    assert rows[-1].data is None and rows[-1].meta is None and rows[-1].vec is None
+
+
+def test_row_stage_runs_fn_on_an_empty_partition(spark):
+    def _count(rows):
+        yield {"n": sum(1 for _ in rows)}
+
+    out = row_stage(spark.range(0, 2, numPartitions=4), "n long", _count)
+    assert sorted(r.n for r in out.collect()) == [0, 0, 1, 1]
+    assert row_stage(spark.range(0), "id long", lambda rows: rows).collect() == []
+
+
+def test_collect_columns_gathers_matrices_and_ids(spark):
+    df = spark.createDataFrame(
+        [(2, [3.0, 4.0]), (1, [1.0, 2.0])], "vec_id long, embedding array<float>"
+    )
+    cols = collect_columns(df)
+    assert cols["vec_id"].tolist() == [2, 1]
+    assert cols["embedding"].shape == (2, 2) and cols["embedding"].dtype == np.float32
+    assert collect_columns(df.filter("vec_id > 5"))["embedding"].shape == (0, 0)

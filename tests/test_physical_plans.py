@@ -863,10 +863,10 @@ def test_kmv_partial_stage_before_any_exchange(spark):
 
     df = entrymod.queries()["kmv_shingle_overlap"](spark, SF_SMALL)
     plan = _plan(df)
-    # two MapInPandas folds (side A, side B), each upstream of its
+    # two MapInArrow folds (side A, side B), each upstream of its
     # distinct's exchange
-    assert plan.count("MapInPandas") >= 2
-    a = plan.find("MapInPandas")
+    assert plan.count("MapInArrow") >= 2
+    a = plan.find("MapInArrow")
     assert a != -1 and "Exchange" in plan  # folds exist; merge exchanges tiny
 
 

@@ -40,7 +40,6 @@ ALLOWED = {
     "operators/aggregates.py:total_requests": "used by tests/report_reference.py",
     "operators/sketch.py:kmv_bottom_k": _KMV_REF,
     "operators/sketch.py:kmv_overlap": _KMV_REF,
-    "operators/similarity.py:cosine": "brute-force pair cosine the similarity plan tests project",
     "datagen.py:generate_docs": _DOCS_FIXTURE,
     "datagen.py:_h": _DOCS_FIXTURE,
     "datagen.py:_pick": _DOCS_FIXTURE,

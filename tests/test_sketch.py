@@ -165,23 +165,21 @@ def test_kmv_partition_state_bounded(spark):
         .alias("h")
     ).repartition(8)
     plan = kmv_bottom_k(df, 64)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     # replicate the partial stage and count its per-partition output
     from pyspark.sql.functions import spark_partition_id
 
     def fold(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         state = np.empty(0, dtype=np.int64)
-        for pdf in batches:
-            state = np.unique(
-                np.concatenate([state, pdf["h"].to_numpy(dtype="int64")])
-            )[:64]
-        yield pd.DataFrame({"h": state})
+        for batch in batches:
+            state = np.unique(np.concatenate([state, batch.column("h").to_numpy()]))[:64]
+        yield pa.RecordBatch.from_arrays([pa.array(state)], names=["h"])
 
     per_part = (
-        df.select("h").mapInPandas(fold, "h long")
+        df.select("h").mapInArrow(fold, "h long")
         .groupBy(spark_partition_id().alias("p"))
         .count()
         .agg(F.max("count").alias("m"))
