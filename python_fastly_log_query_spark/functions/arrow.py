@@ -119,11 +119,6 @@ def numpy_stage(
     return df.mapInArrow(_iter, schema=out_schema)
 
 
-# rows per output batch of :func:`row_stage` (the session's
-# ``spark.sql.execution.arrow.maxRecordsPerBatch``)
-_ROWS_PER_BATCH = 10_000
-
-
 def row_stage(
     df: DataFrame,
     schema: str,
@@ -134,16 +129,29 @@ def row_stage(
 
     ``fn`` takes the partition's rows as an iterator of ``{column: value}``
     dicts (Arrow's Python values: ``bytes`` for binary, ``int`` for long)
-    and yields output rows as dicts; it may yield any number of rows per
-    input row and may keep state across the whole partition.  A missing
-    key is NULL.  Output rows are built into batches of the declared
-    Arrow types, :data:`_ROWS_PER_BATCH` rows at a time.
+    and yields output rows as dicts with exactly the schema's fields
+    (``ValueError`` otherwise); it may yield any number of rows per input
+    row and may keep state across the whole partition.  Output rows are
+    built into batches of the declared Arrow types, at most the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows each.
     """
     out_schema, arrow_schema = _schemas(schema)
+    fields = set(arrow_schema.names)
+    rows_per_batch = int(
+        df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
 
     def _iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rows = iter(fn(row for batch in batches for row in batch.to_pylist()))
-        while chunk := list(islice(rows, _ROWS_PER_BATCH)):
+        while chunk := list(islice(rows, rows_per_batch)):
+            # from_pylist drops a key outside the schema and reads a
+            # missing one as NULL: a misspelt key would vanish silently
+            for row in chunk:
+                if row.keys() != fields:
+                    raise ValueError(
+                        f"row_stage: row keys {sorted(row)} are not the "
+                        f"schema's fields {arrow_schema.names}"
+                    )
             yield pa.RecordBatch.from_pylist(chunk, schema=arrow_schema)
 
     return df.mapInArrow(_iter, schema=out_schema)

@@ -466,7 +466,8 @@ def simhash_docs(docs: DataFrame, bits: int = 16, ngram: int = 1) -> DataFrame:
         n_toks = np.fromiter(map(len, toks), np.int64, len(toks))
         # reduceat reads an empty segment as its next row's first token;
         # split and word_shingles never return an empty array
-        assert n_toks.all(), "simhash_docs: a document with no features"
+        if not n_toks.all():
+            raise ValueError("simhash_docs: a document with no features")
         # every digest has one width: the batch's tokens as one byte matrix
         dig = np.frombuffer(
             "".join(itertools.chain.from_iterable(toks)).encode(), dtype=np.uint8

@@ -138,7 +138,6 @@ def test_row_stage_builds_binary_map_and_float_array_columns(spark):
                 "meta": {"k": str(i)},
                 "vec": [np.float32(0.1) * i, 0.5],
             }
-        yield {"id": -1}  # missing keys are NULL
 
     out = row_stage(
         spark.range(0, 3, numPartitions=1),
@@ -151,7 +150,16 @@ def test_row_stage_builds_binary_map_and_float_array_columns(spark):
     rows = {r.id: r for r in out.collect()}
     assert rows[2].data == bytes([2, 255]) and rows[2].meta == {"k": "2"}
     assert rows[2].vec == [float(np.float32(np.float32(0.1) * 2)), 0.5]
-    assert rows[-1].data is None and rows[-1].meta is None and rows[-1].vec is None
+    assert sorted(rows) == [0, 1, 2]
+
+
+@pytest.mark.parametrize(
+    "row", [{"id": 1}, {"id": 1, "n": 2, "extra": 3}, {"id": 1, "nn": 2}]
+)
+def test_row_stage_rejects_rows_whose_keys_are_not_the_schema(spark, row):
+    out = row_stage(spark.range(1), "id long, n long", lambda rows: (row for _ in rows))
+    with pytest.raises(Exception, match="ValueError: row_stage: row keys"):
+        out.collect()
 
 
 def test_row_stage_runs_fn_on_an_empty_partition(spark):
